@@ -122,10 +122,11 @@ def collect_all() -> Tuple[Dict[str, Callable[[SparkSession, str], DataFrame]], 
 
 
 def clear_shared_caches(spark) -> None:
-    """Drop every SESSION-SCOPED shared relation (the once-per-(session,
-    sf) materializations: dedup's __shingles__/__bands__/__cands__/
-    __spans__, textops' t13 lattice, and the cached embeddings table)
-    so the next query that needs one rebuilds it cold.
+    """Drop the session's DERIVED shared relations (session.memo entries
+    built without ``durable``: dedup's __shingles__/__bands__/__cands__/
+    __spans__, textops' t13 lattice, the q83/q85/d33 layout builds) and
+    the cached embeddings table, so the next query that needs one
+    rebuilds it cold.
 
     Purpose: honest benchmark accounting. bench.py runs best-of-N
     passes; without this, pass 2+ reads shared relations built in pass
@@ -133,25 +134,13 @@ def clear_shared_caches(spark) -> None:
     d19, ...) silently excludes its cold build (the r9 judge's
     "laundered minima" finding). Per-call localCheckpoint lattices
     (s20's IVF views, s26's __km_dims__) rebuild every call and need no
-    clearing. load_tables' view registry is deliberately kept — that is
-    one-time catalog state, not query work.
+    clearing. Durable entries are deliberately kept — load_tables'
+    DataFrames and views and the staged stream copies are one-time
+    setup, not query work.
     """
-    from . import dedup, relational, textops
+    from ..session import reset_derived
 
-    for store in (dedup._MATERIALIZED, textops._T13_MATERIALIZED):
-        for df in store.values():
-            try:
-                # localCheckpoint-backed: free the materialized blocks
-                df.rdd.unpersist()
-            except Exception:
-                pass  # best effort — clearing the memo is what matters
-        store.clear()
-    # shared bucketed-layout memos (q83/q84/q89's lineitem layout,
-    # d33/st28's band index): clearing forces the next consumer to
-    # rebuild the table cold, so every bench pass charges each layout
-    # build exactly once, to its first consumer
-    dedup._LAYOUT_TABLES.clear()
-    relational._LAYOUT_TABLES.clear()
+    reset_derived(spark)
     try:
         spark.catalog.clearCache()  # drops cached_embeddings' table cache
     except Exception:

@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sqlfront.ranking import versioned_dedup  # re-export for q06  # noqa: F401
-from .tables import load_tables
+from ..session import memo
+from .tables import load_tables, table_path
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
@@ -142,19 +143,28 @@ _BAND_JOIN = " AND ".join(
     ["a.band_id = b.band_id"] + [f"a.k{r} = b.k{r}" for r in range(_ROWS_PER_BAND)]
 )
 
-#: (session id, sf_dir, name) -> materialized DataFrame. Materialized
-#: via localCheckpoint, NOT cache(): a temp view over a checkpointed
-#: DataFrame resolves to a LogicalRDD, so every reference — including
-#: both sides of the LSH self-join and repeated queries after view
-#: re-registration — reads the computed blocks by construction.
-#: cache() relies on CacheManager plan matching, which was observed to
-#: silently miss after load_tables re-registers the source views
-#: (the signature aggregation then re-executed per join side).
-_MATERIALIZED: Dict[tuple, DataFrame] = {}
+# The shared near-dup relations below are session memos keyed by the
+# documents file's fingerprint (session.memo). Materialized via
+# localCheckpoint, NOT cache(): a temp view over a checkpointed
+# DataFrame resolves to a LogicalRDD, so every reference — including
+# both sides of the LSH self-join and repeated queries after view
+# re-registration — reads the computed blocks by construction.
+# cache() relies on CacheManager plan matching, which was observed to
+# silently miss after load_tables re-registers the source views
+# (the signature aggregation then re-executed per join side).
+
+
+def _docs_memo(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
+    """The session's ``name`` relation over sf_dir's documents,
+    materialized once by ``build`` and (re-)registered as the view
+    ``__<name>__`` — another sf_dir may have claimed the view name."""
+    df = memo(spark, name, [table_path(sf_dir, "documents")], build)
+    df.createOrReplaceTempView(f"__{name}__")
+    return df
 
 
 def cached_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialize the shingle table ONCE per (session, sf). The CTE
+    """Materialize the shingle table ONCE per session and corpus. The CTE
     chains below reference `shingles` several times; inline expansion
     would re-scan + re-split the documents table per reference (12
     scans observed in the composed d03 plan). At cluster scale this is
@@ -167,18 +177,14 @@ def cached_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     core, 2.0s of a 2.7s query). Partitioning by doc_id also pre-aligns
     the per-doc groupBys and the candidate-to-shingle joins, which all
     key on doc_id."""
-    key = (id(spark), sf_dir, "shingles")
-    df = _MATERIALIZED.get(key)
-    if df is None:
-        df = (
-            spark.sql(SPARK_SHINGLES)
-            .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-            .localCheckpoint()
-        )
-        _MATERIALIZED[key] = df
-    # (re-)register: another sf_dir may have claimed the view name
-    df.createOrReplaceTempView("__shingles__")
-    return df
+    return _docs_memo(
+        spark,
+        sf_dir,
+        "shingles",
+        lambda: spark.sql(SPARK_SHINGLES)
+        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        .localCheckpoint(),
+    )
 
 
 def _bands_from_shingles_sql(shingles_sql: str) -> str:
@@ -201,20 +207,16 @@ _SPARK_BANDS_SQL = _bands_from_shingles_sql("SELECT doc_id, sh FROM __shingles__
 
 
 def cached_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialize the LSH band table ONCE per (session, sf) (tiny:
+    """Materialize the LSH band table ONCE per session and corpus (tiny:
     docs x bands rows). The candidate self-join references `bands`
     twice, and Spark inlines CTEs — without materialization the whole
     shingle-scan + 16-min signature aggregation executes once per join
     side; at cluster scale this is the persisted signature/band table a
     production near-dup pipeline maintains."""
     cached_shingles(spark, sf_dir)
-    key = (id(spark), sf_dir, "bands")
-    df = _MATERIALIZED.get(key)
-    if df is None:
-        df = spark.sql(_SPARK_BANDS_SQL).localCheckpoint()
-        _MATERIALIZED[key] = df
-    df.createOrReplaceTempView("__bands__")
-    return df
+    return _docs_memo(
+        spark, sf_dir, "bands", lambda: spark.sql(_SPARK_BANDS_SQL).localCheckpoint()
+    )
 
 
 #: the raw banded self-join (d02's own query body — the one query whose
@@ -229,23 +231,22 @@ _SPARK_CANDS_JOIN = f"""
 
 
 def cached_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialize the banded LSH candidate PAIRS once per (session,
-    sf). Seven battery queries (d03, d11, d12, d14, d16, d18 directly;
+    """Materialize the banded LSH candidate PAIRS once per session and
+    corpus. Seven battery queries (d03, d11, d12, d14, d16, d18 directly;
     d17 transitively through its stage inputs) consume the
     identical cands relation and were each re-running the band
     self-join (~40% of d03's wall at sf0.1); at cluster scale this is
     the persisted candidate-pair table a production near-dup pipeline
     maintains alongside the signature/band table (cached_bands)."""
     cached_bands(spark, sf_dir)
-    key = (id(spark), sf_dir, "cands")
-    df = _MATERIALIZED.get(key)
-    if df is None:
-        df = spark.sql(
+    return _docs_memo(
+        spark,
+        sf_dir,
+        "cands",
+        lambda: spark.sql(
             f"WITH {_SPARK_CANDS_JOIN} SELECT doc_a, doc_b FROM cands"
-        ).localCheckpoint()
-        _MATERIALIZED[key] = df
-    df.createOrReplaceTempView("__cands__")
-    return df
+        ).localCheckpoint(),
+    )
 
 
 #: shared CTE chain `bands -> cands` (banded LSH candidate pairs), in
@@ -624,14 +625,9 @@ def cc_persist_pairs(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     dedup_ann_curation's release_report, guide §1.2 "don't compute
     things twice"). Pass the result to connected_components with
     ``pairs_persisted=True``."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
+    from ..session import scratch
 
-    workdir = tempfile.mkdtemp(prefix="ankaflow_cc_")
-    atexit.register(shutil.rmtree, workdir, True)
-    path = os.path.join(workdir, "pairs")
+    path = os.path.join(scratch("cc_"), "pairs")
     pairs.select("doc_a", "doc_b").write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
@@ -687,13 +683,9 @@ def connected_components(
     # no-stats labels regressed d10 by ~4s at sf0.1 through
     # SMJ-planned survivor joins). If the InternalRow rebuild API is
     # unavailable, every round falls back to the parquet path.
-    import atexit
-    import os
-    import shutil
-    import tempfile
+    from ..session import scratch
 
-    workdir = tempfile.mkdtemp(prefix="ankaflow_cc_")
-    atexit.register(shutil.rmtree, workdir, True)
+    workdir = scratch("cc_")
 
     def persist_reset(df: DataFrame, name: str) -> DataFrame:
         path = os.path.join(workdir, name)
@@ -1837,23 +1829,22 @@ def _span_ctes(spark_dialect: bool) -> str:
 
 def cached_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialize the maximal-duplicated-span table ONCE per
-    (session, sf) as `__spans__`. The rewrite query (d20) references
+    session and corpus as `__spans__`. The rewrite query (d20) references
     `spans` twice (inner gaps + the per-doc trailing-gap branch);
     inline CTE expansion would run the corpus-sized position chain
     per reference (measured 18.5s -> 7.6s at 10x-documents volume).
     Spans are one row per maximal span — the compact audit relation a
     production substring-dedup stage persists between detect and
     rewrite anyway (the paper's pipeline writes exactly this list)."""
-    key = (id(spark), sf_dir, "spans")
-    df = _MATERIALIZED.get(key)
-    if df is None:
-        df = spark.sql(
+    return _docs_memo(
+        spark,
+        sf_dir,
+        "spans",
+        lambda: spark.sql(
             f"WITH {_span_ctes(True)} "
             "SELECT doc_id, n_chars, span_start, span_end FROM spans"
-        ).localCheckpoint()
-        _MATERIALIZED[key] = df
-    df.createOrReplaceTempView("__spans__")
-    return df
+        ).localCheckpoint(),
+    )
 
 
 _SPANS_VIEW_CTE = "spans AS (SELECT * FROM __spans__)"
@@ -2425,16 +2416,11 @@ ORACLES["d26_bbit_minhash"] = _bbit_sql(False)
 # Reference parity: no counterpart (the reference delegates execution
 # to DuckDB); completes the d06/d12/d22/d23 cluster-quality family.
 # ---------------------------------------------------------------------------
-def _transitivity_sql(spark_dialect: bool) -> str:
-    if spark_dialect:
-        raise ValueError(
-            "_transitivity_sql(True) is retired: the Spark side runs the staged "
-            "spelling in d27() (r13 ADVICE: the one-string spark "
-            "branch was a dead, silently-drifting copy)"
-        )
-    ctes = SPARK_CAND_CTES if spark_dialect else DUCK_CAND_CTES
+def _transitivity_sql() -> str:
+    """d27's one-string DuckDB spelling (the oracle); the Spark side runs
+    the staged spelling in d27()."""
     return f"""
-    WITH {ctes},
+    WITH {DUCK_CAND_CTES},
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM shingles GROUP BY doc_id),
     common AS (
       SELECT c.doc_a, c.doc_b, COUNT(*) AS nc
@@ -2480,7 +2466,7 @@ def _transitivity_sql(spark_dialect: bool) -> str:
 
 
 def d27(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged spelling of _transitivity_sql(True) — guide §2.4 shared
+    """Staged Spark spelling of _transitivity_sql — guide §2.4 shared
     work: Spark inlines multiply-referenced CTEs, and d27's chain
     multiplies them combinatorially — classified -> wedges -> edges(x2)
     -> verified(x2 each) plus classified's own verified probe and the
@@ -2566,7 +2552,7 @@ def d27(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["d27_transitivity_audit"] = d27
-ORACLES["d27_transitivity_audit"] = _transitivity_sql(False)
+ORACLES["d27_transitivity_audit"] = _transitivity_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -2832,7 +2818,7 @@ def band_occupancy_inline_sql(table: str) -> str:
     (doc_id, text) — the stage-operator surface of d30: the SAME band
     chain as the graded family (delegates to _bands_from_shingles_sql,
     the single spelling), built inline instead of reading the
-    per-(session, sf) cached __bands__ view."""
+    session-memoized __bands__ view."""
     bucket_cols = "band_id, " + _BAND_VAL_COLS
     chain = f"""
       WITH allbands AS ({spark_bands_inline_sql(table)})
@@ -2961,7 +2947,7 @@ ORACLES["d31_cluster_size_audit"] = f"""
 # bands against it with ZERO Exchange on the corpus side — the only
 # shuffle in the probe join moves the BATCH (1 day of docs), never the
 # corpus (plan-gated: exactly one band-key Exchange, bucketed corpus
-# scan). The index build runs once per (session, sf) and is charged
+# scan). The index build runs once per session and corpus and is charged
 # to the first consumer each bench pass (d33; memo cleared between
 # passes — cached_bands' accounting convention): at scale ONE build
 # per corpus snapshot amortizes across every daily batch probe (d33)
@@ -3067,30 +3053,19 @@ def band_probe_sql(batch_view: str) -> str:
     """
 
 
-#: one corpus band-index build per (session, sf) — the cached_bands
-#: convention applied to the persisted bucketed index d33 and st28
-#: both probe. Both consumers used to rebuild the identical table per
-#: call; a production corpus index is built once per snapshot and
-#: every batch/stream probe rides it. bench.py clears this memo before
-#: every pass (clear_shared_caches), so each pass pays the build cold,
-#: attributed to the first consumer (d33).
-_LAYOUT_TABLES: Dict[tuple, str] = {}
-
-
 def band_index_table(sf_dir: str) -> str:
-    """SF-qualified physical name for the shared corpus band index.
-    The memo below is keyed per (session, sf) but the CATALOG is
-    session-wide: with one fixed table name, a session that touches
+    """Content-qualified physical name for the shared corpus band index.
+    The build below is memoized per session and corpus, but the CATALOG
+    is session-wide: with one fixed table name, a session that touches
     two SFs (the pytest suite runs most tests at sf0.001 and the plan
     gates at sf0.01) leaves the LAST writer's content under a name the
-    OTHER SF's memo still vouches for — a stale-probe bug reproduced
-    in round 13 (st28's streamed probe read the wrong corpus). Folding
-    the sf digest into the name gives each SF its own table, so a memo
-    hit can never alias another SF's bytes."""
-    import hashlib
+    OTHER SF's memo still vouches for — a stale-probe bug once
+    reproduced (st28's streamed probe read the wrong corpus). Folding
+    the documents fingerprint into the name gives each corpus its own
+    table, so a memo hit can never alias another corpus's bytes."""
+    from ..session import fingerprint
 
-    h = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    return f"{D33_INDEX_TABLE}_{h}"
+    return f"{D33_INDEX_TABLE}_{fingerprint([table_path(sf_dir, 'documents')])[:8]}"
 
 
 def build_band_index(spark: SparkSession, sf_dir: str) -> str:
@@ -3098,29 +3073,31 @@ def build_band_index(spark: SparkSession, sf_dir: str) -> str:
     index table (bucket key = the full band join key, sorted within
     buckets). Returns the table name. Rides the shared __bands__
     materialization, so the 16-min signature aggregation runs once per
-    (session, sf) across the whole dedup family; the index write
-    itself is likewise built once per (session, sf) and shared by
-    every probe (d33 batch, st28 streaming)."""
+    session and corpus across the whole dedup family; the index write
+    itself is a derived memo too, shared by every probe (d33 batch,
+    st28 streaming) — a production corpus index is built once per
+    snapshot. clear_shared_caches drops it before every bench pass, so
+    each pass pays the build cold, attributed to the first consumer
+    (d33)."""
     from ..session import SparkEngine
 
-    table = band_index_table(sf_dir)
-    key = (id(spark), os.path.abspath(sf_dir), table)
-    if _LAYOUT_TABLES.get(key):
+    def build() -> str:
+        table = band_index_table(sf_dir)
+        cached_bands(spark, sf_dir)
+        corpus = spark.sql(
+            f"SELECT * FROM __bands__ "
+            f"WHERE doc_id % {D33_NEW_MOD} <> {D33_NEW_REM}"
+        )
+        SparkEngine(spark).write_bucketed(
+            corpus,
+            table,
+            _D33_KEY_COLS,
+            n_buckets=16,
+            sort_cols=_D33_KEY_COLS,
+        )
         return table
-    cached_bands(spark, sf_dir)
-    corpus = spark.sql(
-        f"SELECT * FROM __bands__ "
-        f"WHERE doc_id % {D33_NEW_MOD} <> {D33_NEW_REM}"
-    )
-    SparkEngine(spark).write_bucketed(
-        corpus,
-        table,
-        _D33_KEY_COLS,
-        n_buckets=16,
-        sort_cols=_D33_KEY_COLS,
-    )
-    _LAYOUT_TABLES[key] = table
-    return table
+
+    return memo(spark, "band_index", [table_path(sf_dir, "documents")], build)
 
 
 @query(

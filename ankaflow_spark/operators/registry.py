@@ -423,10 +423,11 @@ def op_dedup_survivors(engine, df: DataFrame, params: Dict[str, Any]) -> DataFra
     # stage) read the file instead of re-executing the banding plan
     # (measured: 2.5 s per re-execution in dedup_ann_curation). Content
     # is identical by construction; stages with extra columns or
-    # non-canonical names keep their original lazy view.
-    if (pair_left, pair_right) == ("doc_a", "doc_b") and set(
-        pairs_stage.columns
-    ) == {"doc_a", "doc_b"}:
+    # non-canonical names or column order keep their original lazy view.
+    if (pair_left, pair_right) == ("doc_a", "doc_b") and pairs_stage.columns == [
+        "doc_a",
+        "doc_b",
+    ]:
         engine.register(params["pairs"], pairs, materialize=False)
     labels = (
         connected_components(
@@ -2435,9 +2436,10 @@ def op_band_index_merge(engine, df: DataFrame, params: Dict[str, Any]) -> DataFr
     # batch-sized result to a temp dir makes the ordering explicit —
     # and stays O(|batch|), never a driver collect.
     import shutil
-    import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="ankaflow_band_merge_")
+    from ..session import scratch
+
+    tmp = scratch("band_merge_")
     try:
         bands.join(already, "doc_id", "left_anti").write.mode(
             "overwrite"

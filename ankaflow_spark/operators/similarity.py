@@ -2275,16 +2275,12 @@ def _adaptive_bucket_sql(spark_dialect: bool, target_occ: int) -> str:
     """
 
 
-def _hubness_sql(spark_dialect: bool) -> str:
-    if spark_dialect:
-        raise ValueError(
-            "_hubness_sql(True) is retired: the Spark side runs the staged "
-            "spelling in s23() (r13 ADVICE: the one-string spark "
-            "branch was a dead, silently-drifting copy)"
-        )
-    dot = _SPARK_DOT if spark_dialect else _DUCK_DOT.format(dim=DIM)
+def _hubness_sql() -> str:
+    """s23's one-string DuckDB spelling (the oracle); the Spark side runs
+    the staged spelling in s23()."""
+    dot = _DUCK_DOT.format(dim=DIM)
     return f"""
-    WITH buckets AS ({_adaptive_bucket_sql(spark_dialect, HUB_TARGET_OCC)}),
+    WITH buckets AS ({_adaptive_bucket_sql(False, HUB_TARGET_OCC)}),
     cands AS (
       SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
              q.norm2 AS q_norm2, c.norm2 AS c_norm2
@@ -2395,7 +2391,7 @@ def _hubness_tail_sql(half: str) -> str:
 
 
 def s23(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged spelling of _hubness_sql(True): Spark INLINES multiply-
+    """Staged Spark spelling of _hubness_sql: Spark INLINES multiply-
     referenced CTEs, so the one-string form executed the per-vector
     signature fold 4x (q/c sides x the UNION ALL mirror) and the
     per-pair cosine fold 2x (the mirror) — guide §2.4 shared work.
@@ -2416,7 +2412,7 @@ def s23(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["s23_hubness_audit"] = s23
-ORACLES["s23_hubness_audit"] = _hubness_sql(False)
+ORACLES["s23_hubness_audit"] = _hubness_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -2616,25 +2612,12 @@ _S25_QUERIES = (
 )
 
 
-def _stale_recall_sql(spark_dialect: bool) -> str:
-    if spark_dialect:
-        raise ValueError(
-            "_stale_recall_sql(True) is retired: the Spark side runs the staged "
-            "spelling in s25() (r13 ADVICE: the one-string spark "
-            "branch was a dead, silently-drifting copy)"
-        )
-    f = _ivf_fragments(spark_dialect)
-    dot = f["dot"]
-    norm = _SPARK_NORM if spark_dialect else _DUCK_NORM
-    mat = "" if spark_dialect else "MATERIALIZED "
-    if spark_dialect:
-        all_dims = """all_dims AS (
-      SELECT vec_id, p.d AS d,
-             CAST(floor(CAST(p.pv AS DOUBLE) * 1000000) AS BIGINT) AS q
-      FROM embeddings LATERAL VIEW posexplode(embedding) p AS d, pv
-    )"""
-    else:
-        all_dims = f"""all_dims AS {mat}(
+def _stale_recall_sql() -> str:
+    """s25's one-string DuckDB spelling (the oracle); the Spark side runs
+    the staged spelling in s25()."""
+    dot = _ivf_fragments(False)["dot"]
+    mat = "MATERIALIZED "
+    all_dims = f"""all_dims AS {mat}(
       SELECT vec_id, t.d AS d,
              CAST(floor(CAST(embedding[t.d + 1] AS DOUBLE) * 1000000) AS BIGINT) AS q
       FROM embeddings CROSS JOIN (SELECT unnest(range(0, {DIM})) AS d) t
@@ -2644,10 +2627,10 @@ def _stale_recall_sql(spark_dialect: bool) -> str:
     WITH old_vecs AS {mat}(
       SELECT vec_id, embedding FROM embeddings WHERE vec_id % 4 <> 3
     ),
-    {ivf_assign_ctes(spark_dialect, table="old_vecs", training_only=True)},
+    {ivf_assign_ctes(False, table="old_vecs", training_only=True)},
     {all_dims},
     {assign_all},
-    norms AS ({norm}),
+    norms AS ({_DUCK_NORM}),
     probes AS (SELECT * FROM (VALUES {_S25_QUERIES}) AS t(qid, cohort)),
     truth AS (
       SELECT qid, cohort, cand_id FROM (
@@ -2745,7 +2728,7 @@ def _stale_recall_tail_sql(assign: str, norms: str) -> str:
 
 
 def s25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged spelling of _stale_recall_sql(True) — guide §2.4 shared
+    """Staged Spark spelling of _stale_recall_sql — guide §2.4 shared
     work: Spark inlines multiply-referenced CTEs, so the one-string form
     re-ran the stale-centroid training + full-corpus routing twice (the
     aq/am self-join on assign_all) and the corpus norm fold four times.
@@ -2776,7 +2759,7 @@ def s25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["s25_stale_index_recall"] = s25
-ORACLES["s25_stale_index_recall"] = _stale_recall_sql(False)
+ORACLES["s25_stale_index_recall"] = _stale_recall_sql()
 
 
 # ---------------------------------------------------------------------------

@@ -14,7 +14,8 @@ from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .tables import load_tables
+from ..session import memo
+from .tables import load_tables, table_path
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
@@ -682,13 +683,23 @@ _T13_SPARK_BIGRAMS = """
         CASE WHEN size(w) >= 2 THEN sequence(1, size(w) - 1) ELSE array() END
       ) t AS pos"""
 
-#: (session id, sf_dir) -> materialized bigram DataFrame. localCheckpoint,
-#: not cache(): the scoring SQL references the bigram table three times
-#: (corpus prefix counts, corpus bigram counts, per-doc scoring) and a
-#: view over a checkpointed DataFrame reads the computed blocks by
-#: construction. At cluster scale this is the persisted bigram table
-#: every LM-scoring pipeline writes once and joins repeatedly.
-_T13_MATERIALIZED: Dict[tuple, DataFrame] = {}
+
+def _t13_bigrams(spark: SparkSession, sf_dir: str) -> None:
+    """Register the corpus bigram table as ``t13_bigrams``: a session memo
+    keyed by the documents fingerprint, shared by t13 and t26.
+    localCheckpoint, not cache(): the scoring SQL references the bigram
+    table three times (corpus prefix counts, corpus bigram counts,
+    per-doc scoring) and a view over a checkpointed DataFrame reads the
+    computed blocks by construction. At cluster scale this is the
+    persisted bigram table every LM-scoring pipeline writes once and
+    joins repeatedly."""
+    load_tables(spark, sf_dir)
+    memo(
+        spark,
+        "t13_bigrams",
+        [table_path(sf_dir, "documents")],
+        lambda: spark.sql(_T13_SPARK_BIGRAMS).localCheckpoint(eager=True),
+    ).createOrReplaceTempView("t13_bigrams")
 
 
 def _bigram_surprisal_sql(spark_dialect: bool) -> str:
@@ -731,15 +742,7 @@ def _bigram_surprisal_sql(spark_dialect: bool) -> str:
 
 @query("t13_bigram_surprisal", oracle=_bigram_surprisal_sql(False))
 def t13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    load_tables(spark, sf_dir)
-    key = (id(spark), _os.path.abspath(sf_dir))
-    df = _T13_MATERIALIZED.get(key)
-    if df is None:
-        df = spark.sql(_T13_SPARK_BIGRAMS).localCheckpoint(eager=True)
-        _T13_MATERIALIZED[key] = df
-    df.createOrReplaceTempView("t13_bigrams")
+    _t13_bigrams(spark, sf_dir)
     return spark.sql(_bigram_surprisal_sql(True))
 
 
@@ -1659,15 +1662,7 @@ def _pmi_oracle_sql() -> str:
 
 @query("t26_pmi_collocations", oracle=_pmi_oracle_sql())
 def t26(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    load_tables(spark, sf_dir)
-    key = (id(spark), _os.path.abspath(sf_dir))
-    df = _T13_MATERIALIZED.get(key)
-    if df is None:
-        df = spark.sql(_T13_SPARK_BIGRAMS).localCheckpoint(eager=True)
-        _T13_MATERIALIZED[key] = df
-    df.createOrReplaceTempView("t13_bigrams")
+    _t13_bigrams(spark, sf_dir)
     spark.sql(
         "SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c2 "
         "FROM t13_bigrams GROUP BY w1, w2"
@@ -2333,7 +2328,7 @@ def _boilerplate_shingles_sql(
     if shingle_rel is None:
         if spark_dialect:
             if table == "documents":
-                # graded spelling reads the per-(session, sf) cached view
+                # graded spelling reads the session-memoized view
                 shingle_rel = "__shingles__"
             else:
                 # stage callers get an inline fragment over their input

@@ -16,16 +16,14 @@ documented as a small-result-only option.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 import time
 from typing import Any, Dict, Optional
 
 from pyspark.sql import DataFrame
 
 from ..models.core import ErrorPolicy, Stage, StageKind, Stages
-from ..session import SparkEngine
+from ..session import SparkEngine, scratch_dir
 from .renderer import Renderer
 
 
@@ -270,13 +268,9 @@ def handle_stream(flow: Flow, stage: Stage) -> DataFrame:
     with state_store_conf(spark, params.get("state_store")):
         if os.path.isfile(locator):
             # the file stream source requires a DIRECTORY; a single-file
-            # locator is staged as a symlink dir (md5-keyed: stable across
-            # processes, no per-run leak)
-            d = os.path.join(
-                tempfile.gettempdir(),
-                f"ankaflow_streamstage_{hashlib.md5(locator.encode()).hexdigest()[:8]}",
-            )
-            os.makedirs(d, exist_ok=True)
+            # locator is staged as a symlink dir (one per session and
+            # locator: no per-run leak)
+            d = scratch_dir(spark, "streamstage:" + locator)
             link = os.path.join(d, os.path.basename(locator))
             if not os.path.exists(link):
                 os.symlink(locator, link)
@@ -345,11 +339,7 @@ def handle_stream(flow: Flow, stage: Stage) -> DataFrame:
             # result registers directly — no memory sink involved
             from ..streaming.stream import foreachbatch_upsert
 
-            base = os.path.join(
-                tempfile.gettempdir(),
-                "ankaflow_upsert_"
-                + hashlib.md5(f"{locator}|{stage.name}".encode()).hexdigest()[:10],
-            )
+            base = scratch_dir(spark, f"upsert:{locator}|{stage.name}") + "/state"
             final = foreachbatch_upsert(
                 stream,
                 keys=list(params["keys"]),
@@ -377,11 +367,7 @@ def handle_stream(flow: Flow, stage: Stage) -> DataFrame:
                 batch_df.createOrReplaceTempView("__batch__")
                 return batch_df.sparkSession.sql(sql)
 
-            base = os.path.join(
-                tempfile.gettempdir(),
-                "ankaflow_batchsql_"
-                + hashlib.md5(f"{locator}|{stage.name}".encode()).hexdigest()[:10],
-            )
+            base = scratch_dir(spark, f"batchsql:{locator}|{stage.name}") + "/state"
             final = foreachbatch_append(stream, _screen, base)
             return flow.engine.register(stage.name, final, materialize=True)
         else:

@@ -165,7 +165,7 @@ class BaseFileConnection:
     def _schema(self) -> Optional[T.StructType]:
         return fields_to_schema(self.spec.get("fields"))
 
-    def _read(self) -> DataFrame:
+    def _read(self, exact: bool = False) -> DataFrame:
         reader = self.engine.spark.read
         schema = self._schema()
         if schema is not None:
@@ -173,8 +173,9 @@ class BaseFileConnection:
         opts = dict(self.spec.get("options") or {})
         # the reference wildcard-substitutes every file tap's locator
         # (trailing number group -> *) so partitioned file families read
-        # as one glob; `locator_wildcard: false` opts out per connection
-        wildcard = bool(self.spec.get("locator_wildcard", True))
+        # as one glob; `locator_wildcard: false` opts out per connection,
+        # and ``exact`` reads the locator itself (a sink's read-back)
+        wildcard = not exact and bool(self.spec.get("locator_wildcard", True))
         return self._do_read(reader, self._locator(use_wildcard=wildcard), opts)
 
     def _do_read(self, reader, path: str, opts: Dict[str, Any]) -> DataFrame:
@@ -237,7 +238,10 @@ class BaseFileConnection:
         surface PRE-EXISTING rows the lazy plan does not contain), no
         partition_by (partition columns come back re-ordered/re-typed),
         and the read-back schema must match the written one field for
-        field — anything else falls back to the lazy plan unchanged."""
+        field — anything else falls back to the lazy plan unchanged.
+        The read-back takes the exact written path, never the wildcarded
+        tap locator: ``report-2024.parquet`` must not glob a sibling
+        ``report-2023.parquet`` into the stage relation."""
         if self.format != "parquet":
             return None
         if mode not in ("overwrite", "error", "errorifexists"):
@@ -245,7 +249,7 @@ class BaseFileConnection:
         if self.spec.get("partition_by"):
             return None
         try:
-            rb = self._read()
+            rb = self._read(exact=True)
             if [(f.name, f.dataType) for f in rb.schema.fields] == [
                 (f.name, f.dataType) for f in df.schema.fields
             ]:

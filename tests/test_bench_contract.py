@@ -127,16 +127,19 @@ def test_passes_clear_shared_caches():
 
 
 def test_clear_shared_caches_resets_memos(spark, sf_dir):
-    """clear_shared_caches must empty the session-scoped memo dicts so
-    the next consumer rebuilds cold (the bench accounting contract)."""
+    """clear_shared_caches must drop the session's derived memo entries
+    so the next consumer rebuilds cold (the bench accounting contract),
+    and keep the durable ones (loaded tables and their views)."""
     from ankaflow_spark.operators import clear_shared_caches, dedup
     from ankaflow_spark.operators.tables import load_tables
+    from ankaflow_spark.session import memo_names
 
     load_tables(spark, sf_dir)
     dedup.cached_cands(spark, sf_dir)
-    assert dedup._MATERIALIZED
+    assert {"shingles", "bands", "cands"} <= set(memo_names(spark))
     clear_shared_caches(spark)
-    assert not dedup._MATERIALIZED
+    assert not {"shingles", "bands", "cands"} & set(memo_names(spark))
+    assert {"tables", "table_views"} <= set(memo_names(spark))
     # and the next call rebuilds + re-registers the views transparently
     dedup.cached_cands(spark, sf_dir)
     assert spark.sql("SELECT COUNT(*) AS n FROM __cands__").collect()[0]["n"] >= 0

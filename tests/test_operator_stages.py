@@ -1875,3 +1875,31 @@ def test_band_index_merge_is_idempotent(engine, sf_dir):
     assert n1 > n0
     merge(engine, batch, {"table": "d34_idem_index"})  # replayed batch
     assert spark.table("d34_idem_index").count() == n1
+
+
+def test_dedup_survivors_keeps_pairs_stage_column_order(engine):
+    """The pairs stage is rebound to the CC entry parquet only when its
+    columns are exactly (doc_a, doc_b) in that order: a (doc_b, doc_a)
+    stage keeps its own view and column order."""
+    flow = Flow(
+        Stages.loads("""
+- kind: internal
+  name: docs
+  query: SELECT id AS doc_id, CAST(id AS DOUBLE) AS score FROM (SELECT explode(sequence(1, 6)) AS id)
+- kind: internal
+  name: swapped
+  query: SELECT doc_b, doc_a FROM VALUES (2, 1), (3, 2), (6, 5) AS t(doc_b, doc_a)
+- kind: operator
+  name: survivors
+  op: dedup_survivors
+  input: docs
+  params: {pairs: swapped, id_column: doc_id, score_column: score}
+"""),
+        engine=engine,
+    )
+    kept = sorted(r["doc_id"] for r in flow.run().collect())
+    assert kept == [3, 4, 6]
+    assert engine.table("swapped").columns == ["doc_b", "doc_a"]
+    assert [tuple(r) for r in engine.table("swapped").orderBy("doc_a").collect()] == [
+        (2, 1), (3, 2), (6, 5)
+    ]

@@ -368,19 +368,20 @@ def test_load_tables_ltz_under_ntz_default_session(spark):
     cast alias then resolves to NTZ and watermarks/unix_micros break.
     load_tables must still deliver TIMESTAMP (LTZ) columns."""
     from ankaflow_spark.operators import tables as T
+    from ankaflow_spark.session import forget
 
     prev = spark.conf.get("spark.sql.timestampType", "TIMESTAMP_LTZ")
     spark.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
     try:
-        T._DF_CACHE.clear()
-        T._ACTIVE.clear()
+        forget(spark, "tables")
+        forget(spark, "table_views")
         dfs = T.load_tables(spark, "/root/testdata/sf0.001")
         ts_field = [f for f in dfs["events"].schema.fields if f.name == "ts"][0]
         assert ts_field.dataType.typeName() == "timestamp", ts_field.dataType
     finally:
         spark.conf.set("spark.sql.timestampType", prev)
-        T._DF_CACHE.clear()
-        T._ACTIVE.clear()
+        forget(spark, "tables")
+        forget(spark, "table_views")
 
 
 def test_t13_bigram_surprisal_math(spark):
@@ -390,10 +391,10 @@ def test_t13_bigram_surprisal_math(spark):
     import math
 
     from ankaflow_spark.operators.textops import (
-        _T13_MATERIALIZED,
         _T13_SPARK_BIGRAMS,
         _bigram_surprisal_sql,
     )
+    from ankaflow_spark.session import forget
 
     spark.createDataFrame(
         [(1, "a b"), (2, "a b"), (3, "a c"), (4, "solo")],
@@ -407,7 +408,8 @@ def test_t13_bigram_surprisal_math(spark):
     assert rows[1]["novel_frac"] == 0.0
     assert rows[3]["avg_surprisal"] == round(math.log(3.0), 6)
     assert rows[3]["novel_frac"] == 1.0
-    _T13_MATERIALIZED.clear()  # the real view is rebuilt per sf_dir
+    forget(spark, "t13_bigrams")  # the real view is rebuilt per sf_dir
+    forget(spark, "table_views")  # the synthetic view replaced `documents`
 
 
 def test_d10_semantic_dedup_keep_semantics(spark, sf_dir):
@@ -537,9 +539,9 @@ def test_q52_verdict_true_under_skew(spark):
         # the toy view REPLACED the loader-registered one; clear the
         # loader's active-dir memo so the next load_tables re-registers
         # the real table views instead of assuming they still exist
-        from ankaflow_spark.operators import tables
+        from ankaflow_spark.session import forget
 
-        tables._ACTIVE.pop(id(spark), None)
+        forget(spark, "table_views")
 
 
 def test_q50_top_revenue_is_true_max(spark, sf_dir):
@@ -622,9 +624,9 @@ def test_t22_chunk_rewrite_keeps_first_occurrence(spark):
         # the toy view REPLACED the loader-registered one; clear the
         # loader's active-dir memo so the next load_tables re-registers
         # the real table views instead of assuming they still exist
-        from ankaflow_spark.operators import tables
+        from ankaflow_spark.session import forget
 
-        tables._ACTIVE.pop(id(spark), None)
+        forget(spark, "table_views")
 
 
 def test_t21_classifier_scores_are_hash_stable(spark):
@@ -647,9 +649,9 @@ def test_t21_classifier_scores_are_hash_stable(spark):
         # the toy view REPLACED the loader-registered one; clear the
         # loader's active-dir memo so the next load_tables re-registers
         # the real table views instead of assuming they still exist
-        from ankaflow_spark.operators import tables
+        from ankaflow_spark.session import forget
 
-        tables._ACTIVE.pop(id(spark), None)
+        forget(spark, "table_views")
 
 
 def test_s11_kmeans_assignment_invariants(spark, sf_dir):
@@ -828,9 +830,9 @@ def test_ts23_twap_constant_value_bucket(spark):
         assert r["active_us"] == 14 * 60 * 1_000_000  # held to bucket end
     finally:
         spark.catalog.dropTempView("events")
-        from ankaflow_spark.operators import tables
+        from ankaflow_spark.session import forget
 
-        tables._ACTIVE.pop(id(spark), None)
+        forget(spark, "table_views")
 
 
 def test_s14_mrr_semantics(spark, sf_dir):
@@ -933,9 +935,9 @@ def test_d19_d20_substring_dedup_semantics(spark):
             assert r["clean_key"] == hashlib.md5(b"").hexdigest()
     finally:
         spark.catalog.dropTempView("documents")
-        from ankaflow_spark.operators import tables
+        from ankaflow_spark.session import forget
 
-        tables._ACTIVE.pop(id(spark), None)
+        forget(spark, "table_views")
 
 
 def test_d19_d20_randomized_vs_bruteforce(spark):
@@ -1044,9 +1046,9 @@ def test_d19_d20_randomized_vs_bruteforce(spark):
             assert got20 == exp20, f"seed {seed}"
         finally:
             spark.catalog.dropTempView("documents")
-            from ankaflow_spark.operators import tables
+            from ankaflow_spark.session import forget
 
-            tables._ACTIVE.pop(id(spark), None)
+            forget(spark, "table_views")
 
 
 def test_d21_bloom_decontam_invariants(spark, sf_dir):

@@ -1,0 +1,124 @@
+"""The session registry (ankaflow_spark/session.py): per-session memos
+keyed by input fingerprint and the per-process scratch root."""
+
+import ast
+import os
+import subprocess
+import sys
+import tempfile
+
+import pandas as pd
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_scratch_root_is_per_process_and_removed_at_exit():
+    """Two live processes get different scratch roots under the temp
+    dir, and each root is gone once its process exits."""
+    code = (
+        "import sys\n"
+        "from ankaflow_spark.session import scratch, scratch_root\n"
+        "scratch('probe_')\n"
+        "print(scratch_root(), flush=True)\n"
+        "sys.stdin.readline()\n"
+    )
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", code],
+            cwd=REPO,
+            stdin=subprocess.PIPE,
+            stdout=subprocess.PIPE,
+            text=True,
+        )
+        for _ in range(2)
+    ]
+    try:
+        roots = [p.stdout.readline().strip() for p in procs]
+        assert roots[0] != roots[1], roots
+        for root in roots:
+            assert os.path.dirname(root) == tempfile.gettempdir(), root
+            assert os.path.isdir(root), root
+    finally:
+        for p in procs:
+            p.communicate("\n", timeout=60)
+    assert [p.returncode for p in procs] == [0, 0]
+    for root in roots:
+        assert not os.path.exists(root), root
+
+
+def test_memo_keys_on_content_and_reset_keeps_durable(spark, tmp_path):
+    from ankaflow_spark.session import memo, memo_names, reset_derived
+
+    src = tmp_path / "input.txt"
+    src.write_text("one")
+    builds = []
+
+    def build():
+        builds.append(src.read_text())
+        return src.read_text()
+
+    assert memo(spark, "__probe__", [str(src)], build) == "one"
+    assert memo(spark, "__probe__", [str(src)], build) == "one"
+    src.write_text("three")  # rewritten in place: new size, new mtime
+    assert memo(spark, "__probe__", [str(src)], build) == "three"
+    assert builds == ["one", "three"]
+
+    memo(spark, "__probe_durable__", [str(src)], lambda: 1, durable=True)
+    reset_derived(spark)
+    names = memo_names(spark)
+    assert "__probe__" not in names
+    assert "__probe_durable__" in names
+
+
+def test_memoized_query_sees_in_place_rewrite(spark, tmp_path):
+    """A shared relation must follow its input's content, not its path:
+    rewriting documents.parquet in place under the same sf_dir must give
+    fresh t13 results (the memo key carries the file fingerprint)."""
+    from ankaflow_spark.operators.textops import QUERIES
+    from ankaflow_spark.session import forget
+
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    docs = sf_dir / "documents.parquet"
+
+    def write(rows):
+        pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(docs, index=False)
+
+    try:
+        write([(1, "a b"), (2, "a b"), (3, "a c")])
+        first = QUERIES["t13_bigram_surprisal"](spark, str(sf_dir)).collect()
+        assert [r["doc_id"] for r in first] == [1, 2, 3]
+        write([(7, "x y z"), (8, "x y")])
+        second = QUERIES["t13_bigram_surprisal"](spark, str(sf_dir)).collect()
+        assert [r["doc_id"] for r in second] == [7, 8]
+        assert [r["n_bigrams"] for r in second] == [2, 1]
+    finally:
+        # the tmp dir's views replaced the suite's table views
+        forget(spark, "table_views")
+
+
+def test_no_tempdir_or_session_id_keys_outside_registry():
+    """Every scratch dir comes from session.scratch*/scratch_root and
+    every shared-state key from session.memo: no other engine module
+    calls tempfile.gettempdir/mkdtemp or keys on id(spark)."""
+    pkg = os.path.join(REPO, "ankaflow_spark")
+    offenders = []
+    for dirpath, _, files in os.walk(pkg):
+        for fname in files:
+            path = os.path.join(dirpath, fname)
+            if not fname.endswith(".py") or path == os.path.join(pkg, "session.py"):
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Attribute) and node.attr in ("gettempdir", "mkdtemp"):
+                    offenders.append(f"{path}:{node.lineno} tempfile.{node.attr}")
+                elif isinstance(node, ast.ImportFrom) and node.module == "tempfile":
+                    offenders.append(f"{path}:{node.lineno} from tempfile import")
+                elif (
+                    isinstance(node, ast.Call)
+                    and getattr(node.func, "id", None) == "id"
+                    and any(getattr(a, "id", None) == "spark" for a in node.args)
+                ):
+                    offenders.append(f"{path}:{node.lineno} id(spark)")
+    assert not offenders, offenders

@@ -519,3 +519,28 @@ class TestDuckTypeToSpark:
         assert schema["tags"].dataType == T.ArrayType(T.StringType())
         assert isinstance(schema["meta"].dataType, T.StructType)
         assert schema["weird"].dataType == T.StringType()  # scalar fallback
+
+
+def test_sink_readback_ignores_wildcard_siblings(engine, tmp_path):
+    """A parquet sink's read-back is the exact written file: taps
+    wildcard a trailing number group (report-2024 -> report-*), but the
+    sink stage's relation must not glob a sibling report-2023.parquet."""
+    engine.spark.sql(
+        "SELECT id, 'old' AS tag FROM (SELECT explode(sequence(1, 3)) AS id)"
+    ).toPandas().to_parquet(tmp_path / "report-2023.parquet", index=False)
+    flow = Flow(
+        Stages.loads(f"""
+- kind: internal
+  name: seed
+  query: SELECT id, 'new' AS tag FROM (SELECT explode(sequence(1, 5)) AS id)
+- kind: sink
+  name: write
+  connection:
+    kind: parquet
+    locator: {tmp_path / "report-2024.parquet"}
+"""),
+        engine=engine,
+    )
+    df = flow.run()
+    assert df.count() == 5
+    assert {r["tag"] for r in df.collect()} == {"new"}

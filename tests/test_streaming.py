@@ -445,10 +445,10 @@ def test_st13_streaming_equals_batch_bloom(spark):
     boundaries genuinely cut the corpus."""
     import glob
     import os
-    import tempfile
 
     from ankaflow_spark.operators.dedup import QUERIES as DQ
     from ankaflow_spark.operators.streamq import QUERIES as SQ
+    from ankaflow_spark.session import scratch_root
 
     sf_dir = "/root/testdata/sf0.001"
     got = {r["doc_id"]: r for r in SQ["st13_stream_bloom_decontam"](spark, sf_dir).collect()}
@@ -462,9 +462,7 @@ def test_st13_streaming_equals_batch_bloom(spark):
             "contaminated",
         ):
             assert got[i][col] == want[i][col], (i, col)
-    out_dirs = glob.glob(
-        os.path.join(tempfile.gettempdir(), "ankaflow_streamdocs_*_st13_*_out", "batch=*")
-    )
+    out_dirs = glob.glob(os.path.join(scratch_root(), "streamdocs_*_st13_out", "batch=*"))
     assert len(out_dirs) >= 2, out_dirs
 
 
@@ -846,8 +844,8 @@ def test_st27_watermark_drops_vs_python(spark, sf_dir):
 
     out = QUERIES["st27_stream_watermark_drops"](spark, sf_dir).collect()
     # the query no longer materializes the disorder view per call (the
-    # calibration is persisted with the staged fingerprint, r12 punch
-    # item 1) — the recount builds it itself
+    # calibration is memoized with the staged copy) — the recount
+    # builds it itself
     from ankaflow_spark.operators.streamq import _md5_disorder_sql
 
     spark.sql(_md5_disorder_sql("events", "event_id")).createOrReplaceTempView(
@@ -891,17 +889,17 @@ def test_st27_watermark_drops_vs_python(spark, sf_dir):
     sim = spark.sql(_st27_sim_sql(True)).collect()
     assert [tuple(r) for r in sim] == [tuple(r) for r in out]
     # the calibrated delay is a pure function of the staged data: it is
-    # persisted next to the staging fingerprint and a warm call reads
-    # it back instead of recomputing the full-corpus disorder rank
-    # (r12 verdict punch item 1); the staging-vs-stream wall split is
+    # memoized with the staged dir per session and events fingerprint,
+    # and a warm call reads it back instead of recomputing the
+    # full-corpus disorder rank; the staging-vs-stream wall split is
     # recorded for BENCH_DETAIL
-    import os
-
     from ankaflow_spark.operators.streamq import COST_SPLITS, _st27_staged
+    from ankaflow_spark.session import memo_names
 
     staged, cached_delay = _st27_staged(spark, sf_dir)
     assert cached_delay == delay_min
-    assert os.path.exists(os.path.join(staged, "_delay_min.txt"))
+    assert _st27_staged(spark, sf_dir) == (staged, cached_delay)
+    assert "st27_chunks" in memo_names(spark)
     split = COST_SPLITS["st27_stream_watermark_drops"]
     assert set(split) == {"staging_calibration_sec", "stream_wall_sec"}
 
@@ -912,22 +910,17 @@ def test_st28_matches_d33_and_runs_real_batches(spark, sf_dir):
     AND must have executed as real micro-batches (one per staged
     slice), each appending its own idempotent batch=N output."""
     import glob
-    import hashlib
     import os
-    import tempfile
 
     from ankaflow_spark.operators.dedup import QUERIES as DQ
     from ankaflow_spark.operators.streamq import QUERIES as SQ
+    from ankaflow_spark.session import scratch_root
 
     out = SQ["st28_stream_band_probe"](spark, sf_dir).collect()
     graded = DQ["d33_bucketed_band_probe"](spark, sf_dir).collect()
     assert len(out) > 0
     assert [tuple(r) for r in out] == [tuple(r) for r in graded]
-    staged = os.path.join(
-        tempfile.gettempdir(),
-        f"ankaflow_st28_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
-    batches = glob.glob(staged + "_probe_out/batch=*")
+    batches = glob.glob(os.path.join(scratch_root(), "st28_4_*_probe_out", "batch=*"))
     assert len(batches) >= 4, batches
 
 
