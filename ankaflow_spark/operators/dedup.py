@@ -615,7 +615,7 @@ ORACLES["d05_embedding_neardup"] = ORACLES["d05_embedding_neardup"].format(
 CC_MAX_ROUNDS = 64  # safety bound only; the loop exits at fixpoint
 
 
-def cc_persist_pairs(spark: SparkSession, pairs: DataFrame) -> DataFrame:
+def cc_persist_pairs(spark: SparkSession, pairs: DataFrame, name: str) -> DataFrame:
     """Materialize a candidate-pair relation (doc_a, doc_b) through a
     parquet round-trip and return the parquet-backed DataFrame — the
     connected_components ENTRY materialization, exposed so a caller can
@@ -624,11 +624,22 @@ def cc_persist_pairs(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     re-executing the banding plan — measured 2.5 s per re-execution in
     dedup_ann_curation's release_report, guide §1.2 "don't compute
     things twice"). Pass the result to connected_components with
-    ``pairs_persisted=True``."""
-    from ..session import scratch
+    ``pairs_persisted=True``.
 
-    path = os.path.join(scratch("cc_"), "pairs")
-    pairs.select("doc_a", "doc_b").write.mode("overwrite").parquet(path)
+    Each pairs stage ``name`` has one image dir in the session, rewritten
+    on every call, so a long-lived session does not pile up one dir per
+    run. When ``pairs`` already is that image (the stage view was rebound
+    to it by an earlier call), it is returned as is: overwriting the
+    files it reads would fail."""
+    from ..session import scratch_dir
+
+    path = os.path.join(scratch_dir(spark, "cc_pairs:" + name), "pairs")
+    pairs = pairs.select("doc_a", "doc_b")
+    if os.path.isdir(path):
+        image = spark.read.parquet(path)
+        if pairs.sameSemantics(image):
+            return image
+    pairs.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
 
@@ -683,9 +694,12 @@ def connected_components(
     # no-stats labels regressed d10 by ~4s at sf0.1 through
     # SMJ-planned survivor joins). If the InternalRow rebuild API is
     # unavailable, every round falls back to the parquet path.
-    from ..session import scratch
+    # ``held`` keeps the checkpoints the next statement still reads:
+    # superseded rounds are released each round, the rest at the exit.
+    from ..session import release, scratch
 
     workdir = scratch("cc_")
+    held: List[DataFrame] = []
 
     def persist_reset(df: DataFrame, name: str) -> DataFrame:
         path = os.path.join(workdir, name)
@@ -699,9 +713,11 @@ def connected_components(
             new_jdf = spark._jsparkSession.internalCreateDataFrame(
                 jdf.queryExecution().toRdd(), jdf.schema(), False
             )
-            return DataFrame(new_jdf, spark)
         except Exception:
+            release(ck)
             return persist_reset(df, name)
+        held.append(ck)
+        return DataFrame(new_jdf, spark)
 
     if not pairs_persisted:
         pairs = persist_reset(pairs.select("doc_a", "doc_b"), "pairs")
@@ -762,6 +778,9 @@ def connected_components(
         new_labels = ckpt_reset(new_labels, f"labels_r{rnd % 2}")
         changed = new_labels.filter(F.col("lbl") != F.col("old_lbl")).limit(1).count()
         labels = new_labels.select("doc_id", "lbl")
+        for ck in held[:-1]:
+            release(ck)
+        del held[:-1]
         if changed == 0:
             converged = True
             break
@@ -780,10 +799,6 @@ def connected_components(
             " rounds (component diameter exceeds the propagation"
             " horizon); labels would be silently under-merged"
         )
-    try:
-        edges.rdd.unpersist()
-    except Exception:
-        pass
     # exit through parquet: downstream survivor joins plan against real
     # file-size stats (see the persist strategy note above)
     out = persist_reset(
@@ -794,6 +809,8 @@ def connected_components(
         ),
         "labels_final",
     )
+    for ck in [edges, *held]:
+        release(ck)
     return out.orderBy("cluster_id", "doc_id") if ordered else out
 
 

@@ -415,6 +415,7 @@ def op_dedup_survivors(engine, df: DataFrame, params: Dict[str, Any]) -> DataFra
         pairs_stage.selectExpr(
             f"{pair_left} AS doc_a", f"{pair_right} AS doc_b"
         ),
+        params["pairs"],
     )
     # The pairs stage just executed in full (the CC entry parquet is its
     # materialized image). When that image IS the stage relation —

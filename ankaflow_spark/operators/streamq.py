@@ -17,7 +17,7 @@ from typing import Callable, Dict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import memo, scratch
+from ..session import memo, release, scratch
 from .tables import load_tables, table_path
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -2365,7 +2365,7 @@ def _st27_stage(spark: SparkSession) -> tuple:
         ).first()[0]
     )
     spark.catalog.dropTempView("st27_dis")
-    dis.rdd.unpersist()
+    release(dis)
     return staged, delay_min
 
 

@@ -1903,3 +1903,44 @@ def test_dedup_survivors_keeps_pairs_stage_column_order(engine):
     assert [tuple(r) for r in engine.table("swapped").orderBy("doc_a").collect()] == [
         (2, 1), (3, 2), (6, 5)
     ]
+
+
+def test_dedup_survivors_reuses_one_pairs_dir_per_stage(engine):
+    """Running a dedup_survivors stage again in the same session rewrites
+    its pairs stage's one CC entry dir instead of leaving a new dir
+    behind per call, also when a second consumer reads the pairs stage
+    after it was rebound to that dir."""
+    import glob
+    import os
+
+    from ankaflow_spark.session import scratch_root
+
+    def pairs_dirs():
+        return set(glob.glob(os.path.join(scratch_root(), "*", "pairs")))
+
+    flow = Flow(
+        Stages.loads("""
+- kind: internal
+  name: docs
+  query: SELECT id AS doc_id, CAST(id AS DOUBLE) AS score FROM (SELECT explode(sequence(1, 6)) AS id)
+- kind: internal
+  name: reuse_probe_pairs
+  query: SELECT doc_a, doc_b FROM VALUES (1, 2), (2, 3), (5, 6) AS t(doc_a, doc_b)
+- kind: operator
+  name: first_pass
+  op: dedup_survivors
+  input: docs
+  params: {pairs: reuse_probe_pairs, id_column: doc_id, score_column: score}
+- kind: operator
+  name: second_pass
+  op: dedup_survivors
+  input: docs
+  params: {pairs: reuse_probe_pairs, id_column: doc_id, score_column: score}
+"""),
+        engine=engine,
+    )
+    before = pairs_dirs()
+    for _ in range(3):
+        assert sorted(r["doc_id"] for r in flow.run().collect()) == [3, 4, 6]
+        assert sorted(r["doc_id"] for r in engine.table("first_pass").collect()) == [3, 4, 6]
+    assert len(pairs_dirs() - before) == 1

@@ -146,6 +146,24 @@ def test_connected_components_multiple_components(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
+def test_connected_components_releases_its_checkpoints(spark):
+    """Every localCheckpoint a CC call makes (edges, initial and per-round
+    labels) is released once the labels exit through parquet, so repeated
+    calls do not grow the session's persistent RDDs."""
+    from ankaflow_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)] + [(20, 21)], ["doc_a", "doc_b"]
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    connected_components(spark, pairs).collect()
+    before = persistent().size()
+    for _ in range(3):
+        out = connected_components(spark, pairs).collect()
+        assert {r["cluster_id"] for r in out} == {0, 20}
+    assert persistent().size() == before
+
+
 def test_d07_decontam_semantics(spark):
     from ankaflow_spark.operators.dedup import DECONTAM_MOD, QUERIES
 

@@ -97,28 +97,63 @@ def test_memoized_query_sees_in_place_rewrite(spark, tmp_path):
         forget(spark, "table_views")
 
 
-def test_no_tempdir_or_session_id_keys_outside_registry():
-    """Every scratch dir comes from session.scratch*/scratch_root and
-    every shared-state key from session.memo: no other engine module
-    calls tempfile.gettempdir/mkdtemp or keys on id(spark)."""
+def _engine_modules():
+    """(path, AST) of every engine module except session.py."""
     pkg = os.path.join(REPO, "ankaflow_spark")
-    offenders = []
     for dirpath, _, files in os.walk(pkg):
         for fname in files:
             path = os.path.join(dirpath, fname)
             if not fname.endswith(".py") or path == os.path.join(pkg, "session.py"):
                 continue
             with open(path) as fh:
-                tree = ast.parse(fh.read())
-            for node in ast.walk(tree):
-                if isinstance(node, ast.Attribute) and node.attr in ("gettempdir", "mkdtemp"):
-                    offenders.append(f"{path}:{node.lineno} tempfile.{node.attr}")
-                elif isinstance(node, ast.ImportFrom) and node.module == "tempfile":
-                    offenders.append(f"{path}:{node.lineno} from tempfile import")
-                elif (
-                    isinstance(node, ast.Call)
-                    and getattr(node.func, "id", None) == "id"
-                    and any(getattr(a, "id", None) == "spark" for a in node.args)
-                ):
-                    offenders.append(f"{path}:{node.lineno} id(spark)")
+                yield path, ast.parse(fh.read())
+
+
+def test_no_tempdir_or_session_id_keys_outside_registry():
+    """Every scratch dir comes from session.scratch*/scratch_root and
+    every shared-state key from session.memo: no other engine module
+    calls tempfile.gettempdir/mkdtemp or keys on id(spark)."""
+    offenders = []
+    for path, tree in _engine_modules():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr in ("gettempdir", "mkdtemp"):
+                offenders.append(f"{path}:{node.lineno} tempfile.{node.attr}")
+            elif isinstance(node, ast.ImportFrom) and node.module == "tempfile":
+                offenders.append(f"{path}:{node.lineno} from tempfile import")
+            elif (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "id", None) == "id"
+                and any(getattr(a, "id", None) == "spark" for a in node.args)
+            ):
+                offenders.append(f"{path}:{node.lineno} id(spark)")
     assert not offenders, offenders
+
+
+def _builder_uses(tree):
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute)
+        and node.attr == "builder"
+        and getattr(node.value, "id", None) == "SparkSession"
+    ]
+
+
+def test_sessions_are_built_only_by_get_spark():
+    """session.get_spark sets the engine's static confs (the codegen
+    cache size among them), which a session built elsewhere would
+    silently drop: no other engine module uses SparkSession.builder,
+    and bench.py builds its session through get_spark."""
+    offenders = [
+        f"{path}:{line} SparkSession.builder"
+        for path, tree in _engine_modules()
+        for line in _builder_uses(tree)
+    ]
+    assert not offenders, offenders
+    with open(os.path.join(REPO, "bench.py")) as fh:
+        bench = ast.parse(fh.read())
+    assert not _builder_uses(bench)
+    assert any(
+        isinstance(node, ast.Call) and getattr(node.func, "id", None) == "get_spark"
+        for node in ast.walk(bench)
+    )
