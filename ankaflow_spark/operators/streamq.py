@@ -1455,7 +1455,7 @@ def st19(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = staged + "_st19_state"
     stream = stream_tap(spark, staged, schema, max_files_per_trigger=2)
     state = foreachbatch_streaks(stream, "user_id", "ts", base)
-    state.localCheckpoint(eager=True).createOrReplaceTempView("st19_state")
+    state.createOrReplaceTempView("st19_state")
     return spark.sql("""
     WITH tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM st19_state)
     SELECT s.best_run AS streak_days,
@@ -1586,7 +1586,7 @@ def st20(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["user_id", "week"],
         base,
     )
-    weekly.localCheckpoint(eager=True).createOrReplaceTempView("st20_weekly")
+    weekly.createOrReplaceTempView("st20_weekly")
     return spark.sql(_decay_tail_sql("st20_weekly", True))
 
 
@@ -1935,7 +1935,7 @@ def st23(spark: SparkSession, sf_dir: str) -> DataFrame:
     against s28's batch SQL: the vector corpus arrives as a throttled
     file stream (multiple real micro-batches, 2 files per trigger);
     each micro-batch posexplodes its vectors onto the e4 lattice and
-    foreachbatch_merge_sums maintains EXACT per-(label, dim) BIGINT
+    foreachbatch_merge_counts maintains EXACT per-(label, dim) BIGINT
     (sum, count) state — the running centroid numerators an ANN
     deployment keeps NEXT TO its index so the retrain trigger costs
     one report query, never a corpus rescan. State is
@@ -1945,7 +1945,7 @@ def st23(spark: SparkSession, sf_dir: str) -> DataFrame:
     The report tail is s28's shared drift SQL over the state table:
     per-coordinate single division, e12-quantized squared diffs,
     integer drift verdict."""
-    from ..streaming.stream import foreachbatch_merge_sums, stream_tap
+    from ..streaming.stream import foreachbatch_merge_counts, stream_tap
 
     staged, schema = _staged_embeddings(spark, sf_dir)
     base = staged + "_st23_state"
@@ -1958,7 +1958,7 @@ def st23(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("pos") + 1).alias("dim"),
         F.expr("CAST(floor(CAST(v AS DOUBLE) * 10000) AS BIGINT)").alias("q"),
     )
-    state = foreachbatch_merge_sums(lattice, ["label", "dim"], "q", base)
+    state = foreachbatch_merge_counts(lattice, ["label", "dim"], base, value_col="q")
     state.createOrReplaceTempView("st23_per_label")
     from .similarity import _drift_tail_sql
 
@@ -2434,7 +2434,7 @@ def st27(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the stream wall vs the heap-backed default (same direction as
     # the st22/st29 soak, PERF r32: 55.0s vs 79.2s over 24 batches).
     with state_store_conf(spark, "rocksdb"):
-        surv, _dropped = foreachbatch_update_latest(
+        surv = foreachbatch_update_latest(
             agg,
             ["win_start_us", "event_type"],
             base,

@@ -335,8 +335,9 @@ def handle_stream(flow: Flow, stage: Stage) -> DataFrame:
             )
             mode = "complete"
         elif op == "upsert":
-            # foreachBatch latest-wins keyed state (st09); terminal batch
-            # result registers directly — no memory sink involved
+            # foreachBatch latest-wins keyed state (st09); the terminal
+            # batch result comes back pinned and registers directly — no
+            # memory sink, no second materialization
             from ..streaming.stream import foreachbatch_upsert
 
             base = scratch_dir(spark, f"upsert:{locator}|{stage.name}") + "/state"
@@ -347,7 +348,7 @@ def handle_stream(flow: Flow, stage: Stage) -> DataFrame:
                 tiebreak=params.get("tiebreak"),
                 state_base=base,
             )
-            return flow.engine.register(stage.name, final, materialize=True)
+            return flow.engine.register(stage.name, final)
         elif op == "batch_sql":
             # stateless per-micro-batch SQL screen with an append-only sink
             # (st13's shape): each batch registers as `__batch__`, the
@@ -369,7 +370,7 @@ def handle_stream(flow: Flow, stage: Stage) -> DataFrame:
 
             base = scratch_dir(spark, f"batchsql:{locator}|{stage.name}") + "/state"
             final = foreachbatch_append(stream, _screen, base)
-            return flow.engine.register(stage.name, final, materialize=True)
+            return flow.engine.register(stage.name, final)
         else:
             raise FlowError(
                 f"stream stage '{stage.name}': unknown op {op!r} "

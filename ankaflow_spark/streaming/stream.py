@@ -11,18 +11,29 @@ Stage kinds map to streaming primitives:
   watermark — the streaming twin of the reference's versioned dedup
   (bounded state: late duplicates beyond the watermark age out).
 
-Local tests drive a parquet-backed stream to completion with
-``processAllAvailable()`` on a memory sink — the same code shape a
-cluster deployment points at kafka + a Delta sink.
+Every query of this module starts, drains (``processAllAvailable()``)
+and stops in one place, ``_drain``. Memory-sink queries go through
+``run_stream_to_memory``; the ``foreachbatch_*`` operators (any
+streaming relation, sessionizer output included) run through one
+micro-batch driver,
+``_drive``, with two on-disk state layouts — a FOLD of state tables
+rewritten every batch, or an APPEND of per-batch outputs — and return
+a pinned batch DataFrame (see ``_drive`` for the result and
+empty-source contracts). It is the same code shape a cluster
+deployment points at kafka + a Delta sink.
 """
 
 from __future__ import annotations
 
 import contextlib
+import os
+import shutil
+import time
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 #: the two state store providers Spark ships. The default
 #: (HDFS-backed) keeps every store's working set on the executor HEAP —
@@ -157,20 +168,36 @@ def streaming_dedup(
     return events.withWatermark(ts_col, watermark).dropDuplicates(subset=keys)
 
 
+def _drain(writer, feeds=(), progress_out: Optional[list] = None):
+    """Start ``writer``'s query, drain it and stop it (also when a batch
+    or a feed raises): the one place a query of this module runs.
+    ``feeds`` are callables that make more source data available; the
+    query is drained again after each one. ``progress_out``, when a
+    list, receives the engine's per-batch progress rows, harvested
+    before ``stop()``. Returns the query."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+        for feed in feeds:
+            feed()
+            q.processAllAvailable()
+        if progress_out is not None:
+            progress_out.extend(q.recentProgress or [])
+    finally:
+        q.stop()
+    return q
+
+
 def run_stream_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
     """Drive a bounded stream to completion into an in-memory table and
     return the query handle (caller reads ``spark.sql(f"SELECT * FROM
     {name}")``). Test helper; production sinks are files/kafka."""
-    q = (
+    return _drain(
         stream_df.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(name)
         .trigger(availableNow=True)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
-    return q
 
 
 # ---------------------------------------------------------------------------
@@ -285,69 +312,13 @@ def sessionize_stateful(
     )
 
 
-def foreachbatch_upsert(
-    stream_df: DataFrame,
-    keys: List[str],
-    version: str,
-    state_base: str,
-    tiebreak: Optional[str] = None,
-) -> DataFrame:
-    """Maintain a latest-record-per-key state table on disk across
-    micro-batches via foreachBatch merge — the jar-free stand-in for a
-    Delta MERGE sink. Each batch unions the previous state and keeps
-    the top-ranked row per key (version DESC, tiebreak DESC); writes
-    alternate between two directories (write-new-then-swap, the
-    atomic-publish contract). Latest-wins with a total tie-break is
-    merge-order independent, so the final state equals the batch
-    ranking whatever the trigger boundaries.
-
-    Returns the final state as a batch DataFrame."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
-    ckpt = state_base + "_ckpt"
-    for d in (state_base + "_a", state_base + "_b", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    last_dir: List[str] = []
-    order = [F.desc(version)] + ([F.desc(tiebreak)] if tiebreak else [])
-
-    def merge_batch(batch_df, batch_id: int):
-        prev = state_base + ("_b" if batch_id % 2 else "_a")
-        nxt = state_base + ("_a" if batch_id % 2 else "_b")
-        merged = batch_df
-        if os.path.isdir(prev):
-            merged = batch_df.unionByName(batch_df.sparkSession.read.parquet(prev))
-        w = W.partitionBy(*keys).orderBy(*order)
-        latest = (
-            merged.withColumn("__rn__", F.row_number().over(w))
-            .filter(F.col("__rn__") == 1)
-            .drop("__rn__")
-        )
-        latest.write.mode("overwrite").parquet(nxt)
-        last_dir.append(nxt)
-
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    if not last_dir:
-        raise RuntimeError("foreachbatch_upsert: no micro-batch executed")
-    return stream_df.sparkSession.read.parquet(last_dir[-1])
-
-
+# ---------------------------------------------------------------------------
+# foreachBatch operators: one micro-batch driver, two state layouts
+# ---------------------------------------------------------------------------
 def _state_table_metrics(state_dir: str) -> tuple:
     """(row count, byte size) of a parquet state table, read from file
     footers driver-side — no Spark job, so soak instrumentation does
     not perturb the batch walls it measures."""
-    import os
-
     import pyarrow.parquet as pq
 
     rows, size = 0, 0
@@ -359,11 +330,202 @@ def _state_table_metrics(state_dir: str) -> tuple:
     return rows, size
 
 
+def _drive(
+    stream_df: DataFrame,
+    state_base: str,
+    batch_fn,
+    read_back,
+    clear,
+    metrics: Optional[list] = None,
+    output_mode: Optional[str] = None,
+    feeds=(),
+    progress_out: Optional[list] = None,
+) -> DataFrame:
+    """The micro-batch driver behind every ``foreachbatch_*`` operator.
+
+    Clears ``<state_base>_ckpt`` and the ``clear`` dirs, runs
+    ``batch_fn(batch_df, batch_id) -> [dirs written]`` on every
+    micro-batch (``availableNow``, or the default trigger when ``feeds``
+    are given — see ``foreachbatch_update_latest``) and returns
+    ``read_back(spark)``. Exactly-once comes from the checkpointed
+    source offsets plus per-batch writes that overwrite on retry. The
+    layouts: ``_fold`` rewrites a set of state tables every batch,
+    ``_append`` writes each batch's output to ``<state_base>_out/batch=N``.
+
+    Result contract: the result is PINNED (eager ``localCheckpoint``):
+    a later call with the same ``state_base`` rmtree's these dirs, which
+    would silently break a still-held lazy reader of them.
+
+    Empty-source contract: when no micro-batch ran, ``batch_fn`` runs
+    once on an empty static batch (id 0) before the read-back, so the
+    result has 0 rows and the schema a non-empty run has.
+
+    ``metrics``: when a list is passed, one dict per micro-batch is
+    appended — {batch_id, wall_sec, state_rows, state_bytes}, summed
+    over the dirs the batch wrote and read from their parquet FOOTERS
+    (driver-side, no extra Spark job), the soak-test evidence that
+    state stays flat across triggers."""
+    spark = stream_df.sparkSession
+    ckpt = state_base + "_ckpt"
+    for d in (*clear, ckpt):
+        shutil.rmtree(d, ignore_errors=True)
+    ran: List[int] = []
+
+    def run(batch_df, batch_id: int) -> None:
+        t0 = time.time()
+        written = batch_fn(batch_df, batch_id)
+        ran.append(batch_id)
+        if metrics is not None:
+            tables = [_state_table_metrics(d) for d in written]
+            metrics.append(
+                {
+                    "batch_id": batch_id,
+                    "wall_sec": round(time.time() - t0, 3),
+                    "state_rows": sum(rows for rows, _ in tables),
+                    "state_bytes": sum(size for _, size in tables),
+                }
+            )
+
+    writer = stream_df.writeStream
+    if output_mode:
+        writer = writer.outputMode(output_mode)
+    writer = writer.foreachBatch(run).option("checkpointLocation", ckpt)
+    if not feeds:
+        writer = writer.trigger(availableNow=True)
+    _drain(writer, feeds, progress_out)
+    if not ran:
+        batch_fn(spark.createDataFrame([], stream_df.schema), 0)
+    return read_back(spark).localCheckpoint(eager=True)
+
+
+def _fold(
+    stream_df: DataFrame, state_base: str, step, metrics: Optional[list] = None
+) -> DataFrame:
+    """Fold layout: ``step(batch_df, prev) -> (result, *carried)`` gets
+    the previous batch's state tables read back (None on the first
+    batch) and returns the new ones. Writes alternate between
+    ``<state_base>_a`` and ``_b`` (write-new-then-swap, the
+    atomic-publish contract): a batch reads the set the previous batch
+    published and writes the other. Returns the final result table."""
+    dirs = (state_base + "_a", state_base + "_b")
+    published: List[List[str]] = []
+
+    def fold_batch(batch_df, batch_id: int) -> List[str]:
+        spark = batch_df.sparkSession
+        prev = None
+        if published:
+            prev = tuple(spark.read.parquet(p) for p in published[-1])
+        nxt = dirs[len(published) % 2]
+        tables = step(batch_df, prev)
+        paths = [f"{nxt}/{i}" for i in range(len(tables))]
+        for table, path in zip(tables, paths):
+            table.write.mode("overwrite").parquet(path)
+        published.append(paths)
+        return paths
+
+    return _drive(
+        stream_df,
+        state_base,
+        fold_batch,
+        lambda spark: spark.read.parquet(published[-1][0]),
+        dirs,
+        metrics=metrics,
+    )
+
+
+def _append(
+    stream_df: DataFrame,
+    state_base: str,
+    emit,
+    finish=None,
+    clear=(),
+    output_mode: Optional[str] = None,
+    feeds=(),
+    progress_out: Optional[list] = None,
+) -> DataFrame:
+    """Append layout: ``emit(batch_df, batch_id) -> DataFrame`` is
+    written to its own ``<state_base>_out/batch=N`` subdir (overwritten
+    on retry, so idempotent per batch id). Nothing is merged, so the
+    sink scales with output volume only. Returns ``finish(outputs)``
+    over the union of every batch's output, which carries the
+    ``batch`` id column; without ``finish`` that column is dropped.
+    ``clear`` names further dirs the operator keeps its own state in."""
+    out = state_base + "_out"
+
+    def append_batch(batch_df, batch_id: int) -> List[str]:
+        path = f"{out}/batch={batch_id}"
+        # REBALANCE before the per-batch write: the emitted relation
+        # inherits its producer's partitioning (e.g. a probe join's
+        # shuffle-partition many near-empty slices), and writing it
+        # as-is emits one tiny file per slice per batch — the
+        # small-files trap twice over (slow batch commit now, slow
+        # union read-back later). The AQE rebalance sizes the write
+        # from real bytes: one file for a demo-scale batch,
+        # advisory-sized files at volume (guide §6; measured on st27's
+        # sibling sink: 40% off the stream wall vs the unhinted write,
+        # while coalesce(1) instead SERIALIZED the upstream stateful
+        # stage — 2x slower; in update mode coalesce(1) pulls the whole
+        # stateful aggregation into one task). Update-mode emissions
+        # are the CHANGED keys only, so a demo batch lands in one file
+        # while a 100 TB batch still writes advisory-sized files.
+        emit(batch_df, batch_id).hint("rebalance").write.mode("overwrite").parquet(path)
+        return [path]
+
+    def read_back(spark: SparkSession) -> DataFrame:
+        # `batch=N` subdirs surface as a partition column on read-back —
+        # an implementation detail of the idempotent layout, not output
+        outputs = spark.read.parquet(out)
+        return finish(outputs) if finish else outputs.drop("batch")
+
+    return _drive(
+        stream_df,
+        state_base,
+        append_batch,
+        read_back,
+        (out, *clear),
+        output_mode=output_mode,
+        feeds=feeds,
+        progress_out=progress_out,
+    )
+
+
+def foreachbatch_upsert(
+    stream_df: DataFrame,
+    keys: List[str],
+    version: str,
+    state_base: str,
+    tiebreak: Optional[str] = None,
+) -> DataFrame:
+    """Maintain a latest-record-per-key state table on disk across
+    micro-batches via foreachBatch merge — the jar-free stand-in for a
+    Delta MERGE sink. Each batch unions the previous state and keeps
+    the top-ranked row per key (version DESC, tiebreak DESC) — the fold
+    layout. Latest-wins with a total tie-break is merge-order
+    independent, so the final state equals the batch ranking whatever
+    the trigger boundaries.
+
+    Returns the final state as a batch DataFrame."""
+    order = [F.desc(version)] + ([F.desc(tiebreak)] if tiebreak else [])
+    w = W.partitionBy(*keys).orderBy(*order)
+
+    def step(batch_df, prev):
+        merged = batch_df if prev is None else batch_df.unionByName(prev[0])
+        latest = (
+            merged.withColumn("__rn__", F.row_number().over(w))
+            .filter(F.col("__rn__") == 1)
+            .drop("__rn__")
+        )
+        return (latest,)
+
+    return _fold(stream_df, state_base, step)
+
+
 def foreachbatch_merge_counts(
     stream_df: DataFrame,
     keys: List[str],
     state_base: str,
     metrics: Optional[list] = None,
+    value_col: Optional[str] = None,
 ) -> DataFrame:
     """Maintain EXACT per-key counts across micro-batches: each batch
     pre-aggregates its own slice (the map-side combine of a streaming
@@ -371,132 +533,33 @@ def foreachbatch_merge_counts(
     addition is associative and commutative, so the final counts equal
     the batch GROUP BY whatever the trigger boundaries — the streaming
     twin of a count rollup, maintained incrementally the way a
-    production ingest keeps daily counters. State publishes via the
-    same alternating-directory atomic-swap contract as
-    ``foreachbatch_upsert``; state size is O(|keys|), not O(stream).
-
-    ``metrics``: when a list is passed, one dict per micro-batch is
-    appended — {batch_id, wall_sec, state_rows, state_bytes} — read
-    from the written state table's parquet FOOTERS (driver-side, no
-    extra Spark job), the soak-test evidence that state stays flat
-    across triggers.
-
-    Returns the final counts as a batch DataFrame (columns: keys + n)."""
-    import os
-    import shutil
-    import time
-
-    from pyspark.sql import functions as F
-
-    ckpt = state_base + "_ckpt"
-    for d in (state_base + "_a", state_base + "_b", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    last_dir: List[str] = []
-
-    def merge_batch(batch_df, batch_id: int):
-        t0 = time.time()
-        prev = state_base + ("_b" if batch_id % 2 else "_a")
-        nxt = state_base + ("_a" if batch_id % 2 else "_b")
-        part = batch_df.groupBy(*keys).agg(F.count("*").alias("n"))
-        if os.path.isdir(prev):
-            part = part.unionByName(batch_df.sparkSession.read.parquet(prev))
-        merged = part.groupBy(*keys).agg(F.sum("n").alias("n"))
-        merged.write.mode("overwrite").parquet(nxt)
-        last_dir.append(nxt)
-        if metrics is not None:
-            rows, size = _state_table_metrics(nxt)
-            metrics.append(
-                {
-                    "batch_id": batch_id,
-                    "wall_sec": round(time.time() - t0, 3),
-                    "state_rows": rows,
-                    "state_bytes": size,
-                }
-            )
-
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    if not last_dir:
-        raise RuntimeError("foreachbatch_merge_counts: no micro-batch executed")
-    # pin the result: a subsequent call with the same state_base rmtree's
-    # these dirs, which would silently break a still-held lazy reader
-    return stream_df.sparkSession.read.parquet(last_dir[-1]).localCheckpoint(eager=True)
-
-
-def foreachbatch_merge_sums(
-    stream_df: DataFrame,
-    keys: List[str],
-    value_col: str,
-    state_base: str,
-    metrics: Optional[list] = None,
-) -> DataFrame:
-    """Maintain EXACT per-key (sum, count) pairs across micro-batches —
-    ``foreachbatch_merge_counts`` generalized to an integer value
-    column: each batch pre-aggregates its own slice and sum-merges it
-    with the previous state table. BIGINT addition is associative and
-    commutative, so the final sums equal the batch GROUP BY whatever
-    the trigger boundaries. State publishes via the same
-    alternating-directory atomic-swap contract; state size is
+    production ingest keeps daily counters. State publishes through
+    the fold layout's alternating-directory atomic swap; state size is
     O(|keys|), not O(stream) — the bounded-state property st22
-    measures. ``metrics``: same per-batch soak instrumentation as
-    ``foreachbatch_merge_counts``.
+    measures.
 
-    Returns the final state as a batch DataFrame (columns: keys + s + n)."""
-    import os
-    import shutil
-    import time
+    ``value_col``: an integer column to keep an exact BIGINT sum ``s``
+    of alongside the count — per-key (sum, count) pairs, merged the
+    same way. ``metrics``: the driver's per-batch soak instrumentation
+    (see ``_drive``).
 
-    from pyspark.sql import functions as F
+    Returns the final state as a batch DataFrame (columns: keys + n,
+    or keys + s + n with ``value_col``)."""
+    sums = [F.sum(value_col).cast("bigint").alias("s")] if value_col else []
+    cols = (["s"] if value_col else []) + ["n"]
 
-    ckpt = state_base + "_ckpt"
-    for d in (state_base + "_a", state_base + "_b", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    last_dir: List[str] = []
-
-    def merge_batch(batch_df, batch_id: int):
-        t0 = time.time()
-        prev = state_base + ("_b" if batch_id % 2 else "_a")
-        nxt = state_base + ("_a" if batch_id % 2 else "_b")
+    def step(batch_df, prev):
         part = batch_df.groupBy(*keys).agg(
-            F.sum(value_col).cast("bigint").alias("s"),
-            F.count("*").cast("bigint").alias("n"),
+            *sums, F.count("*").cast("bigint").alias("n")
         )
-        if os.path.isdir(prev):
-            part = part.unionByName(batch_df.sparkSession.read.parquet(prev))
+        if prev is not None:
+            part = part.unionByName(prev[0])
         merged = part.groupBy(*keys).agg(
-            F.sum("s").cast("bigint").alias("s"),
-            F.sum("n").cast("bigint").alias("n"),
+            *[F.sum(c).cast("bigint").alias(c) for c in cols]
         )
-        merged.write.mode("overwrite").parquet(nxt)
-        last_dir.append(nxt)
-        if metrics is not None:
-            rows, size = _state_table_metrics(nxt)
-            metrics.append(
-                {
-                    "batch_id": batch_id,
-                    "wall_sec": round(time.time() - t0, 3),
-                    "state_rows": rows,
-                    "state_bytes": size,
-                }
-            )
+        return (merged,)
 
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    if not last_dir:
-        raise RuntimeError("foreachbatch_merge_sums: no micro-batch executed")
-    return stream_df.sparkSession.read.parquet(last_dir[-1]).localCheckpoint(eager=True)
+    return _fold(stream_df, state_base, step, metrics=metrics)
 
 
 def foreachbatch_append(
@@ -506,61 +569,20 @@ def foreachbatch_append(
     progress_out: Optional[list] = None,
 ) -> DataFrame:
     """Apply ``transform(batch_df) -> DataFrame`` to every micro-batch
-    and APPEND the result to a parquet state dir — the sink shape for
-    per-record/per-group work with NO cross-batch state (each input
-    row's verdict depends only on its own batch plus broadcast
-    statics). Unlike foreachbatch_upsert there is nothing to merge, so
-    the sink scales with output volume only; exactly-once comes from
-    the checkpointed source offsets plus append idempotence per batch
-    id (each batch writes its own subdirectory, pre-cleaned on retry).
+    and APPEND the result to a parquet state dir (the append layout) —
+    the sink shape for per-record/per-group work with NO cross-batch
+    state (each input row's verdict depends only on its own batch plus
+    broadcast statics). Unlike foreachbatch_upsert there is nothing to
+    merge, so the sink scales with output volume only.
+    ``progress_out``: see ``_drain`` (st29's provider-proof metrics).
 
     Returns the union of all batch outputs as a batch DataFrame."""
-    import shutil
-
-    ckpt = state_base + "_ckpt"
-    out = state_base + "_out"
-    for d in (ckpt, out):
-        shutil.rmtree(d, ignore_errors=True)
-
-    def run_batch(batch_df, batch_id: int):
-        # REBALANCE before the per-batch write: the verdict relation
-        # inherits the probe join's partitioning (shuffle-partition
-        # many near-empty slices), and writing it as-is emits one tiny
-        # file per slice per batch — the small-files trap twice over
-        # (slow batch commit now, slow union read-back later). The
-        # AQE rebalance sizes the write from real bytes: one file for
-        # a demo-scale batch, advisory-sized files at volume (guide
-        # §6; measured on st27's sibling sink: 40% off the stream
-        # wall vs the unhinted write, while coalesce(1) instead
-        # SERIALIZED the upstream stateful stage — 2x slower).
-        transform(batch_df).hint("rebalance").write.mode("overwrite").parquet(
-            f"{out}/batch={batch_id}"
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
+    return _append(
+        stream_df,
+        state_base,
+        lambda batch_df, _: transform(batch_df),
+        progress_out=progress_out,
     )
-    q.processAllAvailable()
-    if progress_out is not None:
-        # caller wants the engine-reported per-batch progress (e.g.
-        # st29's provider-proof metrics) — harvest before stop()
-        progress_out.extend(q.recentProgress or [])
-    q.stop()
-    spark = stream_df.sparkSession
-    import glob as _glob
-    import os as _os
-
-    if not _glob.glob(_os.path.join(out, "batch=*")):
-        # no batches ran (empty source): derive the output schema by
-        # applying the transform to an empty static batch
-        empty = transform(spark.createDataFrame([], stream_df.schema))
-        return spark.createDataFrame([], empty.schema)
-    # `batch=N` subdirs surface as a partition column on read-back —
-    # an implementation detail of the idempotent layout, not output
-    return spark.read.parquet(out).drop("batch")
 
 
 def foreachbatch_update_latest(
@@ -568,15 +590,13 @@ def foreachbatch_update_latest(
     keys: List[str],
     state_base: str,
     feeds=(),
-):
+) -> DataFrame:
     """UPDATE-output-mode sink for streaming aggregations: each
     micro-batch emits only the keys whose aggregate CHANGED, so the
     current value of a key is its latest emission. Each batch appends
-    its emissions under an idempotent ``batch=N`` subdir (exactly-once
-    from checkpointed offsets + per-batch-id overwrite, the
-    foreachbatch_append layout) and the read-back keeps the
-    max-batch-id row per key — merge-order independent because batch
-    ids are totally ordered.
+    its emissions under an idempotent ``batch=N`` subdir (the append
+    layout) and the read-back keeps the max-batch-id row per key —
+    merge-order independent because batch ids are totally ordered.
 
     ``feeds``: optional callables that make MORE source data available
     (e.g. copy the next arrival-chunk file into the source dir). When
@@ -590,82 +610,24 @@ def foreachbatch_update_latest(
     without empty commit batches between file batches the effective
     watermark lags one extra batch.)
 
-    Returns ``(final state DataFrame, rows dropped by watermark)`` —
-    the engine-reported numRowsDroppedByWatermark total across
-    batches, so callers can verify drop accounting against a batch
-    prediction (st27's value oracle)."""
-    import shutil
+    Returns the final state as a batch DataFrame."""
+    w = W.partitionBy(*keys).orderBy(F.col("batch").desc())
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
-    ckpt = state_base + "_ckpt"
-    out = state_base + "_out"
-    for d in (ckpt, out):
-        shutil.rmtree(d, ignore_errors=True)
-
-    def run_batch(batch_df, batch_id: int):
-        # REBALANCE the update emission before writing (same
-        # small-files rationale as foreachbatch_append's sink, and
-        # the same measured trap: coalesce(1) here pulls the whole
-        # stateful aggregation into one task). Update-mode emissions
-        # are the CHANGED keys only, so a demo batch lands in one
-        # file while a 100 TB batch still writes advisory-sized files.
-        batch_df.hint("rebalance").write.mode("overwrite").parquet(
-            f"{out}/batch={batch_id}"
+    def latest(emitted: DataFrame) -> DataFrame:
+        return (
+            emitted.withColumn("__rn__", F.row_number().over(w))
+            .filter(F.col("__rn__") == 1)
+            .drop("__rn__", "batch")
         )
 
-    writer = (
-        stream_df.writeStream.outputMode("update")
-        .foreachBatch(run_batch)
-        .option("checkpointLocation", ckpt)
+    return _append(
+        stream_df,
+        state_base,
+        lambda batch_df, _: batch_df,
+        finish=latest,
+        output_mode="update",
+        feeds=feeds,
     )
-    if not feeds:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    # recentProgress retains only the last numRecentProgressUpdates
-    # entries (default 100): summing it ONCE at the end silently
-    # under-counts drops past that many batches. Harvesting after
-    # EVERY drain with a seen-batchId set keeps the total exact for
-    # any number of feeds (each drain adds at most a data batch plus
-    # a no-data commit batch, far under the retention window).
-    seen_batches: set = set()
-    dropped = 0
-
-    def _harvest() -> None:
-        nonlocal dropped
-        for p in q.recentProgress or []:
-            bid = p["batchId"]
-            if bid in seen_batches:
-                continue
-            seen_batches.add(bid)
-            for so in p.get("stateOperators") or []:
-                dropped += so["numRowsDroppedByWatermark"]
-
-    q.processAllAvailable()
-    _harvest()
-    for feed in feeds:
-        feed()
-        q.processAllAvailable()
-        _harvest()
-    q.stop()
-    import glob as _glob
-    import os as _os
-
-    spark = stream_df.sparkSession
-    if not _glob.glob(_os.path.join(out, "batch=*")):
-        # a source that never yields a batch writes no batch=N subdir;
-        # read.parquet over the bare dir would raise. The empty state
-        # carries the stream's own (aggregation-output) schema.
-        return spark.createDataFrame([], stream_df.schema), dropped
-    emitted = spark.read.parquet(out)
-    w = W.partitionBy(*keys).orderBy(F.col("batch").desc())
-    latest = (
-        emitted.withColumn("__rn__", F.row_number().over(w))
-        .filter(F.col("__rn__") == 1)
-        .drop("__rn__", "batch")
-    )
-    return latest, dropped
 
 
 def foreachbatch_scd2(
@@ -695,21 +657,8 @@ def foreachbatch_scd2(
     and would interleave wrongly, exactly like any CDC applier.
 
     Returns the final history as a batch DataFrame."""
-    import os
-    import shutil
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
-    ckpt = state_base + "_ckpt"
-    for d in (state_base + "_a", state_base + "_b", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    last_dir: List[str] = []
-
-    def merge_batch(batch_df, batch_id: int):
-        spark = batch_df.sparkSession
-        prev = state_base + ("_b" if batch_id % 2 else "_a")
-        nxt = state_base + ("_a" if batch_id % 2 else "_b")
+    def step(batch_df, prev):
         evs = batch_df.select(
             F.col(key).alias("k"),
             F.col(attr).alias("a"),
@@ -718,8 +667,8 @@ def foreachbatch_scd2(
             F.lit(False).alias("is_seed"),
             F.lit(0).cast("bigint").alias("seed_version"),
         )
-        if os.path.isdir(prev):
-            hist = spark.read.parquet(prev)
+        if prev is not None:
+            hist = prev[0]
             closed = hist.filter(F.col("eff_to").isNotNull())
             cur = hist.filter(F.col("eff_to").isNull())
             seeds = cur.select(
@@ -762,22 +711,9 @@ def foreachbatch_scd2(
         out = versioned
         if closed is not None:
             out = closed.unionByName(versioned)
-        out.write.mode("overwrite").parquet(nxt)
-        last_dir.append(nxt)
+        return (out,)
 
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    if not last_dir:
-        raise RuntimeError("foreachbatch_scd2: no micro-batch executed")
-    return stream_df.sparkSession.read.parquet(last_dir[-1]).localCheckpoint(
-        eager=True
-    )
+    return _fold(stream_df, state_base, step)
 
 
 def foreachbatch_first_seen(
@@ -800,22 +736,14 @@ def foreachbatch_first_seen(
     re-write O(registry) every batch (super-linear total, the r12
     stress finding). Verdicts need no merged-registry re-read either: a
     batch doc's gram is novel iff it is absent from the prior registry
-    AND this doc is the batch-minimum id for it.
+    AND this doc is the batch-minimum id for it. Verdicts go out
+    through the append layout.
 
     ``make_grams(batch_df) -> DataFrame[(id, g)]`` distinct grams/doc.
     Returns the union of all batch verdicts as a batch DataFrame."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    ckpt = state_base + "_ckpt"
-    out = state_base + "_out"
     reg = state_base + "_reg"
-    for d in (reg, ckpt, out):
-        shutil.rmtree(d, ignore_errors=True)
 
-    def merge_batch(batch_df, batch_id: int):
+    def verdicts(batch_df, batch_id: int) -> DataFrame:
         spark = batch_df.sparkSession
         grams = make_grams(batch_df)
         batch_first = grams.groupBy("g").agg(F.min("id").alias("first_id"))
@@ -832,7 +760,7 @@ def foreachbatch_first_seen(
             new = batch_first
         new.write.mode("overwrite").parquet(f"{reg}/gen={batch_id}")
         new_back = spark.read.parquet(f"{reg}/gen={batch_id}")
-        verdicts = (
+        return (
             grams.join(new_back, "g", "left")
             .groupBy("id")
             .agg(
@@ -842,17 +770,8 @@ def foreachbatch_first_seen(
                 .alias("n_novel"),
             )
         )
-        verdicts.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
 
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return stream_df.sparkSession.read.parquet(out).drop("batch")
+    return _append(stream_df, state_base, verdicts, clear=(reg,))
 
 
 def foreachbatch_markov(
@@ -878,25 +797,8 @@ def foreachbatch_markov(
 
     Returns the final transition table (src, dst, n_trans) as a batch
     DataFrame."""
-    import os
-    import shutil
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
-    ckpt = state_base + "_ckpt"
-    for d in (
-        state_base + "_ca", state_base + "_cb",
-        state_base + "_la", state_base + "_lb", ckpt,
-    ):
-        shutil.rmtree(d, ignore_errors=True)
-
-    def merge_batch(batch_df, batch_id: int):
-        spark = batch_df.sparkSession
-        cprev = state_base + ("_cb" if batch_id % 2 else "_ca")
-        cnxt = state_base + ("_ca" if batch_id % 2 else "_cb")
-        lprev = state_base + ("_lb" if batch_id % 2 else "_la")
-        lnxt = state_base + ("_la" if batch_id % 2 else "_lb")
+    def step(batch_df, prev):
         evs = batch_df.select(
             F.col(entity).alias("k"),
             F.col(state).alias("s"),
@@ -904,8 +806,8 @@ def foreachbatch_markov(
             F.col(tiebreak).alias("tb"),
         )
         untouched = None
-        if os.path.isdir(lprev):
-            prev_last = spark.read.parquet(lprev)
+        if prev is not None:
+            prev_last = prev[1]
             touched = evs.select("k").distinct()
             seq = evs.unionByName(prev_last.join(touched, "k", "left_semi"))
             untouched = prev_last.join(touched, "k", "left_anti")
@@ -918,13 +820,12 @@ def foreachbatch_markov(
             .groupBy(F.col("s").alias("src"), "dst")
             .agg(F.count("*").cast("bigint").alias("n"))
         )
-        if os.path.isdir(cprev):
+        if prev is not None:
             edges = (
-                edges.unionByName(spark.read.parquet(cprev))
+                edges.unionByName(prev[0])
                 .groupBy("src", "dst")
                 .agg(F.sum("n").cast("bigint").alias("n"))
             )
-        edges.write.mode("overwrite").parquet(cnxt)
         # one surviving row per touched entity: the (t, tb)-max event;
         # untouched entities carry their stored row forward
         wl = W.partitionBy("k").orderBy(F.col("t").desc(), F.col("tb").desc())
@@ -935,21 +836,10 @@ def foreachbatch_markov(
         )
         if untouched is not None:
             last = last.unionByName(untouched)
-        last.write.mode("overwrite").parquet(lnxt)
-        last_dir[0] = cnxt
+        return edges, last
 
-    last_dir = [state_base + "_ca"]
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return (
-        stream_df.sparkSession.read.parquet(last_dir[0])
-        .select("src", "dst", F.col("n").alias("n_trans"))
+    return _fold(stream_df, state_base, step).select(
+        "src", "dst", F.col("n").alias("n_trans")
     )
 
 
@@ -976,34 +866,23 @@ def foreachbatch_funnel(
     joined to the prior state; the state rewrite is one row per entity
     (st14's compaction shape). Returns the final state as a batch
     DataFrame (columns: entity, t1..tn)."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    ckpt = state_base + "_ckpt"
-    for d in (state_base + "_a", state_base + "_b", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
     tcols = [f"t{i + 1}" for i in range(len(steps))]
 
-    def merge_batch(batch_df, batch_id: int):
-        spark = batch_df.sparkSession
-        prev = state_base + ("_b" if batch_id % 2 else "_a")
-        nxt = state_base + ("_a" if batch_id % 2 else "_b")
+    def step(batch_df, prev):
         evs = batch_df.select(
             F.col(entity).alias("k"),
             F.col(type_col).alias("s"),
             F.col(ts_col).alias("t"),
         )
-        if os.path.isdir(prev):
-            st = spark.read.parquet(prev)
+        if prev is not None:
+            st = prev[0]
         else:
             st = evs.select("k").limit(0)
             for c in tcols:
                 st = st.withColumn(c, F.col("k").cast("timestamp"))
-        for i, step in enumerate(steps):
+        for i, name in enumerate(steps):
             tc = tcols[i]
-            cand = evs.filter(F.col("s") == step)
+            cand = evs.filter(F.col("s") == name)
             if i == 0:
                 got = cand.groupBy("k").agg(F.min("t").alias("__new"))
                 st = st.join(got, "k", "full_outer")
@@ -1020,21 +899,9 @@ def foreachbatch_funnel(
             st = st.withColumn(tc, F.coalesce(F.col(tc), F.col("__new"))).drop(
                 "__new"
             )
-        st.select("k", *tcols).write.mode("overwrite").parquet(nxt)
-        last_dir[0] = nxt
+        return (st.select("k", *tcols),)
 
-    last_dir = [state_base + "_a"]
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return stream_df.sparkSession.read.parquet(last_dir[0]).localCheckpoint(
-        eager=True
-    )
+    return _fold(stream_df, state_base, step)
 
 
 def foreachbatch_streaks(
@@ -1061,20 +928,8 @@ def foreachbatch_streaks(
 
     Returns the final per-entity state (entity, last_day, cur_run,
     best_run) as a batch DataFrame."""
-    import os
-    import shutil
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
-    ckpt = state_base + "_ckpt"
-    for d in (state_base + "_sa", state_base + "_sb", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    def merge_batch(batch_df, batch_id: int):
-        spark = batch_df.sparkSession
-        sprev = state_base + ("_sb" if batch_id % 2 else "_sa")
-        snxt = state_base + ("_sa" if batch_id % 2 else "_sb")
+    def step(batch_df, prev):
         days = (
             batch_df.select(
                 F.col(entity).alias("k"),
@@ -1087,11 +942,10 @@ def foreachbatch_streaks(
         )
         untouched = None
         carried = None
-        if os.path.isdir(sprev):
-            prev = spark.read.parquet(sprev)
+        if prev is not None:
             touched = days.select("k").distinct()
-            carried = prev.join(touched, "k", "left_semi")
-            untouched = prev.join(touched, "k", "left_anti")
+            carried = prev[0].join(touched, "k", "left_semi")
+            untouched = prev[0].join(touched, "k", "left_anti")
             seeds = carried.select(
                 "k", F.col("last_day").alias("day"), F.lit(1).alias("is_seed")
             )
@@ -1148,18 +1002,8 @@ def foreachbatch_streaks(
             state = state.unionByName(
                 untouched.select("k", "last_day", "cur_run", "best_run")
             )
-        state.write.mode("overwrite").parquet(snxt)
-        last_dir[0] = snxt
+        return (state,)
 
-    last_dir = [state_base + "_sa"]
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return stream_df.sparkSession.read.parquet(last_dir[0]).select(
+    return _fold(stream_df, state_base, step).select(
         F.col("k").alias(entity), "last_day", "cur_run", "best_run"
     )

@@ -157,3 +157,30 @@ def test_sessions_are_built_only_by_get_spark():
         isinstance(node, ast.Call) and getattr(node.func, "id", None) == "get_spark"
         for node in ast.walk(bench)
     )
+
+
+def test_stream_queries_run_only_through_the_stream_driver():
+    """Every streaming query is built in streaming/stream.py, and every
+    foreachBatch query in its one micro-batch driver (``_drive``), which
+    owns the state-dir clearing, the drain, the empty-source rule and
+    the pinned read-back: no other engine module uses .writeStream, and
+    stream.py calls foreachBatch in no other function."""
+    stream_py = os.path.join(REPO, "ankaflow_spark", "streaming", "stream.py")
+    offenders, in_driver = [], 0
+    for path, tree in _engine_modules():
+        if path != stream_py:
+            offenders += [
+                f"{path}:{node.lineno} .writeStream"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Attribute) and node.attr == "writeStream"
+            ]
+            continue
+        for top in tree.body:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Attribute) and node.attr == "foreachBatch":
+                    if getattr(top, "name", None) == "_drive":
+                        in_driver += 1
+                    else:
+                        offenders.append(f"{path}:{node.lineno} foreachBatch")
+    assert not offenders, offenders
+    assert in_driver == 1

@@ -15,15 +15,17 @@ maxFilesPerTrigger=1 (>= 20 real micro-batches), and assert:
 
 Covers every distinct state mechanism behind st21-st25: native
 session_window state (st21), applyInPandasWithState sessionization
-(st22), foreachbatch_merge_sums (st23's lattice), and
-foreachbatch_merge_counts (st24/st25's counter lattices).
+(st22), foreachbatch_merge_counts with ``value_col`` (st23's lattice of
+per-key (sum, count) pairs), and foreachbatch_merge_counts (st24/st25's
+counter lattices).
+
+Staged copies and state dirs live under pytest's per-session temp
+dirs, so two concurrent runs never share them.
 
 Run at a different scale with SPARK_GRAFT_SOAK_SF_DIR.
 """
 
-import hashlib
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -40,24 +42,21 @@ pytestmark = [
 ]
 
 
-def _stage_n_files(spark, table: str, range_col: str):
+@pytest.fixture(scope="session")
+def soak_dir(tmp_path_factory):
+    return tmp_path_factory.mktemp("soak")
+
+
+def _stage_n_files(spark, soak_dir, table: str, range_col: str):
     """Stage a table as N_FILES range-partitioned parquet files so a
     maxFilesPerTrigger=1 reader executes N_FILES real micro-batches in
-    arrival order (ascending range_col mimics a time-sliced ingest)."""
+    arrival order (ascending range_col mimics a time-sliced ingest).
+    Staged once per test session, under the session's temp dir."""
     from ankaflow_spark.operators.tables import load_tables
 
-    t = load_tables(spark, SOAK_SF_DIR)
-    staged = os.path.join(
-        tempfile.gettempdir(),
-        "ankaflow_soak_"
-        + hashlib.md5(f"{SOAK_SF_DIR}:{table}:{N_FILES}".encode()).hexdigest()[:10],
-    )
-    success = os.path.join(staged, "_SUCCESS")
-    src = os.path.join(SOAK_SF_DIR, f"{table}.parquet")
-    fresh = os.path.exists(success) and (
-        os.path.getmtime(success) >= os.path.getmtime(src)
-    )
-    if not fresh:
+    staged = str(soak_dir / f"{table}_{N_FILES}")
+    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
+        t = load_tables(spark, SOAK_SF_DIR)
         t[table].repartitionByRange(N_FILES, range_col).write.mode(
             "overwrite"
         ).parquet(staged)
@@ -110,7 +109,7 @@ def _assert_wall_flat(walls, label):
 
 
 @pytest.mark.parametrize("provider", [None, "rocksdb"])
-def test_soak_st22_sessionizer_state_bounded(spark, provider):
+def test_soak_st22_sessionizer_state_bounded(spark, soak_dir, provider):
     """applyInPandasWithState gap-closure sessionizer (st22's state):
     state is 3 longs per LIVE KEY — bounded by |users|, flat once every
     user has appeared, regardless of trigger count. Parametrized over
@@ -125,7 +124,7 @@ def test_soak_st22_sessionizer_state_bounded(spark, provider):
         stream_tap,
     )
 
-    staged, schema = _stage_n_files(spark, "events", "ts")
+    staged, schema = _stage_n_files(spark, soak_dir, "events", "ts")
     n_users = spark.read.parquet(staged).select("user_id").distinct().count()
     stream = stream_tap(spark, staged, schema, max_files_per_trigger=1)
     sessions = sessionize_stateful(stream, gap_minutes=30, watermark="3650 days")
@@ -148,7 +147,7 @@ def test_soak_st22_sessionizer_state_bounded(spark, provider):
     globals().setdefault("_SOAK_RESULTS", {})[name] = rows
 
 
-def test_soak_st21_native_session_window_grows(spark):
+def test_soak_st21_native_session_window_grows(spark, soak_dir):
     """CONTRAST (the documented growth class): st21's complete-mode
     session_window keeps EVERY session in the state store, so state
     grows with the stream — the leak shape the bounded family avoids.
@@ -156,7 +155,7 @@ def test_soak_st21_native_session_window_grows(spark):
     bounded-state claims above are being tested against a strawman."""
     from ankaflow_spark.streaming.stream import stream_tap
 
-    staged, schema = _stage_n_files(spark, "events", "ts")
+    staged, schema = _stage_n_files(spark, soak_dir, "events", "ts")
     stream = stream_tap(spark, staged, schema, max_files_per_trigger=1)
     agg = (
         stream.withWatermark("ts", "10 minutes")
@@ -190,6 +189,17 @@ def test_soak_st21_native_session_window_grows(spark):
     globals().setdefault("_SOAK_RESULTS", {})["st21_native_contrast"] = rows
 
 
+#: st25's snap-0 cells: ``snap`` is ``ts >= 2024-01-16``, mid-corpus, and
+#: the stream arrives in time order, so no snap-1 cell can be occupied
+#: before the batch that crosses the split — the early-fill check reads
+#: against the snap-0 half of the lattice (93 of 180 cells at sf0.1).
+_ST25_SNAP0_SQL = (
+    "SELECT COUNT(DISTINCT "
+    "CAST(floor(CAST(value AS DECIMAL(18,6)) * 100) AS BIGINT) div 500) "
+    "FROM events WHERE unix_micros(ts) < 1705363200000000"
+)
+
+
 @pytest.mark.parametrize(
     "name,table,range_col,keys,bound_sql,value_col",
     [
@@ -210,22 +220,24 @@ def test_soak_st21_native_session_window_grows(spark):
     ],
 )
 def test_soak_foreachbatch_state_flat(
-    spark, name, table, range_col, keys, bound_sql, value_col
+    spark, soak_dir, tmp_path, name, table, range_col, keys, bound_sql, value_col
 ):
-    """foreachbatch_merge_counts/_merge_sums (st23/st24/st25's state):
-    the counter lattice is |key combinations| rows — saturates once
-    every cell has been occupied, then stays EXACTLY flat (rows and
-    bytes) for every further trigger."""
+    """foreachbatch_merge_counts (st23/st24/st25's state, st23 with
+    value_col): the counter lattice is |key combinations| rows —
+    saturates once every cell has been occupied, then stays EXACTLY
+    flat (rows and bytes) for every further trigger."""
     from ankaflow_spark.operators.tables import load_tables
     from ankaflow_spark.streaming.stream import (
         foreachbatch_merge_counts,
-        foreachbatch_merge_sums,
         stream_tap,
     )
 
     load_tables(spark, SOAK_SF_DIR)
     lattice_bound = spark.sql(bound_sql).collect()[0][0]
-    staged, schema = _stage_n_files(spark, table, range_col)
+    # the part of the lattice the first batches can reach
+    early_sql = _ST25_SNAP0_SQL if name == "st25_psi_cells" else bound_sql
+    early_bound = spark.sql(early_sql).collect()[0][0]
+    staged, schema = _stage_n_files(spark, soak_dir, table, range_col)
     stream = stream_tap(spark, staged, schema, max_files_per_trigger=1)
     if name == "st23_lattice":
         cells = stream.select(
@@ -249,12 +261,10 @@ def test_soak_foreachbatch_state_flat(
                 "CAST(floor(CAST(value AS DECIMAL(18,6)) * 100) AS BIGINT) div 500"
             ).alias("bin"),
         )
-    base = os.path.join(tempfile.gettempdir(), f"ankaflow_soak_state_{name}")
     metrics: list = []
-    if value_col:
-        foreachbatch_merge_sums(cells, keys, value_col, base, metrics=metrics)
-    else:
-        foreachbatch_merge_counts(cells, keys, base, metrics=metrics)
+    foreachbatch_merge_counts(
+        cells, keys, str(tmp_path / "state"), metrics=metrics, value_col=value_col
+    )
     assert len(metrics) >= MIN_BATCHES
     state = [m["state_rows"] for m in metrics]
     assert max(state) <= lattice_bound, (max(state), lattice_bound)
@@ -266,7 +276,7 @@ def test_soak_foreachbatch_state_flat(
     # touching new cells), NOT per-trigger accumulation — thousands of
     # input rows in the last 5 batches add at most a few per mille of
     # the input in state cells
-    assert state[4] >= 0.6 * lattice_bound, f"lattice fills too late: {state}"
+    assert state[4] >= 0.6 * early_bound, f"lattice fills too late: {state}"
     late_growth = state[-1] - state[-6]
     assert late_growth <= max(5, 0.05 * lattice_bound), (
         f"state still accumulating per trigger near the end: {state}"
