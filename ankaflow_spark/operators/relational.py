@@ -3981,7 +3981,7 @@ def q86(spark: SparkSession, sf_dir: str) -> DataFrame:
 # verdict punch item 4). The battery proves MANUAL skew mitigation
 # (q30's salted agg); this one proves Spark's OWN: a fact whose hot key
 # owns ~50% of all rows (the power-law bot/test-account reality of user
-# data — the stress_skew layout, manufactured deterministically here as
+# data — manufactured deterministically here as
 # user_key := 0 WHEN event_id % 2 = 0 so the DuckDB oracle replays it
 # exactly) sort-merge-joins a per-user profile, and AQE's
 # OptimizeSkewedJoin splits the hot reduce partition into mapper-chunk

@@ -320,9 +320,13 @@ class SparkEngine:
         1. ``Fn.*`` macro expansion to plain Spark SQL expressions.
         2. Quoted stage-name references -> mangled temp-view names.
         3. Light dialect normalization (DuckDB-isms -> Spark).
-        """
-        from .sqlfront.rewrite import parse_pivot_statement, rewrite_sql
 
+        Comments are stripped first (hints kept), so no statement parser
+        below sees them.
+        """
+        from .sqlfront.rewrite import parse_pivot_statement, rewrite_sql, strip_comments
+
+        query = strip_comments(query)
         summ = re.match(r"(?is)^\s*SUMMARIZE\s+(.+?)\s*;?\s*$", query)
         if summ is not None:
             return self._run_summarize(summ.group(1))
@@ -437,18 +441,10 @@ class SparkEngine:
         import re as _re
 
         from .operators.asof import asof_join_full
-        from .sqlfront.rewrite import _in_literal
+        from .sqlfront.rewrite import _map_nonliteral
 
         def sub_outside_literals(pattern, repl: str, s: str) -> str:
-            out, last = [], 0
-            for m in pattern.finditer(s):
-                if _in_literal(s, m.start()):
-                    continue
-                out.append(s[last : m.start()])
-                out.append(repl)
-                last = m.end()
-            out.append(s[last:])
-            return "".join(out)
+            return _map_nonliteral(s, lambda code: pattern.sub(lambda _: repl, code))
 
         def side(term):
             src, is_sub = term

@@ -13,48 +13,151 @@ Catalyst do all relational optimization. Rewrites:
    division, ``::TYPE`` casts are Spark-native already in 4.x).
 
 No external SQL parser is available in this environment, so this layer
-is a conservative tokenizer-based rewriter: it never touches string
-literals and leaves unknown constructs for Spark's parser to report.
+is a conservative rewriter over one lexer (``lex`` below): every pass
+reads SQL through it, so none touches string literals or comments, and
+unknown constructs are left for Spark's parser to report.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Dict, Iterable, List, Optional, Tuple
+from typing import Dict, Iterator, List, Optional, Tuple
+
+# -- lexer -------------------------------------------------------------------
+# Token kinds. Comments follow Spark's lexer: ``--`` runs to the end of the
+# line, ``/* */`` nests, and ``/*+ ... */`` is a hint, kept verbatim.
+CODE, STRING, QUOTED, COMMENT, HINT = "code", "string", "quoted", "comment", "hint"
+
+_TOKEN_OPEN = re.compile(r"'|\"|`|--|/\*\+|/\*")
+# opener -> (kind, rest of the token after the opener); a doubled quote
+# char is an escaped one
+_TOKEN_REST = {
+    "'": (STRING, re.compile(r"[^']*(?:''[^']*)*'")),
+    '"': (QUOTED, re.compile(r'[^"]*(?:""[^"]*)*"')),
+    "`": (QUOTED, re.compile(r"[^`]*(?:``[^`]*)*`")),
+    "--": (COMMENT, re.compile(r"[^\n]*")),
+    "/*+": (HINT, re.compile(r".*?\*/", re.DOTALL)),
+}
+_BLOCK_COMMENT_EDGE = re.compile(r"/\*|\*/")
 
 
-def _split_literals(sql: str) -> List[Tuple[bool, str]]:
-    """Split SQL into (is_literal, chunk) segments so rewrites never touch
-    quoted strings. Handles single-quoted literals with '' escapes."""
-    parts: List[Tuple[bool, str]] = []
-    buf: List[str] = []
-    i, n = 0, len(sql)
-    in_lit = False
-    while i < n:
-        ch = sql[i]
-        if not in_lit and ch == "'":
-            parts.append((False, "".join(buf)))
-            buf = [ch]
-            in_lit = True
-        elif in_lit and ch == "'":
-            if i + 1 < n and sql[i + 1] == "'":
-                buf.append("''")
-                i += 1
-            else:
-                buf.append(ch)
-                parts.append((True, "".join(buf)))
-                buf = []
-                in_lit = False
-        else:
-            buf.append(ch)
-        i += 1
-    if buf:
-        parts.append((in_lit, "".join(buf)))
-    return parts
+def lex(sql: str, start: int = 0) -> List[Tuple[str, int, int]]:
+    """Split ``sql[start:]`` into ``(kind, start, end)`` tokens: code,
+    single-quoted strings, double-quoted or backtick-quoted names,
+    comments and hints. ``start`` must not sit inside a non-code token.
+    An unterminated string, quoted name or comment runs to the end."""
+    tokens: List[Tuple[str, int, int]] = []
+    n = len(sql)
+    pos = start
+    while pos < n:
+        m = _TOKEN_OPEN.search(sql, pos)
+        if m is None:
+            tokens.append((CODE, pos, n))
+            break
+        if m.start() > pos:
+            tokens.append((CODE, pos, m.start()))
+        if m.group() in _TOKEN_REST:
+            kind, rest = _TOKEN_REST[m.group()]
+            r = rest.match(sql, m.end())
+            end = r.end() if r else n
+        else:  # /* block comment */, nesting
+            kind, end, depth = COMMENT, n, 0
+            for edge in _BLOCK_COMMENT_EDGE.finditer(sql, m.start()):
+                depth += 1 if edge.group() == "/*" else -1
+                if depth == 0:
+                    end = edge.end()
+                    break
+        tokens.append((kind, m.start(), end))
+        pos = end
+    return tokens
+
+
+def strip_comments(sql: str) -> str:
+    """Each comment becomes one space (a comment separates tokens like
+    whitespace does); hints stay verbatim."""
+    tokens = lex(sql)
+    if all(kind != COMMENT for kind, _, _ in tokens):
+        return sql
+    return "".join(" " if kind == COMMENT else sql[s:e] for kind, s, e in tokens)
+
+
+def _code_matches(sql: str, pattern: "re.Pattern[str]", start: int = 0) -> Iterator["re.Match[str]"]:
+    """Matches of ``pattern`` that lie inside code tokens, from ``start``."""
+    for kind, s, e in lex(sql, start):
+        if kind == CODE:
+            yield from pattern.finditer(sql, s, e)
 
 
 def _map_nonliteral(sql: str, fn) -> str:
-    return "".join(chunk if is_lit else fn(chunk) for is_lit, chunk in _split_literals(sql))
+    """Apply ``fn`` to the text between string literals and comments
+    (quoted names and hints included); literals and comments pass
+    through untouched."""
+    out, last = [], 0
+    for kind, s, e in lex(sql):
+        if kind in (STRING, COMMENT):
+            out += [fn(sql[last:s]), sql[s:e]]
+            last = e
+    out.append(fn(sql[last:]))
+    return "".join(out)
+
+
+_BRACKET = r"(?P<open>[(\[{])|(?P<close>[)\]}])"
+_BRACKETS = re.compile(_BRACKET)
+
+
+def _find_matching(sql: str, idx: int) -> int:
+    """Index of the bracket closing the one ``sql[idx]`` opens — or, when
+    ``sql[idx]`` opens none, closing the innermost bracket around
+    ``idx`` (the end of that scope); -1 if it never closes. ``()``,
+    ``[]`` and ``{}`` nest as one bracket set, counted in code only."""
+    depth = 0 if sql.startswith(("(", "[", "{"), idx) else 1
+    for m in _code_matches(sql, _BRACKETS, idx):
+        if m.lastgroup == "open":
+            depth += 1
+        elif depth == 1:
+            return m.start()
+        else:
+            depth -= 1
+    return -1
+
+
+def _depth0_keyword_pos(sql: str, words: Tuple[str, ...], start: int = 0) -> int:
+    """Index of the first of ``words`` in code at bracket depth 0
+    relative to ``start``; -1 if absent or if the scan leaves the
+    enclosing brackets first. Case-insensitive; a word is bounded by
+    non-word characters, and a space in it matches any whitespace."""
+    alts = []
+    for w in words:
+        p = r"\s+".join(map(re.escape, w.split()))
+        alts.append(("\\b" if w[0].isalnum() else "") + p + ("\\b" if w[-1].isalnum() else ""))
+    pattern = re.compile(f"{_BRACKET}|(?P<word>{'|'.join(alts)})", re.IGNORECASE)
+    depth = 0
+    for m in _code_matches(sql, pattern, start):
+        if m.lastgroup == "open":
+            depth += 1
+        elif m.lastgroup == "close":
+            depth -= 1
+            if depth < 0:
+                return -1
+        elif depth == 0:
+            return m.start()
+    return -1
+
+
+def _split_top_level(s: str, sep: str = ",") -> List[str]:
+    """Split ``s`` at the depth-0 occurrences of ``sep`` (a comma, or a
+    keyword such as ``AND``), outside literals; the parts are stripped.
+    Blank input has no parts."""
+    if not s.strip():
+        return []
+    parts, start = [], 0
+    pos = _depth0_keyword_pos(s, (sep,))
+    while pos >= 0:
+        parts.append(s[start:pos].strip())
+        start = pos + len(sep)
+        pos = _depth0_keyword_pos(s, (sep,), start)
+    parts.append(s[start:].strip())
+    return parts
 
 
 _FN_CALL = re.compile(r"\bFn\.([A-Za-z_][A-Za-z0-9_]*)", re.IGNORECASE)
@@ -108,106 +211,6 @@ CALENDAR_SUBQUERY = (
 )
 
 
-def _in_literal(sql: str, pos: int) -> bool:
-    in_lit = False
-    i = 0
-    while i < pos:
-        if sql[i] == "'":
-            if in_lit and i + 1 < len(sql) and sql[i + 1] == "'":
-                i += 1
-            else:
-                in_lit = not in_lit
-        i += 1
-    return in_lit
-
-
-def _paren_depth_at(sql: str, pos: int) -> int:
-    """Paren nesting depth at ``pos``, literal-aware: parens inside
-    string literals don't count (a raw ``count("(")`` miscounts e.g.
-    ``SELECT '(' AS tag``)."""
-    depth = 0
-    in_lit = False
-    i = 0
-    while i < pos:
-        ch = sql[i]
-        if in_lit:
-            if ch == "'":
-                if i + 1 < len(sql) and sql[i + 1] == "'":
-                    i += 1
-                else:
-                    in_lit = False
-        elif ch == "'":
-            in_lit = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    return depth
-
-
-def _find_matching_paren(sql: str, open_idx: int) -> int:
-    depth = 0
-    in_lit = False
-    i = open_idx
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if in_lit:
-            if ch == "'":
-                if i + 1 < n and sql[i + 1] == "'":
-                    i += 1
-                else:
-                    in_lit = False
-        elif ch == "'":
-            in_lit = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    return -1
-
-
-def _split_args(s: str) -> List[str]:
-    if not s.strip():
-        return []
-    args: List[str] = []
-    buf: List[str] = []
-    depth = 0
-    in_lit = False
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if in_lit:
-            buf.append(ch)
-            if ch == "'":
-                if i + 1 < n and s[i + 1] == "'":
-                    buf.append("'")
-                    i += 1
-                else:
-                    in_lit = False
-        elif ch == "'":
-            in_lit = True
-            buf.append(ch)
-        elif ch in "([{":
-            depth += 1
-            buf.append(ch)
-        elif ch in ")]}":
-            depth -= 1
-            buf.append(ch)
-        elif ch == "," and depth == 0:
-            args.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    args.append("".join(buf).strip())
-    return args
-
-
 def _template_arity(tmpl: str) -> int:
     slots = [int(m) for m in re.findall(r"\{(\d+)\}", tmpl)]
     return max(slots) + 1 if slots else 0
@@ -237,11 +240,7 @@ def expand_fn_macros(sql: str, schema_lookup=None) -> str:
     callable_names = SQL_FN_NAMES | USER_FN_NAMES
     out = sql
     for _ in range(500):
-        m = None
-        for cand in _FN_CALL.finditer(out):
-            if not _in_literal(out, cand.start()):
-                m = cand
-                break
+        m = next(_code_matches(out, _FN_CALL), None)
         if m is None:
             return out
         name = m.group(1).lower().rstrip("_")
@@ -253,10 +252,10 @@ def expand_fn_macros(sql: str, schema_lookup=None) -> str:
                 j += 1
             if j >= len(out) or out[j] != "(":
                 raise ValueError(f"Fn.{m.group(1)} must be called with parentheses")
-            close = _find_matching_paren(out, j)
+            close = _find_matching(out, j)
             if close < 0:
                 raise ValueError(f"Unbalanced parentheses in Fn.{m.group(1)}(...)")
-            return _split_args(out[j + 1 : close]), close
+            return _split_top_level(out[j + 1 : close]), close
 
         if name in INLINE_FN_TEMPLATES:
             tmpl = INLINE_FN_TEMPLATES[name]
@@ -307,21 +306,19 @@ def expand_fn_macros(sql: str, schema_lookup=None) -> str:
     raise ValueError("Fn.* macro expansion did not converge (cyclic input?)")
 
 
+_ALIAS_DEF = re.compile(r"(?i)\bAS\s+([A-Za-z_]\w*)")
+_CTE_DEF = re.compile(r"(?i)\b([A-Za-z_]\w*)\s+AS\s*\(")
+
+
 def _alias_definitions(sql: str) -> set:
     """Names the query itself defines — table/column aliases (``AS x``,
     also catching CAST target types, which is harmless) and CTE names
     (``x AS (``). A stage name shadowed by one of these must NOT be
     rewritten: ``FROM other AS stage_name`` aliases *other*, and later
     ``stage_name.col`` refs mean the alias, not the stage."""
-    defs = set()
-    for is_lit, chunk in _split_literals(sql):
-        if is_lit:
-            continue
-        for m in re.finditer(r"(?i)\bAS\s+([A-Za-z_]\w*)", chunk):
-            defs.add(m.group(1).lower())
-        for m in re.finditer(r"(?i)\b([A-Za-z_]\w*)\s+AS\s*\(", chunk):
-            defs.add(m.group(1).lower())
-    return defs
+    return {m.group(1).lower() for m in _code_matches(sql, _ALIAS_DEF)} | {
+        m.group(1).lower() for m in _code_matches(sql, _CTE_DEF)
+    }
 
 
 def rewrite_views(sql: str, views: Dict[str, str]) -> str:
@@ -828,19 +825,15 @@ def expand_dialect_functions(sql: str) -> str:
     arities fall through untouched (Spark reports them)."""
     out = sql
     for _ in range(500):
-        m = None
-        for cand in _DIALECT_CALL.finditer(out):
-            if not _in_literal(out, cand.start()):
-                m = cand
-                break
+        m = next(_code_matches(out, _DIALECT_CALL), None)
         if m is None:
             return out.replace("\x00(", "(")
         name = m.group(1).lower()
         open_idx = m.end() - 1
-        close = _find_matching_paren(out, open_idx)
+        close = _find_matching(out, open_idx)
         if close < 0:
             return out.replace("\x00(", "(")  # unbalanced; let Spark report it
-        args = _split_args(out[open_idx + 1 : close])
+        args = _split_top_level(out[open_idx + 1 : close])
         tmpl = DIALECT_FN_TEMPLATES.get(name, {}).get(len(args))
         if tmpl is not None:
             # recursively expand inside arguments first
@@ -879,95 +872,54 @@ class UnsupportedDialect(ValueError):
     produce an opaque parse error."""
 
 
-def _find_matching(sql: str, open_idx: int, open_ch: str, close_ch: str) -> int:
-    """Index of the bracket closing ``sql[open_idx]``; -1 if unbalanced.
-    Quote- and all-bracket-aware (parens/brackets/braces nest freely)."""
-    depth = 0
-    in_lit = False
-    i, n = open_idx, len(sql)
-    pairs = {"(": ")", "[": "]", "{": "}"}
-    stack: List[str] = []
-    while i < n:
-        ch = sql[i]
-        if in_lit:
-            if ch == "'":
-                if i + 1 < n and sql[i + 1] == "'":
-                    i += 1
-                else:
-                    in_lit = False
-        elif ch == "'":
-            in_lit = True
-        elif ch in pairs:
-            stack.append(pairs[ch])
-            depth += 1
-        elif stack and ch == stack[-1]:
-            stack.pop()
-            depth -= 1
-            if depth == 0:
-                return i if ch == close_ch else -1
-        i += 1
-    return -1
-
-
-def _split_top_level(s: str, sep: str = ",") -> List[str]:
-    """Split on ``sep`` at bracket depth 0 (parens, brackets, AND braces
-    — unlike _split_args, which predates struct literals)."""
-    parts: List[str] = []
-    buf: List[str] = []
-    depth = 0
-    in_lit = False
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if in_lit:
-            buf.append(ch)
-            if ch == "'":
-                if i + 1 < n and s[i + 1] == "'":
-                    buf.append("'")
-                    i += 1
-                else:
-                    in_lit = False
-        elif ch == "'":
-            in_lit = True
-            buf.append(ch)
-        elif ch in "([{":
-            depth += 1
-            buf.append(ch)
-        elif ch in ")]}":
-            depth -= 1
-            buf.append(ch)
-        elif ch == sep and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    parts.append("".join(buf).strip())
-    return parts
-
-
-_STRUCT_KEY = re.compile(r"^\s*('(?:[^']|'')*'|\"[^\"]+\"|[A-Za-z_]\w*)\s*:\s*(.+)$", re.DOTALL)
+_STRUCT_KEY = re.compile(
+    r"^\s*(?:(?P<string>'(?:[^']|'')*')|\"(?P<quoted>[^\"]+)\"|(?P<bare>[A-Za-z_]\w*))\s*:\s*(?P<value>.+)$",
+    re.DOTALL,
+)
 
 
 def _struct_body_to_named_struct(body: str) -> Optional[str]:
     """``'a': 1, 'b': x`` -> ``named_struct('a', 1, 'b', x)``; None when
     the body is not struct-literal-shaped (leave the braces alone)."""
     entries = _split_top_level(body)
-    if not entries or entries == [""]:
+    if not entries:
         return None
     flat: List[str] = []
     for entry in entries:
         m = _STRUCT_KEY.match(entry)
         if not m:
             return None
-        key, value = m.group(1), m.group(2).strip()
-        if key.startswith('"'):
-            key = "'" + key[1:-1].replace("'", "''") + "'"
-        elif not key.startswith("'"):
-            key = f"'{key}'"
+        if m.group("quoted") is not None:
+            key = "'" + m.group("quoted").replace("'", "''") + "'"
+        elif m.group("bare") is not None:
+            key = f"'{m.group('bare')}'"
+        else:
+            key = m.group("string")
         flat.append(key)
-        flat.append(rewrite_struct_literals(value))
+        flat.append(rewrite_struct_literals(m.group("value").strip()))
     return f"named_struct({', '.join(flat)})"
+
+
+_OPEN_BRACE = re.compile(r"\{")
+_OPEN_SQUARE = re.compile(r"\[")
+
+
+def _rewrite_bracketed(sql: str, opener: "re.Pattern[str]", convert) -> str:
+    """Replace each bracketed span in code that starts at an ``opener``
+    match and whose body ``convert`` turns into text; where it returns
+    None the brackets stay and the scan goes on inside them."""
+    out, last = [], 0
+    for m in _code_matches(sql, opener):
+        i = m.start()
+        if i < last:
+            continue
+        close = _find_matching(sql, i)
+        conv = convert(sql[i + 1 : close]) if close != -1 else None
+        if conv is not None:
+            out += [sql[last:i], conv]
+            last = close + 1
+    out.append(sql[last:])
+    return "".join(out)
 
 
 def rewrite_struct_literals(sql: str) -> str:
@@ -975,37 +927,7 @@ def rewrite_struct_literals(sql: str) -> str:
     ``named_struct('a', 1, 'b', col)``, recursively (nested structs and
     structs inside list literals included). Braces that are not
     struct-literal-shaped pass through untouched."""
-    out: List[str] = []
-    i, n = 0, len(sql)
-    in_lit = False
-    while i < n:
-        ch = sql[i]
-        if in_lit:
-            out.append(ch)
-            if ch == "'":
-                if i + 1 < n and sql[i + 1] == "'":
-                    out.append("'")
-                    i += 1
-                else:
-                    in_lit = False
-            i += 1
-            continue
-        if ch == "'":
-            in_lit = True
-            out.append(ch)
-            i += 1
-            continue
-        if ch == "{":
-            close = _find_matching(sql, i, "{", "}")
-            if close > 0:
-                conv = _struct_body_to_named_struct(sql[i + 1 : close])
-                if conv is not None:
-                    out.append(conv)
-                    i = close + 1
-                    continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+    return _rewrite_bracketed(sql, _OPEN_BRACE, _struct_body_to_named_struct)
 
 
 _EXCLUDE_PARENS = re.compile(r"\bEXCLUDE\s*\(", re.IGNORECASE)
@@ -1022,15 +944,16 @@ def rewrite_star_rename(sql: str) -> str:
     the renamed columns move to the end of the star expansion (Spark
     has no positional rename)."""
     while True:
-        m = _RENAME_STAR.search(sql)
-        if m is None or _in_literal(sql, m.start()):
+        m = next(_code_matches(sql, _RENAME_STAR), None)
+        if m is None:
             return sql
-        open_idx = sql.index("(", m.end() - 1)
-        close = _find_matching(sql, open_idx, "(", ")")
+        open_idx = m.end() - 1
+        close = _find_matching(sql, open_idx)
         if close == -1:
             return sql
         olds, rendered = [], []
-        for part in _split_top_level(sql[open_idx + 1 : close]):
+        # an empty list is rejected like an empty entry
+        for part in _split_top_level(sql[open_idx + 1 : close]) or [""]:
             am = re.match(
                 r"\s*([A-Za-z_]\w*|`[^`]+`|\"[^\"]+\")\s+AS\s+([A-Za-z_]\w*|`[^`]+`)\s*$",
                 part,
@@ -1053,15 +976,15 @@ def rewrite_star_replace(sql: str) -> str:
     the one divergence is column ORDER (replaced columns move to the
     end of the star expansion — Spark has no positional replace)."""
     while True:
-        m = _REPLACE_STAR.search(sql)
-        if m is None or _in_literal(sql, m.start()):
+        m = next(_code_matches(sql, _REPLACE_STAR), None)
+        if m is None:
             return sql
-        open_idx = sql.index("(", m.end() - 1)
-        close = _find_matching(sql, open_idx, "(", ")")
+        open_idx = m.end() - 1
+        close = _find_matching(sql, open_idx)
         if close == -1:
             return sql
         names, rendered = [], []
-        for part in _split_top_level(sql[open_idx + 1:close]):
+        for part in _split_top_level(sql[open_idx + 1:close]) or [""]:
             am = re.search(r"\s+AS\s+([A-Za-z_]\w*|`[^`]+`)\s*$", part, re.IGNORECASE)
             if am is None:
                 raise UnsupportedDialect(
@@ -1081,56 +1004,6 @@ def _reject_columns_expr(chunk: str) -> None:
             "engine: list the columns explicitly, or use `* EXCLUDE(...)` "
             "(rewritten to Spark's `* EXCEPT(...)`) to drop columns"
         )
-
-
-def _depth_at(sql: str, pos: int) -> int:
-    depth = 0
-    in_lit = False
-    for i in range(pos):
-        ch = sql[i]
-        if in_lit:
-            if ch == "'":
-                in_lit = False
-        elif ch == "'":
-            in_lit = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-    return depth
-
-
-def _scan_at_depth(sql: str, start: int, init_depth: int, target_depth: int, words: Tuple[str, ...]) -> int:
-    """First position >= start where one of ``words`` appears at paren
-    depth ``target_depth`` (word-bounded, outside literals); -1 if the
-    scan leaves the enclosing scope (depth < target) or hits the end."""
-    depth = init_depth
-    in_lit = False
-    upper = sql.upper()
-    i, n = start, len(sql)
-    while i < n:
-        ch = sql[i]
-        if in_lit:
-            if ch == "'":
-                in_lit = False
-        elif ch == "'":
-            in_lit = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < target_depth:
-                return -1
-        elif depth == target_depth:
-            for w in words:
-                if upper.startswith(w, i):
-                    before_ok = i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] in "_`")
-                    after = i + len(w)
-                    after_ok = after >= n or not (sql[after].isalnum() or sql[after] in "_`")
-                    if before_ok and after_ok:
-                        return i
-        i += 1
-    return -1
 
 
 _CLAUSE_AFTER_FROM = (
@@ -1217,14 +1090,11 @@ def expand_columns_expr(sql: str, schema_lookup) -> str:
         return sql
     search_from = 0
     for _ in range(64):  # bounded: each pass consumes one COLUMNS(
-        m = _COLUMNS_EXPR.search(sql, search_from)
+        m = next(_code_matches(sql, _COLUMNS_EXPR, search_from), None)
         if m is None:
             return sql
-        if _in_literal(sql, m.start()):
-            search_from = m.end()
-            continue
-        open_idx = sql.index("(", m.end() - 1)
-        close = _find_matching(sql, open_idx, "(", ")")
+        open_idx = m.end() - 1
+        close = _find_matching(sql, open_idx)
         if close == -1:
             return sql
         arg = sql[open_idx + 1 : close].strip()
@@ -1234,7 +1104,7 @@ def expand_columns_expr(sql: str, schema_lookup) -> str:
         wm = re.search(r"([A-Za-z_]\w*)\s*\(\s*$", sql[: m.start()])
         if wm is not None and wm.group(1).upper() not in ("COLUMNS",):
             wrapper_open = sql.rindex("(", wm.start(), m.start())
-            wrapper_close = _find_matching(sql, wrapper_open, "(", ")")
+            wrapper_close = _find_matching(sql, wrapper_open)
             if (
                 wrapper_close != -1
                 and sql[wrapper_open + 1 : wrapper_close].strip() == sql[m.start() : close + 1].strip()
@@ -1249,8 +1119,7 @@ def expand_columns_expr(sql: str, schema_lookup) -> str:
         if wrapper is None:
             expr_start, expr_end = m.start(), close
 
-        d = _depth_at(sql, expr_start)
-        from_pos = _scan_at_depth(sql, expr_end + 1, _depth_at(sql, expr_end + 1), d, ("FROM",))
+        from_pos = _depth0_keyword_pos(sql, ("FROM",), expr_end + 1)
         if from_pos == -1:
             raise UnsupportedDialect(
                 "COLUMNS(...) could not be resolved: no FROM clause found in "
@@ -1263,7 +1132,7 @@ def expand_columns_expr(sql: str, schema_lookup) -> str:
             # schema_lookup — the engine resolves its schema by Catalyst
             # ANALYSIS only (lazy; nothing executes)
             sub_open = from_pos + 4 + lead_ws
-            sub_close = _find_matching(sql, sub_open, "(", ")")
+            sub_close = _find_matching(sql, sub_open)
             if sub_close == -1:
                 raise UnsupportedDialect(
                     "COLUMNS(...): unbalanced parentheses in the FROM "
@@ -1291,8 +1160,8 @@ def expand_columns_expr(sql: str, schema_lookup) -> str:
                 )
             relname = rel_m.group(2) or rel_m.group(3) or rel_m.group(1)
             rel_end = from_pos + 4 + rel_m.end()
-        clause_pos = _scan_at_depth(sql, rel_end, d, d, _CLAUSE_AFTER_FROM)
-        join_pos = _scan_at_depth(sql, rel_end, d, d, ("JOIN", ","))
+        clause_pos = _depth0_keyword_pos(sql, _CLAUSE_AFTER_FROM, rel_end)
+        join_pos = _depth0_keyword_pos(sql, ("JOIN", ","), rel_end)
         if join_pos != -1 and (clause_pos == -1 or join_pos < clause_pos):
             raise UnsupportedDialect(
                 "COLUMNS(...) over a multi-relation FROM (join/comma) is "
@@ -1390,7 +1259,7 @@ def parse_pivot_statement(sql: str) -> Optional[Dict[str, Optional[str]]]:
     if in_pos >= 0:
         on_col = on_clause[:in_pos].strip()
         paren = on_clause.index("(", in_pos)
-        close = _find_matching(on_clause, paren, "(", ")")
+        close = _find_matching(on_clause, paren)
         in_vals = _split_top_level(on_clause[paren + 1 : close])
     return {
         "src": src,
@@ -1418,132 +1287,86 @@ def rewrite_unpivot_statement(sql: str) -> str:
     )
 
 
+_LIST_KEYWORDS = frozenset(
+    "SELECT WHERE WHEN THEN ELSE END AND OR NOT IN AS ON BY RETURN CASE "
+    "DISTINCT ALL UNION HAVING VALUES SET BETWEEN LIKE COALESCE IF ARRAY".split()
+)
+_LIST_SCAN = re.compile(r"(?P<word>\w+)|(?P<open>[\[(])|(?P<close>[)\]])|\S")
+
+
 def rewrite_bracket_lists(sql: str) -> str:
     """DuckDB ``['a', 'b']`` list literals -> ``array('a', 'b')``.
 
     A ``[`` is a literal-list opener when preceded by an operator,
     comma, paren, start-of-input, or a SQL keyword (``SELECT [1,2]``);
-    after an identifier, ``)`` or ``]`` it is a subscript and stays
-    untouched. String literals are never modified."""
-    keywords = {
-        "SELECT", "WHERE", "WHEN", "THEN", "ELSE", "END", "AND", "OR",
-        "NOT", "IN", "AS", "ON", "BY", "RETURN", "CASE", "DISTINCT",
-        "ALL", "UNION", "HAVING", "VALUES", "SET", "BETWEEN", "LIKE",
-        "COALESCE", "IF", "ARRAY",
-    }
-    res = []
+    after an identifier, a string, ``)`` or ``]`` it is a subscript and
+    stays untouched. Comments and hints read as whitespace; string
+    literals are never modified."""
+    out, last = [], 0
     stack = []  # per '['/'(' level: True when the '[' was converted
-    in_lit = False
     prev_sig = ""  # last significant (non-space) char
-    prev_token = ""  # last identifier/keyword word
-    word = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if in_lit:
-            res.append(ch)
-            if ch == "'":
-                if i + 1 < n and sql[i + 1] == "'":
-                    res.append("'")
-                    i += 1
-                else:
-                    in_lit = False
-            i += 1
+    prev_word = ""  # last identifier/keyword word
+    for kind, s, e in lex(sql):
+        if kind in (COMMENT, HINT):
             continue
-        if ch.isalnum() or ch == "_":
-            word.append(ch)
-            res.append(ch)
-            prev_sig = ch
-            i += 1
+        if kind != CODE:  # a string or quoted name ends an operand
+            prev_sig = sql[e - 1]
             continue
-        if word:
-            prev_token = "".join(word)
-            word = []
-        if ch == "'":
-            in_lit = True
-            res.append(ch)
-            prev_sig = ch
-        elif ch == "[":
-            after_word = prev_sig.isalnum() or prev_sig == "_"
-            literal_list = (
-                prev_sig == ""
-                or prev_sig in "(,=<>+-*/%|&["
-                or (after_word and prev_token.upper() in keywords)
-            )
-            stack.append(literal_list)
-            res.append("array(" if literal_list else ch)
-            prev_sig = "("
-        elif ch == "(":
-            stack.append(False)
-            res.append(ch)
-            prev_sig = ch
-        elif ch in ")]":
-            converted = stack.pop() if stack else False
-            res.append(")" if (ch == "]" and converted) else ch)
-            prev_sig = ch
-        else:
-            res.append(ch)
-            if not ch.isspace():
-                prev_sig = ch
-        i += 1
-    return "".join(res)
+        for m in _LIST_SCAN.finditer(sql, s, e):
+            tok = m.group()
+            if m.lastgroup == "word":
+                prev_word = tok
+            elif tok == "[":
+                after_word = prev_sig.isalnum() or prev_sig == "_"
+                literal_list = prev_sig == "" or prev_sig in "(,=<>+-*/%|&[" or (
+                    after_word and prev_word.upper() in _LIST_KEYWORDS
+                )
+                stack.append(literal_list)
+                if literal_list:
+                    out += [sql[last : m.start()], "array("]
+                    last = m.end()
+                prev_sig = "("
+                continue
+            elif tok == "(":
+                stack.append(False)
+            elif m.lastgroup == "close":
+                converted = stack.pop() if stack else False
+                if converted and tok == "]":
+                    out += [sql[last : m.start()], ")"]
+                    last = m.end()
+            prev_sig = tok[-1]
+    out.append(sql[last:])
+    return "".join(out)
 
 
-def _depth0_word_pos(s: str, word: str) -> int:
-    """Index of the first case-insensitive, word-bounded ``word`` in
-    ``s`` at bracket depth 0 outside string literals; -1 if absent."""
-    depth = 0
-    in_lit = False
-    n, w = len(s), len(word)
-    upper, word = s.upper(), word.upper()
-    i = 0
-    while i < n:
-        ch = s[i]
-        if in_lit:
-            if ch == "'":
-                if i + 1 < n and s[i + 1] == "'":
-                    i += 1
-                else:
-                    in_lit = False
-        elif ch == "'":
-            in_lit = True
-        elif ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif depth == 0 and upper.startswith(word, i):
-            before = s[i - 1] if i else ""
-            after = s[i + w] if i + w < n else ""
-            if not (before.isalnum() or before == "_") and not (
-                after.isalnum() or after == "_"
-            ):
-                return i
-        i += 1
-    return -1
-
-
-def _parse_comprehension(body: str):
-    """Parse ``expr FOR var IN source [IF cond]``; None if not one."""
-    fpos = _depth0_word_pos(body, "for")
+def _comprehension_to_transform(body: str) -> Optional[str]:
+    """``expr FOR var IN source [IF cond]`` -> ``transform(...)``; None
+    if the body is not a comprehension."""
+    fpos = _depth0_keyword_pos(body, ("FOR",))
     if fpos <= 0:
         return None
     expr = body[:fpos].strip()
     rest = body[fpos + 3:]
-    ipos = _depth0_word_pos(rest, "in")
+    ipos = _depth0_keyword_pos(rest, ("IN",))
     if ipos < 0:
         return None
     var = rest[:ipos].strip()
     if not re.fullmatch(r"[A-Za-z_]\w*", var):
         return None
     tail = rest[ipos + 2:]
-    cpos = _depth0_word_pos(tail, "if")
+    cpos = _depth0_keyword_pos(tail, ("IF",))
     if cpos >= 0:
         src, cond = tail[:cpos].strip(), tail[cpos + 2:].strip()
     else:
         src, cond = tail.strip(), None
     if not expr or not src or (cpos >= 0 and not cond):
         return None
-    return expr, var, src, cond
+    src = rewrite_list_comprehensions(src)
+    expr = rewrite_list_comprehensions(expr)
+    if cond is not None:
+        cond = rewrite_list_comprehensions(cond)
+        src = f"filter({src}, {var} -> {cond})"
+    return f"transform({src}, {var} -> {expr})"
 
 
 def rewrite_list_comprehensions(sql: str) -> str:
@@ -1552,43 +1375,12 @@ def rewrite_list_comprehensions(sql: str) -> str:
     ``transform(filter(lst, x -> cond), x -> expr)`` (``filter`` omitted
     without IF). Runs before bracket-list rewriting so the comprehension
     brackets are consumed first; nested comprehensions recurse."""
-    out: List[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i:j + 1])
-            i = j + 1
-            continue
-        if ch == "[":
-            close = _find_matching(sql, i, "[", "]")
-            if close != -1:
-                parsed = _parse_comprehension(sql[i + 1:close])
-                if parsed:
-                    expr, var, src, cond = parsed
-                    src = rewrite_list_comprehensions(src)
-                    expr = rewrite_list_comprehensions(expr)
-                    if cond is not None:
-                        cond = rewrite_list_comprehensions(cond)
-                        src = f"filter({src}, {var} -> {cond})"
-                    out.append(f"transform({src}, {var} -> {expr})")
-                    i = close + 1
-                    continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+    return _rewrite_bracketed(sql, _OPEN_SQUARE, _comprehension_to_transform)
 
 
 _ASOF_JOIN = re.compile(r"\bASOF\s+(?:LEFT\s+)?JOIN\b", re.IGNORECASE)
 _DISTINCT_ON = re.compile(r"\bSELECT\s+DISTINCT\s+ON\s*\(", re.IGNORECASE)
+_ORDER_BY = re.compile(r"ORDER\s+BY", re.IGNORECASE)
 
 
 def rewrite_distinct_on(sql: str) -> str:
@@ -1598,70 +1390,30 @@ def rewrite_distinct_on(sql: str) -> str:
     a subquery). With no ORDER BY the row kept per group is arbitrary —
     same contract as DuckDB — and the window orders by the keys."""
     for _ in range(16):
-        m = _DISTINCT_ON.search(sql)
-        if m is None or _in_literal(sql, m.start()):
+        m = next(_code_matches(sql, _DISTINCT_ON), None)
+        if m is None:
             return sql
-        open_idx = sql.index("(", m.end() - 1)
-        close = _find_matching(sql, open_idx, "(", ")")
+        close = _find_matching(sql, m.end() - 1)
         if close == -1:
             return sql
-        keys = sql[open_idx + 1 : close].strip()
-        d = _depth_at(sql, m.start())
-        # drop the DISTINCT ON (...) prefix, keep the select list
-        body = sql[: m.start()] + "SELECT " + sql[close + 1 :]
-        # positions shift: recompute scan start right after SELECT
-        scan_from = m.start() + len("SELECT ")
-        ob = _scan_at_depth(body, scan_from, d, d, ("ORDER",))
-        if ob != -1 and re.match(r"ORDER\s+BY\b", body[ob:], re.IGNORECASE):
-            tail = _scan_at_depth(body, ob + 5, d, d, ("LIMIT",))
-            order_end = tail if tail != -1 else None
-            by_idx = body.upper().index("BY", ob) + 2
-            order_expr = (body[by_idx:order_end] if order_end else body[by_idx:]).strip()
-            # strip to the enclosing scope if the ORDER BY text runs past it
-            cut = order_expr
-            depth = 0
-            for i, ch in enumerate(order_expr):
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth < 0:
-                        cut = order_expr[:i]
-                        break
-            qualify = (
-                f" QUALIFY ROW_NUMBER() OVER (PARTITION BY {keys} ORDER BY {cut.strip()}) = 1 "
-            )
-            sql = body[:ob] + qualify + body[ob:]
+        keys = sql[m.end() : close].strip()
+        # the SELECT's own scope (up to its enclosing paren, or the end),
+        # with the DISTINCT ON (...) prefix dropped
+        end = _find_matching(sql, m.start())
+        end = len(sql) if end == -1 else end
+        stmt = "SELECT " + sql[close + 1 : end]
+        ob = _depth0_keyword_pos(stmt, ("ORDER BY",))
+        if ob != -1:
+            lim = _depth0_keyword_pos(stmt, ("LIMIT",), ob)
+            order = stmt[_ORDER_BY.match(stmt, ob).end() : len(stmt) if lim == -1 else lim]
+            at = ob
         else:
-            lim = _scan_at_depth(body, scan_from, d, d, ("LIMIT", "UNION", "INTERSECT", "EXCEPT"))
-            qualify = f" QUALIFY ROW_NUMBER() OVER (PARTITION BY {keys} ORDER BY {keys}) = 1 "
-            if lim == -1:
-                # insert before the enclosing scope closes (or at end)
-                depth = d
-                i, n = scan_from, len(body)
-                in_lit = False
-                end = n
-                while i < n:
-                    ch = body[i]
-                    if in_lit:
-                        if ch == "'":
-                            in_lit = False
-                    elif ch == "'":
-                        in_lit = True
-                    elif ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                        if depth < d:
-                            end = i
-                            break
-                    i += 1
-                sql = body[:end] + qualify + body[end:]
-            else:
-                sql = body[:lim] + qualify + body[lim:]
+            order = keys
+            lim = _depth0_keyword_pos(stmt, ("LIMIT", "UNION", "INTERSECT", "EXCEPT"))
+            at = len(stmt) if lim == -1 else lim
+        qualify = f" QUALIFY ROW_NUMBER() OVER (PARTITION BY {keys} ORDER BY {order.strip()}) = 1 "
+        sql = sql[: m.start()] + stmt[:at] + qualify + stmt[at:] + sql[end:]
     return sql
-
-
 
 
 _BRACKET_SLICE = re.compile(r"\[\s*[^,:\[\]]*:\s*[^,:\[\]]*\]")
@@ -1680,9 +1432,10 @@ _BRACKET_SLICE_SIMPLE = re.compile(
 
 
 def rewrite_bracket_slices(sql: str) -> str:
+    """``ident[i:j]`` list slices -> ``slice(...)``; normalize_dialect
+    applies it to the text between literals only."""
+
     def repl(m: "re.Match[str]") -> str:
-        if _in_literal(sql, m.start()):
-            return m.group(0)
         arr, lo, hi = m.group(1), m.group(2), m.group(3)
         if lo and hi:
             return f"slice({arr}, {lo}, ({hi}) - ({lo}) + 1)"
@@ -1693,6 +1446,8 @@ def rewrite_bracket_slices(sql: str) -> str:
         return arr  # a[:] is the identity
 
     return _BRACKET_SLICE_SIMPLE.sub(repl, sql)
+
+
 _JSON_CAST = re.compile(r"::\s*JSON\b", re.IGNORECASE)
 _JSON_ARROW = re.compile(r"(\b[A-Za-z_][\w.]*)\s*->>\s*'([^']+)'")
 
@@ -1797,41 +1552,6 @@ def quoted_stage_refs_to_views(sql: str, views: Dict[str, str]) -> str:
     return _map_nonliteral(sql, fix)
 
 
-def _depth0_keyword_pos(sql: str, words: Tuple[str, ...], start: int = 0) -> int:
-    """Index of the first keyword (from ``words``) occurring at paren
-    depth 0 outside string literals; -1 if absent. Case-insensitive,
-    word-bounded."""
-    depth = 0
-    in_lit = False
-    upper = sql.upper()
-    i = start
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if in_lit:
-            if ch == "'":
-                if i + 1 < n and sql[i + 1] == "'":
-                    i += 1
-                else:
-                    in_lit = False
-        elif ch == "'":
-            in_lit = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            for w in words:
-                if upper.startswith(w, i):
-                    before_ok = i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")
-                    after = i + len(w)
-                    after_ok = after >= n or not (sql[after].isalnum() or sql[after] == "_")
-                    if before_ok and after_ok:
-                        return i
-        i += 1
-    return -1
-
-
 def rewrite_qualify(sql: str) -> str:
     """DuckDB's QUALIFY (filter on window expressions) has no Spark
     equivalent; rewrite to the standard subquery form: compute the
@@ -1855,7 +1575,7 @@ def rewrite_qualify(sql: str) -> str:
 
 
 def rewrite_sql(sql: str, views: Dict[str, str], schema_lookup=None) -> str:
-    out = expand_fn_macros(sql, schema_lookup=schema_lookup)
+    out = expand_fn_macros(strip_comments(sql), schema_lookup=schema_lookup)
     out = expand_columns_expr(out, schema_lookup)
     out = rewrite_views(out, views)
     out = normalize_dialect(out)

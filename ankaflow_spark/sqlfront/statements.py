@@ -16,11 +16,10 @@ from typing import Dict, List, Optional, Tuple
 
 from .rewrite import (
     UnsupportedDialect,
+    _code_matches,
     _depth0_keyword_pos,
-    _find_matching_paren,
-    _in_literal,
-    _paren_depth_at,
-    _split_args,
+    _find_matching,
+    _split_top_level,
 )
 
 # ---------------------------------------------------------------------------
@@ -38,7 +37,7 @@ def _parse_table_term(term: str) -> Tuple[str, Optional[str], bool]:
     SQL of a parenthesized subquery."""
     term = term.strip()
     if term.startswith("("):
-        close = _find_matching_paren(term, 0)
+        close = _find_matching(term, 0)
         if close < 0:
             raise UnsupportedDialect("ASOF JOIN: unbalanced subquery parens")
         inner = term[1:close]
@@ -55,18 +54,6 @@ def _parse_table_term(term: str) -> Tuple[str, Optional[str], bool]:
     raise UnsupportedDialect(f"ASOF JOIN: cannot parse table term {term!r}")
 
 
-def _split_depth0(s: str, word: str) -> List[str]:
-    """Split on a depth-0 keyword (e.g. AND), literal-aware."""
-    out, start = [], 0
-    while True:
-        pos = _depth0_keyword_pos(s, (word,), start=start)
-        if pos < 0:
-            out.append(s[start:])
-            return out
-        out.append(s[start:pos])
-        start = pos + len(word)
-
-
 def parse_asof_statement(sql: str) -> Optional[dict]:
     """Parse ``SELECT <proj> FROM <left> ASOF [LEFT] JOIN <right>
     ON <eq-conds AND one inequality> [tail]``; None when the statement
@@ -75,15 +62,10 @@ def parse_asof_statement(sql: str) -> Optional[dict]:
     between the two timestamp/ordering columns.
     """
     s = sql.strip().rstrip(";")
-    m = None
-    for cand in _ASOF_KW.finditer(s):
-        if _in_literal(s, cand.start()):
-            continue
-        if _paren_depth_at(s, cand.start()) == 0:
-            m = cand
-            break
-    if m is None:
+    pos = _depth0_keyword_pos(s, ("ASOF JOIN", "ASOF LEFT JOIN"))
+    if pos < 0:
         return None
+    m = _ASOF_KW.match(s, pos)
     how = "left" if m.group(1) else "inner"
     head = s[: m.start()]
     sel = re.match(r"(?is)^\s*SELECT\s+", head)
@@ -119,7 +101,7 @@ def parse_asof_statement(sql: str) -> Optional[dict]:
 
     eq_keys: List[Tuple[str, str]] = []
     ineq = None
-    for conj in _split_depth0(cond, "AND"):
+    for conj in _split_top_level(cond, "AND"):
         cm = _EQ_COND.match(conj)
         if cm is None:
             raise UnsupportedDialect(
@@ -173,6 +155,9 @@ def parse_asof_statement(sql: str) -> Optional[dict]:
 _BY_NAME = re.compile(
     r"\b(UNION|INTERSECT|EXCEPT)(\s+ALL|\s+DISTINCT)?\s+BY\s+NAME\b", re.IGNORECASE
 )
+_BY_NAME_WORDS = tuple(
+    f"{op}{q} BY NAME" for op in ("UNION", "INTERSECT", "EXCEPT") for q in ("", " ALL", " DISTINCT")
+)
 
 
 def parse_by_name_setop(sql: str) -> Optional[dict]:
@@ -187,13 +172,11 @@ def parse_by_name_setop(sql: str) -> Optional[dict]:
     A BY-NAME (B UNION ALL C) instead of left-associatively; spell the
     intent with parentheses/subqueries when mixing both kinds."""
     s = sql.strip().rstrip(";")
-    last = None
-    for m in _BY_NAME.finditer(s):
-        if not _in_literal(s, m.start()):
-            # depth check: BY NAME inside parens belongs to a subquery
-            # (literal-aware — parens inside string literals don't nest)
-            if _paren_depth_at(s, m.start()) == 0:
-                last = m
+    # depth 0 only: BY NAME inside parens belongs to a subquery
+    last, pos = None, _depth0_keyword_pos(s, _BY_NAME_WORDS)
+    while pos >= 0:
+        last = _BY_NAME.match(s, pos)
+        pos = _depth0_keyword_pos(s, _BY_NAME_WORDS, last.end())
     if last is None:
         return None
     op = last.group(1).upper()
@@ -257,7 +240,7 @@ def _columns_struct_to_ddl(value: str) -> str:
     if inner.startswith("{") and inner.endswith("}"):
         inner = inner[1:-1]
     fields = []
-    for pair in _split_args(inner):
+    for pair in _split_top_level(inner):
         if ":" not in pair:
             raise UnsupportedDialect(f"read_*: cannot parse columns entry {pair!r}")
         name, typ = pair.split(":", 1)
@@ -278,22 +261,20 @@ def parse_reader_calls(sql: str) -> List[dict]:
     path, options, with_filename, schema_ddl}]. Single-argument calls
     are left for the pure-text path-table rewrite."""
     out = []
-    for m in _READ_OPT_CALL.finditer(sql):
-        if _in_literal(sql, m.start()):
-            continue
+    for m in _code_matches(sql, _READ_OPT_CALL):
         open_idx = m.end() - 1
-        close = _find_matching_paren(sql, open_idx)
+        close = _find_matching(sql, open_idx)
         if close < 0:
             continue
-        args = _split_args(sql[open_idx + 1 : close])
+        args = _split_top_level(sql[open_idx + 1 : close])
         if len(args) <= 1:
             continue
-        path = args[0].strip()
-        if not (path.startswith("'") and path.endswith("'")):
+        quoted = re.fullmatch(r"'(.*)'", args[0], re.DOTALL)
+        if quoted is None:
             raise UnsupportedDialect(
-                f"read_*: first argument must be a path literal, got {path!r}"
+                f"read_*: first argument must be a path literal, got {args[0]!r}"
             )
-        path = path[1:-1]
+        path = quoted.group(1)
         fn = m.group(1).lower()
         fmt = {"read_parquet": "parquet"}.get(fn, "csv" if "csv" in fn else "json")
         options: Dict[str, str] = {}

@@ -1,6 +1,8 @@
 """Tap-query validation (reference: ankaflow/common/util.py:386-425 —
-same rules, regex/heuristic implementation since no SQL parser library
-is available here).
+same rules). No SQL parser library is available here, so the rules run
+as keyword patterns over the code tokens of the SQL front's lexer
+(``rewrite.lex``): keywords inside string literals, quoted names,
+comments or hints never count, and comments read as whitespace.
 
 Tap queries run against a *source placeholder* before materialization;
 the reference restricts them to simple selects so the ranking rewrite
@@ -12,7 +14,7 @@ from __future__ import annotations
 
 import re
 
-from .rewrite import _split_literals
+from .rewrite import CODE, lex
 
 
 class QueryValidationError(ValueError):
@@ -26,7 +28,7 @@ _UNION_RE = re.compile(r"\b(union|intersect|except)\b", re.IGNORECASE)
 
 
 def _code_only(sql: str) -> str:
-    return "".join(chunk for is_lit, chunk in _split_literals(sql) if not is_lit)
+    return " ".join(sql[s:e] for kind, s, e in lex(sql) if kind == CODE)
 
 
 def validate_simple_query(sql: str, ranking_enabled: bool = False) -> None:

@@ -175,6 +175,31 @@ def test_comprehension_matches_python(items, mul):
 
 @given(_sql_texts)
 @settings(max_examples=200, suppress_health_check=[HealthCheck.too_slow])
+def test_comment_is_whitespace(sql):
+    """A trailing comment holding a quote and open brackets changes
+    neither the rewrite (up to whitespace) nor the tap validator's
+    verdict, for any SQL text that leaves no quote open."""
+    from hypothesis import assume
+
+    from ankaflow_spark.sqlfront.rewrite import COMMENT, lex, rewrite_sql
+    from ankaflow_spark.sqlfront.validate import validate_simple_query
+
+    commented = sql + "\n-- it's ( ["
+    assume(lex(commented)[-1][0] == COMMENT)
+
+    def outcome(fn, text):
+        try:
+            out = fn(text)
+        except Exception as exc:  # the same error either way
+            return type(exc), " ".join(str(exc).split())
+        return " ".join(out.split()) if isinstance(out, str) else out
+
+    for fn in (lambda s: rewrite_sql(s, {"abc": "v_abc"}), validate_simple_query):
+        assert outcome(fn, commented) == outcome(fn, sql)
+
+
+@given(_sql_texts)
+@settings(max_examples=200, suppress_health_check=[HealthCheck.too_slow])
 def test_star_replace_total(sql):
     """Total on arbitrary input: either rewrites a well-formed REPLACE,
     raises the typed UnsupportedDialect, or leaves text unchanged."""

@@ -184,3 +184,61 @@ def test_stream_queries_run_only_through_the_stream_driver():
                         offenders.append(f"{path}:{node.lineno} foreachBatch")
     assert not offenders, offenders
     assert in_driver == 1
+
+
+_QUOTE_CHARS = set("'\"`")
+
+
+def _quote_comparisons(tree):
+    """(line, enclosing function) of every comparison of a value with a
+    quote character: ``==``/``in`` and friends, and ``startswith`` /
+    ``endswith`` calls."""
+    found = []
+
+    def quoted(node):
+        if isinstance(node, ast.Tuple):
+            return any(quoted(elt) for elt in node.elts)
+        return isinstance(node, ast.Constant) and isinstance(node.value, str) and bool(
+            _QUOTE_CHARS & set(node.value)
+        )
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if isinstance(node, ast.Compare):
+            operands = [node.left, *node.comparators]
+        elif isinstance(node, ast.Call) and getattr(node.func, "attr", None) in (
+            "startswith",
+            "endswith",
+        ):
+            operands = node.args
+        else:
+            operands = []
+        if any(quoted(o) for o in operands):
+            found.append((node.lineno, func))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(tree, None)
+    return found
+
+
+def test_sql_text_is_read_only_through_the_lexer():
+    """String literals, quoted names and comments are told apart in one
+    place, the SQL front's lexer (``sqlfront/rewrite.py:lex``): no other
+    function in sqlfront/ or session.py compares a character with a
+    quote, so no pass can re-track quotes on its own and drift."""
+    pkg = os.path.join(REPO, "ankaflow_spark")
+    sqlfront = os.path.join(pkg, "sqlfront")
+    lexer = (os.path.join(sqlfront, "rewrite.py"), "lex")
+    modules = [(p, t) for p, t in _engine_modules() if os.path.dirname(p) == sqlfront]
+    assert len(modules) >= 4, modules
+    with open(os.path.join(pkg, "session.py")) as fh:
+        modules.append((os.path.join(pkg, "session.py"), ast.parse(fh.read())))
+    offenders = [
+        f"{path}:{line} in {func}"
+        for path, tree in modules
+        for line, func in _quote_comparisons(tree)
+        if (path, func) != lexer
+    ]
+    assert not offenders, offenders

@@ -791,10 +791,10 @@ class TestRound5Dialect:
             n("SELECT x[a+1:b*2] FROM t")
 
     def test_split_args_bracket_aware(self):
-        from ankaflow_spark.sqlfront.rewrite import _split_args
+        from ankaflow_spark.sqlfront.rewrite import _split_top_level
 
-        assert _split_args("[1,2,3], 'sum'") == ["[1,2,3]", "'sum'"]
-        assert _split_args("{'a': 1, 'b': 2}, y") == ["{'a': 1, 'b': 2}", "y"]
+        assert _split_top_level("[1,2,3], 'sum'") == ["[1,2,3]", "'sum'"]
+        assert _split_top_level("{'a': 1, 'b': 2}, y") == ["{'a': 1, 'b': 2}", "y"]
 
     def test_from_first(self):
         from ankaflow_spark.sqlfront.rewrite import normalize_dialect as n
@@ -846,3 +846,92 @@ class TestStringSimilarityRewrites:
 
         with _pytest.raises(UnsupportedDialect):
             rewrite_sql("SELECT jaro_similarity('a', 'b')", {})
+
+
+# -- one lexer: every pass reads strings, quoted names and comments alike --
+
+
+@pytest.mark.parametrize(
+    "sql, verdict",
+    [
+        ("SELECT a FROM t -- it's\n JOIN u ON t.k = u.k", "tap queries cannot contain JOINs"),
+        ("SELECT a FROM t -- no join here", None),
+    ],
+    ids=["join-after-comment-apostrophe", "join-inside-comment"],
+)
+def test_validator_reads_comments_as_whitespace(sql, verdict):
+    if verdict is None:
+        validate_simple_query(sql)
+    else:
+        with pytest.raises(QueryValidationError, match=verdict):
+            validate_simple_query(sql)
+
+
+@pytest.mark.parametrize(
+    "sql, want",
+    [
+        (
+            "SELECT -- the user's flag\n Fn.eq(a, b) AS f FROM t",
+            "SELECT (a = b) AS f FROM t",
+        ),
+        (
+            "SELECT a AS \"owner's id\", Fn.eq(a, b) AS f FROM t",
+            "SELECT a AS `owner's id`, (a = b) AS f FROM t",
+        ),
+        ("SELECT a FROM t -- no QUALIFY here", "SELECT a FROM t"),
+        (
+            "SELECT * FROM (SELECT DISTINCT ON (a) a, b FROM t"
+            " ORDER BY a, concat(b, ')')) x LIMIT 3",
+            "SELECT * FROM (SELECT a, b FROM t QUALIFY ROW_NUMBER() OVER"
+            " (PARTITION BY a ORDER BY a, concat(b, ')')) = 1"
+            " ORDER BY a, concat(b, ')')) x LIMIT 3",
+        ),
+    ],
+    ids=[
+        "fn-after-comment-apostrophe",
+        "fn-after-quoted-name-apostrophe",
+        "qualify-inside-comment",
+        "distinct-on-paren-in-string",
+    ],
+)
+def test_rewrite_reads_comments_and_quoted_names(sql, want):
+    assert rewrite_sql(sql, {}).split() == want.split()
+
+
+@pytest.mark.parametrize("op", ["UNION", "UNION ALL", "INTERSECT", "EXCEPT"])
+def test_by_name_found_after_comment_apostrophe(op):
+    from ankaflow_spark.sqlfront.statements import parse_by_name_setop
+
+    spec = parse_by_name_setop(f"SELECT a FROM t -- don't\n{op} BY NAME SELECT a FROM u")
+    assert spec is not None
+    assert (spec["op"], spec["all"], spec["right"]) == (op.split()[0], "ALL" in op, "SELECT a FROM u")
+
+
+def test_by_name_after_comment_executes(engine):
+    df = engine.sql("SELECT 1 AS a, 2 AS b -- don't\nUNION ALL BY NAME SELECT 3 AS b, 4 AS a")
+    assert sorted(tuple(r) for r in df.collect()) == [(1, 2), (4, 3)]
+
+
+def test_hint_kept_verbatim():
+    """``/*+ ... */`` is a hint, not a comment: the bucketed-layout
+    example's MERGE hint reaches Spark byte-for-byte."""
+    import os
+
+    import yaml
+
+    path = os.path.join(os.path.dirname(__file__), "..", "examples", "bucketed_layout.yaml")
+    with open(path) as fh:
+        stages = yaml.safe_load(fh)
+    (sql,) = [s["query"] for s in stages if "/*+" in s.get("query", "")]
+    out = rewrite_sql(sql, {"li_src": "li_src", "ord_src": "ord_src"})
+    assert out.startswith("SELECT /*+ MERGE(l) */ o_orderpriority AS order_priority,")
+
+
+@pytest.mark.parametrize("from_clause", ["a, b", "a , b", "a,b"])
+def test_columns_expr_comma_join_rejected(from_clause):
+    """A comma join is found however it is spaced (the keyword finder
+    bounds words, not punctuation)."""
+    from ankaflow_spark.sqlfront.rewrite import UnsupportedDialect, expand_columns_expr
+
+    with pytest.raises(UnsupportedDialect, match="multi-relation"):
+        expand_columns_expr(f"SELECT COLUMNS(*) FROM {from_clause}", lambda name: [("x", "int")])
