@@ -22,7 +22,6 @@ Reference behavior covered here (studied, not copied):
 
 from __future__ import annotations
 
-import contextlib
 import os
 from typing import Callable, Dict
 
@@ -30,7 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..session import fingerprint, memo, scratch_dir
+from ..session import fingerprint, memo, scoped_conf, scratch_dir
 from .tables import load_tables, table_path
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -4033,26 +4032,6 @@ GROUP BY 1 ORDER BY is_hot
 _Q88_LAST_EXECUTED: str | None = None
 
 
-@contextlib.contextmanager
-def _scoped_conf(spark: SparkSession, conf: Dict[str, str]):
-    """Set session confs around a lever query's INTERNAL execution and
-    restore them unset-aware afterwards (a key the session never set
-    explicitly stays unset — q88's restore contract, single-sourced
-    for the q88/q90/q91/q92 family after the four hand-maintained
-    copies started to drift, r13 self-review)."""
-    old = {k: spark.conf.get(k, None) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 def _finalize_and_capture(df: DataFrame) -> str:
     """Execute THIS DataFrame's QueryExecution JVM-side (executedPlan
     is the AdaptiveSparkPlanExec; executing its RDD finalizes the
@@ -4111,7 +4090,7 @@ def q88(spark: SparkSession, sf_dir: str) -> DataFrame:
     prof_path = scratch_dir(spark, "q88_profile:" + os.path.abspath(sf_dir))
     spark.sql(_Q88_PROFILE_SQL).write.mode("overwrite").parquet(prof_path)
     spark.read.parquet(prof_path).createOrReplaceTempView("__q88_profile__")
-    with _scoped_conf(spark, _Q88_SKEW_CONF):
+    with scoped_conf(spark, _Q88_SKEW_CONF):
         joined = spark.sql(_Q88_JOIN_SQL)
         _Q88_LAST_EXECUTED = _finalize_and_capture(joined)
     # the caller's later action reuses the finalized plan captured
@@ -4218,7 +4197,7 @@ _Q90_LAST_EXECUTED: str | None = None
 def q90(spark: SparkSession, sf_dir: str) -> DataFrame:
     global _Q90_LAST_EXECUTED
     load_tables(spark, sf_dir)
-    with _scoped_conf(spark, {"spark.sql.shuffle.partitions": "512"}):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "512"}):
         df = spark.sql(_Q90_SQL)
         _Q90_LAST_EXECUTED = _finalize_and_capture(df)
     return df
@@ -4298,7 +4277,7 @@ _Q91_BLOOM_CONF = {
 def q91(spark: SparkSession, sf_dir: str) -> DataFrame:
     global _Q91_LAST_EXECUTED
     load_tables(spark, sf_dir)
-    with _scoped_conf(spark, _Q91_BLOOM_CONF):
+    with scoped_conf(spark, _Q91_BLOOM_CONF):
         df = spark.sql(_Q91_SQL)
         _Q91_LAST_EXECUTED = _finalize_and_capture(df)
     return df
@@ -4378,7 +4357,7 @@ _Q92_SHJ_CONF = {
 def q92(spark: SparkSession, sf_dir: str) -> DataFrame:
     global _Q92_LAST_EXECUTED
     load_tables(spark, sf_dir)
-    with _scoped_conf(spark, _Q92_SHJ_CONF):
+    with scoped_conf(spark, _Q92_SHJ_CONF):
         df = spark.sql(_Q92_SQL)
         _Q92_LAST_EXECUTED = _finalize_and_capture(df)
     return df

@@ -242,7 +242,17 @@ def handle_stream(flow: Flow, stage: Stage) -> DataFrame:
     ``params.state_store`` selects the state store provider for this
     stage's query: ``rocksdb`` (off-heap RocksDB state — the
     production setting for large stores) or ``hdfs`` (Spark's
-    heap-backed default). Omitted = session setting untouched."""
+    heap-backed default). Omitted = session setting untouched.
+
+    The windowed_agg, dedup, sessionize and static_join ops run on the
+    memory sink, whose state partitions are sized to the input:
+    ``ceil(bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)``
+    clamped to [1, spark.sql.shuffle.partitions], with a single-file
+    locator's symlink dir sized by the file it links to. A query with
+    any input that is not a local file source (static_join's dimension
+    table, for one) keeps the session value. Every op checkpoints
+    through Spark's FileSystem-based checkpoint manager (local
+    checkpoints; see ``streaming/stream.py``)."""
     from ..streaming.stream import (
         run_stream_to_memory,
         stream_tap,

@@ -28,6 +28,7 @@ to the driver.
 from __future__ import annotations
 
 import atexit
+import contextlib
 import glob
 import hashlib
 import os
@@ -124,6 +125,27 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, conf: Dict[str, str]):
+    """Set session confs for the length of a block and restore them
+    unset-aware afterwards, also when the block raises: a key that read
+    as unset at entry is unset again instead of pinned to a value. The
+    one place the engine sets and restores session confs (q88-q92's
+    lever queries, stream queries' state store, checkpoint manager and
+    state partitions)."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 _MANGLE_RE = re.compile(r"[^A-Za-z0-9_]")

@@ -21,19 +21,39 @@ rewritten every batch, or an APPEND of per-batch outputs — and return
 a pinned batch DataFrame (see ``_drive`` for the result and
 empty-source contracts). It is the same code shape a cluster
 deployment points at kafka + a Delta sink.
+
+Two fixed costs of a bounded query are sized here, not left at the
+session's settings:
+
+* checkpoint manager: ``_drain`` runs every query on Spark's
+  FileSystem-based checkpoint manager, since every checkpoint of this
+  module is a local directory where a rename is atomic; the default
+  FileContext manager forks a process per link check, create and
+  mkdir on a host without native Hadoop. A session checkpoint root on
+  another filesystem keeps the default.
+* state partitions: ``run_stream_to_memory`` (availableNow, fresh
+  checkpoint) runs ``ceil(input bytes / advisory partition size)``
+  state stores, clamped to [1, spark.sql.shuffle.partitions] — AQE's
+  rule for a batch shuffle — when every source is a local file source;
+  otherwise the session value. ``_drive`` queries keep the session
+  value: they hold no Spark state store, and ``feeds`` add input
+  after start.
 """
 
 from __future__ import annotations
 
-import contextlib
+import math
 import os
 import shutil
 import time
 from typing import List, Optional
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
+
+from ..session import scoped_conf
 
 #: the two state store providers Spark ships. The default
 #: (HDFS-backed) keeps every store's working set on the executor HEAP —
@@ -71,40 +91,27 @@ _ROCKSDB_CHANGELOG_KEY = (
 )
 
 
-@contextlib.contextmanager
 def state_store_conf(spark: SparkSession, provider: Optional[str]):
     """Scope the state store provider to one streaming query: the
     provider class is read from the SESSION conf when the query starts,
     so it is set before `.start()` and restored unset-aware afterwards
-    (q88's restore pattern). `provider` is a STATE_STORE_PROVIDERS key
+    (``session.scoped_conf``). `provider` is a STATE_STORE_PROVIDERS key
     or None (leave the session setting untouched). The rocksdb provider
     also enables changelog checkpointing (see _ROCKSDB_CHANGELOG_KEY —
     incremental per-batch commits instead of full-snapshot fsyncs),
     scoped and restored the same way."""
-    if provider is None:
-        yield
-        return
-    try:
-        cls = STATE_STORE_PROVIDERS[provider]
-    except KeyError:
-        raise ValueError(
-            f"unknown state_store {provider!r} "
-            f"(one of {sorted(STATE_STORE_PROVIDERS)})"
-        ) from None
-    scoped = {_PROVIDER_KEY: cls}
-    if provider == "rocksdb":
-        scoped[_ROCKSDB_CHANGELOG_KEY] = "true"
-    old = {k: spark.conf.get(k, None) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, prev in old.items():
-            if prev is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, prev)
+    scoped = {}
+    if provider is not None:
+        try:
+            scoped[_PROVIDER_KEY] = STATE_STORE_PROVIDERS[provider]
+        except KeyError:
+            raise ValueError(
+                f"unknown state_store {provider!r} "
+                f"(one of {sorted(STATE_STORE_PROVIDERS)})"
+            ) from None
+        if provider == "rocksdb":
+            scoped[_ROCKSDB_CHANGELOG_KEY] = "true"
+    return scoped_conf(spark, scoped)
 
 
 def stream_tap(
@@ -168,36 +175,133 @@ def streaming_dedup(
     return events.withWatermark(ts_col, watermark).dropDuplicates(subset=keys)
 
 
-def _drain(writer, feeds=(), progress_out: Optional[list] = None):
+#: Spark's FileSystem-API checkpoint manager. The default manager goes
+#: through Hadoop's FileContext, whose local filesystem — on a host
+#: without the native libhadoop — forks a `readlink` for every link
+#: check and a `chmod` for every create and mkdir: 661 of the 664
+#: process spawns of a flows_sf001 pass, 496 of them `readlink`
+#: (PERF.md). On a local
+#: directory the FileSystem manager's rename is an atomic rename(2), so
+#: the write-temp-then-rename commit of every log and state file keeps
+#: its guarantee; the Hadoop `.crc` files and the state-store checksum
+#: files stay. The package is `...streaming.checkpointing` since Spark
+#: 4.1 (tests/test_streaming.py loads the class by this name).
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_conf(spark: SparkSession) -> dict:
+    """The checkpoint-manager scope of a query of this module. Every
+    checkpoint it writes is local — Spark's temp dir for memory sinks,
+    ``<state_base>_ckpt`` under the scratch root for ``_drive`` — unless
+    the session names a checkpoint root on another filesystem
+    (``spark.sql.streaming.checkpointLocation``, a scheme-less path
+    resolving against ``fs.defaultFS``); then Spark's default manager
+    stays."""
+    root = spark.conf.get("spark.sql.streaming.checkpointLocation", None)
+    if root:
+        scheme = urlparse(root).scheme or urlparse(
+            spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS") or ""
+        ).scheme
+        if scheme not in ("", "file"):
+            return {}
+    return {_CHECKPOINT_MANAGER_KEY: _FS_CHECKPOINT_MANAGER}
+
+
+def _drain(spark: SparkSession, writer, feeds=(), progress_out: Optional[list] = None):
     """Start ``writer``'s query, drain it and stop it (also when a batch
     or a feed raises): the one place a query of this module runs.
     ``feeds`` are callables that make more source data available; the
     query is drained again after each one. ``progress_out``, when a
     list, receives the engine's per-batch progress rows, harvested
-    before ``stop()``. Returns the query."""
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-        for feed in feeds:
-            feed()
+    before ``stop()``. The checkpoint manager (``_checkpoint_conf``) is
+    scoped from before ``start()`` to after ``stop()``: the stream
+    thread reads parts of it from this session's conf, not only from
+    the clone the query makes at start. Returns the query."""
+    with scoped_conf(spark, _checkpoint_conf(spark)):
+        q = writer.start()
+        try:
             q.processAllAvailable()
-        if progress_out is not None:
-            progress_out.extend(q.recentProgress or [])
-    finally:
-        q.stop()
+            for feed in feeds:
+                feed()
+                q.processAllAvailable()
+            if progress_out is not None:
+                progress_out.extend(q.recentProgress or [])
+        finally:
+            q.stop()
     return q
+
+
+def _local_bytes(path: str) -> Optional[int]:
+    """Summed size of the files under a local directory (file: URI or
+    plain path), following symlinks: ``handle_stream`` stages a
+    single-file locator as a dir holding one symlink, which must size
+    by its target. None when the path is not a local directory (a glob,
+    a remote URI)."""
+    parsed = urlparse(path)
+    if parsed.scheme == "file":
+        path = parsed.path
+    elif parsed.scheme:
+        return None
+    if not os.path.isdir(path):
+        return None
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path, followlinks=True)
+        for f in files
+    )
+
+
+def _state_partitions(stream_df: DataFrame) -> Optional[int]:
+    """State partitions for a bounded query over ``stream_df``: the rule
+    AQE applies to a batch shuffle, ``ceil(input bytes / advisory
+    partition size)`` clamped to [1, spark.sql.shuffle.partitions], with
+    the input bytes summed over the file sources behind the plan's
+    ``StreamingRelation`` leaves. None (keep the session value) when any
+    leaf is not a local file source. A state store per partition
+    commits delta and checksum files every batch, so a few KB of state
+    on 8 stores is 8x the fixed commit work of one."""
+    spark = stream_df.sparkSession
+    total = 0
+    leaves = stream_df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName() != "StreamingRelation":
+            return None
+        path = leaf.dataSource().options().get("path")
+        size = _local_bytes(path.get()) if path.isDefined() else None
+        if size is None:
+            return None
+        total += size
+    advisory = spark._jsparkSession.sessionState().conf().getConf(
+        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    session = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(session, math.ceil(total / advisory)))
 
 
 def run_stream_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
     """Drive a bounded stream to completion into an in-memory table and
     return the query handle (caller reads ``spark.sql(f"SELECT * FROM
-    {name}")``). Test helper; production sinks are files/kafka."""
-    return _drain(
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-    )
+    {name}")``). Test helper; production sinks are files/kafka.
+
+    The query runs ``availableNow`` on a fresh checkpoint, so it reads
+    exactly the input present at start and fixes its state partition
+    count now: ``spark.sql.shuffle.partitions`` is scoped to
+    ``_state_partitions`` for it."""
+    parts = _state_partitions(stream_df)
+    conf = {} if parts is None else {"spark.sql.shuffle.partitions": str(parts)}
+    with scoped_conf(stream_df.sparkSession, conf):
+        return _drain(
+            stream_df.sparkSession,
+            stream_df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True),
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -392,7 +496,7 @@ def _drive(
     writer = writer.foreachBatch(run).option("checkpointLocation", ckpt)
     if not feeds:
         writer = writer.trigger(availableNow=True)
-    _drain(writer, feeds, progress_out)
+    _drain(spark, writer, feeds, progress_out)
     if not ran:
         batch_fn(spark.createDataFrame([], stream_df.schema), 0)
     return read_back(spark).localCheckpoint(eager=True)

@@ -97,13 +97,15 @@ def test_memoized_query_sees_in_place_rewrite(spark, tmp_path):
         forget(spark, "table_views")
 
 
-def _engine_modules():
-    """(path, AST) of every engine module except session.py."""
+def _engine_modules(with_session=False):
+    """(path, AST) of every engine module, session.py only when asked."""
     pkg = os.path.join(REPO, "ankaflow_spark")
     for dirpath, _, files in os.walk(pkg):
         for fname in files:
             path = os.path.join(dirpath, fname)
-            if not fname.endswith(".py") or path == os.path.join(pkg, "session.py"):
+            if not fname.endswith(".py") or (
+                path == os.path.join(pkg, "session.py") and not with_session
+            ):
                 continue
             with open(path) as fh:
                 yield path, ast.parse(fh.read())
@@ -186,6 +188,48 @@ def test_stream_queries_run_only_through_the_stream_driver():
     assert in_driver == 1
 
 
+def _calls_by_function(tree, attr):
+    """(top-level function name, line) of every ``<expr>.<attr>(...)``
+    call in a module."""
+    return [
+        (getattr(top, "name", None), node.lineno)
+        for top in tree.body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == attr
+    ]
+
+
+def test_confs_and_stream_starts_are_scoped_in_one_place():
+    """Session confs are restored in one place, ``session.scoped_conf``
+    (unset-aware, also when the block raises): no other engine function
+    calls ``spark.conf.unset``. Every stream writer starts in
+    ``stream.py:_drain``, which scopes the checkpoint manager from
+    before ``start()`` to after ``stop()``: no other function in
+    stream.py calls ``.start()`` (no other module has a stream writer,
+    see the ``.writeStream`` guard above)."""
+    pkg = os.path.join(REPO, "ankaflow_spark")
+    stream_py = os.path.join(pkg, "streaming", "stream.py")
+    allowed_unset = (os.path.join(pkg, "session.py"), "scoped_conf")
+    offenders, unsets, starts = [], 0, 0
+    for path, tree in _engine_modules(with_session=True):
+        for func, line in _calls_by_function(tree, "unset"):
+            if (path, func) == allowed_unset:
+                unsets += 1
+            else:
+                offenders.append(f"{path}:{line} .unset in {func}")
+        if path != stream_py:
+            continue
+        for func, line in _calls_by_function(tree, "start"):
+            if func == "_drain":
+                starts += 1
+            else:
+                offenders.append(f"{path}:{line} .start() in {func}")
+    assert not offenders, offenders
+    assert (unsets, starts) == (1, 1)
+
+
 _QUOTE_CHARS = set("'\"`")
 
 
@@ -231,10 +275,12 @@ def test_sql_text_is_read_only_through_the_lexer():
     pkg = os.path.join(REPO, "ankaflow_spark")
     sqlfront = os.path.join(pkg, "sqlfront")
     lexer = (os.path.join(sqlfront, "rewrite.py"), "lex")
-    modules = [(p, t) for p, t in _engine_modules() if os.path.dirname(p) == sqlfront]
-    assert len(modules) >= 4, modules
-    with open(os.path.join(pkg, "session.py")) as fh:
-        modules.append((os.path.join(pkg, "session.py"), ast.parse(fh.read())))
+    modules = [
+        (p, t)
+        for p, t in _engine_modules(with_session=True)
+        if os.path.dirname(p) == sqlfront or p == os.path.join(pkg, "session.py")
+    ]
+    assert len(modules) >= 5, modules
     offenders = [
         f"{path}:{line} in {func}"
         for path, tree in modules

@@ -945,3 +945,136 @@ def test_st29_rocksdb_matches_st22_and_proves_provider(spark, sf_dir):
     out22 = QUERIES["st22_stream_survival_bounded"](spark, sf_dir).collect()
     assert len(out29) > 0
     assert [tuple(r) for r in out29] == [tuple(r) for r in out22]
+
+
+def _state_op_partitions(query) -> list:
+    return [op["numShufflePartitions"] for op in query.lastProgress["stateOperators"]]
+
+
+def test_bounded_stream_sizes_state_partitions_to_input(spark, events_stream_dir):
+    """A bounded (availableNow) query over a few dozen KB of parquet
+    runs its state operator on ONE state store, sized like AQE sizes a
+    batch shuffle (input bytes / advisory partition size), not on one
+    store per spark.sql.shuffle.partitions; the rows equal the batch
+    twin's."""
+    path, schema = events_stream_dir
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
+    agg = windowed_agg(
+        stream_tap(spark, path, schema), "ts", window_len="5 minutes",
+        group_cols=["event_type"],
+    )
+    q = run_stream_to_memory(agg, "win_sized_out", output_mode="complete")
+    assert _state_op_partitions(q) == [1]
+    twin = windowed_agg(
+        spark.read.schema(schema).parquet(path), "ts", window_len="5 minutes",
+        group_cols=["event_type"],
+    )
+    key = ["window_start", "event_type"]
+    assert (
+        spark.table("win_sized_out").orderBy(*key).collect()
+        == twin.orderBy(*key).collect()
+    )
+
+
+def test_symlink_staged_file_sizes_by_its_target(spark, tmp_path, sf_dir):
+    """handle_stream stages a single-file locator as a dir holding one
+    symlink: the input must size by the link's target, so with a small
+    advisory partition size the linked file gets several state
+    partitions (sized by the link itself it would collapse to one)."""
+    import math
+    import os
+
+    from ankaflow_spark.session import scoped_conf
+    from ankaflow_spark.streaming.stream import _state_partitions
+
+    target = os.path.join(sf_dir, "events.parquet")
+    staged = tmp_path / "staged"
+    staged.mkdir()
+    os.symlink(target, staged / "events.parquet")
+    schema = spark.read.parquet(str(staged)).schema
+    session = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    advisory = os.path.getsize(target) // 3 + 1
+    agg = stream_tap(spark, str(staged), schema).groupBy("event_type").count()
+    with scoped_conf(spark, {"spark.sql.adaptive.advisoryPartitionSizeInBytes": str(advisory)}):
+        parts = _state_partitions(agg)
+    assert parts == min(session, math.ceil(os.path.getsize(target) / advisory)) > 1
+
+
+def test_non_file_source_keeps_session_partitions(spark, events_stream_dir):
+    """Only file sources can be sized before the query runs: a rate
+    source, or a file stream joined with a non-file relation, keeps
+    spark.sql.shuffle.partitions."""
+    from ankaflow_spark.streaming.stream import _state_partitions
+
+    path, schema = events_stream_dir
+    rate = spark.readStream.format("rate").load()
+    assert _state_partitions(rate.groupBy("value").count()) is None
+    joined = stream_tap(spark, path, schema).join(
+        spark.range(10).withColumnRenamed("id", "user_id"), "user_id"
+    )
+    assert _state_partitions(joined.groupBy("user_id").count()) is None
+
+
+def test_stream_session_uses_filesystem_checkpoint_manager(spark, events_stream_dir, tmp_path):
+    """Inside a foreachBatch callback the stream's session names Spark's
+    FileSystem-based checkpoint manager (its class loads under that
+    name), and the session conf is back to unset after the query."""
+    from ankaflow_spark.streaming.stream import (
+        _CHECKPOINT_MANAGER_KEY,
+        _FS_CHECKPOINT_MANAGER,
+        foreachbatch_append,
+    )
+
+    spark._jvm.java.lang.Class.forName(_FS_CHECKPOINT_MANAGER)
+    assert spark.conf.get(_CHECKPOINT_MANAGER_KEY, None) is None
+    path, schema = events_stream_dir
+    seen = []
+
+    def transform(batch_df):
+        seen.append(batch_df.sparkSession.conf.get(_CHECKPOINT_MANAGER_KEY, None))
+        return batch_df.select("user_id")
+
+    out = foreachbatch_append(
+        stream_tap(spark, path, schema), transform, str(tmp_path / "state")
+    )
+    assert out.count() == spark.read.parquet(path).count()
+    assert seen and set(seen) == {_FS_CHECKPOINT_MANAGER}
+    assert spark.conf.get(_CHECKPOINT_MANAGER_KEY, None) is None
+
+
+def test_checkpoint_root_on_another_filesystem_keeps_default_manager(spark):
+    from ankaflow_spark.session import scoped_conf
+    from ankaflow_spark.streaming.stream import _CHECKPOINT_MANAGER_KEY, _checkpoint_conf
+
+    assert _CHECKPOINT_MANAGER_KEY in _checkpoint_conf(spark)
+    key = "spark.sql.streaming.checkpointLocation"
+    with scoped_conf(spark, {key: "file:/tmp/ckpt"}):
+        assert _CHECKPOINT_MANAGER_KEY in _checkpoint_conf(spark)
+    with scoped_conf(spark, {key: "hdfs://namenode:8020/ckpt"}):
+        assert _checkpoint_conf(spark) == {}
+
+
+def _boom(_):
+    raise RuntimeError("batch failed on purpose")
+
+
+@pytest.mark.parametrize("sink", ["memory", "foreach_batch"])
+def test_stream_confs_restored_when_a_batch_raises(spark, events_stream_dir, tmp_path, sink):
+    """The scoped checkpoint manager and state partitions are restored
+    after a query whose batch raises, as after one that succeeds."""
+    from ankaflow_spark.streaming.stream import _CHECKPOINT_MANAGER_KEY, foreachbatch_append
+
+    path, schema = events_stream_dir
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    stream = stream_tap(spark, path, schema)
+    with pytest.raises(Exception, match="batch failed on purpose"):
+        if sink == "memory":
+            fail = F.raise_error(F.lit("batch failed on purpose")).cast("long")
+            run_stream_to_memory(
+                stream.select(F.coalesce(fail, "user_id").alias("x")).groupBy("x").count(),
+                "raise_out", output_mode="complete",
+            )
+        else:
+            foreachbatch_append(stream, _boom, str(tmp_path / "state"))
+    assert spark.conf.get(_CHECKPOINT_MANAGER_KEY, None) is None
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions

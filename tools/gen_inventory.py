@@ -35,7 +35,7 @@ def main() -> None:
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     qs, osql = mod.queries(), mod.oracle_sql()
-    art = sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, "CORRECTNESS_FULL_r05.json")
+    art = sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, "CORRECTNESS_FULL_r49.json")
     full = json.load(open(art)) if os.path.exists(art) else {}
     groups = collections.defaultdict(list)
     for name in qs:
