@@ -9,11 +9,14 @@ inlines, so the library is expressed twice from one source of truth:
 * **Column builders** (``fn_div(col, col) -> Column``) for DataFrame-API
   users — pure built-in expression compositions, fully codegen'd, no
   Python UDF cost.
-* **SQL UDF registration** at engine connect, so ``SELECT fn_div(a, b)``
-  works inside any transform stage. User SQL written against the
-  reference's spelling (``Fn.div(a, b)``) is rewritten to ``fn_div(a, b)``
-  by the SQL front-end (``ankaflow_spark.sqlfront``) because Spark
-  function names cannot be dot-qualified.
+* **SQL UDF registration** on first use, so ``SELECT fn_div(a, b)``
+  works inside any transform stage: the engine registers the ``fn_*``
+  names a statement references before it runs it, once per session
+  (``register_referenced``), instead of all of them at engine connect.
+  User SQL written against the reference's spelling (``Fn.div(a, b)``)
+  is rewritten to ``fn_div(a, b)`` by the SQL front-end
+  (``ankaflow_spark.sqlfront``) because Spark function names cannot be
+  dot-qualified.
 
 All functions are deterministic scalar expressions — safe at any scale,
 no shuffle, no state.
@@ -21,10 +24,13 @@ no shuffle, no state.
 
 from __future__ import annotations
 
-from typing import Dict, Union
+import re
+from typing import Dict, Iterable, Optional, Union
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import memo
 
 ColumnOrName = Union[Column, str]
 
@@ -407,7 +413,7 @@ def fn_validate_not_between(value, lo, hi, allow_null=True) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# SQL UDF registration (engine connect time)
+# SQL UDF registration (first use in a session)
 # ---------------------------------------------------------------------------
 # One source of truth for the SQL spelling of each Fn: body templates with
 # positional placeholders. These are Spark SQL *scalar SQL UDFs* (Spark 4
@@ -541,14 +547,38 @@ SQL_FN_NAMES = {sig.split("(", 1)[0].strip() for sig in SQL_FN_BODIES}
 USER_FN_NAMES: set = set()
 
 
-def register_engine_functions(spark: SparkSession) -> list:
-    """Register the SQL-callable ``fn_*`` surface. Idempotent. Returns
-    the list of (name, error) pairs that failed to register — a single
-    bad body must not take down the rest of the library."""
+_FN_REF = re.compile(r"\bfn_\w+", re.IGNORECASE)
+
+
+def _registered(spark: SparkSession) -> set:
+    """The built-in names registered on ``spark`` (a session memo)."""
+    return memo(spark, "fn_registered", (), set, durable=True)
+
+
+def register_engine_functions(spark: SparkSession, names: Optional[Iterable[str]] = None) -> list:
+    """Register the SQL-callable ``fn_*`` surface, or only ``names`` of
+    it. Idempotent. Returns the list of (name, error) pairs that failed
+    to register — a single bad body must not take down the rest of the
+    library."""
+    wanted = None if names is None else set(names)
     failures = []
+    done = _registered(spark)
     for signature, body in SQL_FN_BODIES.items():
+        name = signature.split("(", 1)[0]
+        if wanted is not None and name not in wanted:
+            continue
         try:
             spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {signature} RETURN {body}")
+            done.add(name)
         except Exception as exc:  # pragma: no cover - env-dependent
-            failures.append((signature.split("(", 1)[0], exc))
+            failures.append((name, exc))
     return failures
+
+
+def register_referenced(spark: SparkSession, sql: str) -> None:
+    """Register the built-in ``fn_*`` functions ``sql`` names that are not
+    registered on ``spark`` yet. No built-in body calls another ``fn_*``,
+    so the names in the text are all that is needed."""
+    todo = ({m.lower() for m in _FN_REF.findall(sql)} & SQL_FN_NAMES) - _registered(spark)
+    if todo:
+        register_engine_functions(spark, todo)

@@ -38,8 +38,10 @@ def register_macro(spark: SparkSession, name: str, signature: str, body: str) ->
         raise MacroError(f"cannot override built-in macro: {fn_name}")
     if not re.match(r"^\s*\(.*\)\s*RETURNS\s+\S+", signature, re.IGNORECASE | re.DOTALL):
         raise MacroError(f"signature must be '(args) RETURNS TYPE', got: {signature!r}")
+    from .fn import USER_FN_NAMES, register_referenced
+
+    register_referenced(spark, body)  # built-ins the body calls resolve at CREATE
     spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {fn_name}{signature} RETURN {body}")
-    from .fn import USER_FN_NAMES
 
     USER_FN_NAMES.add(fn_name)
     return fn_name

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..sqlfront.ranking import versioned_dedup  # re-export for q06  # noqa: F401
 from ..session import memo
+from ..sources.parquet import read_parquet
 from .tables import load_tables, table_path
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -636,11 +637,11 @@ def cc_persist_pairs(spark: SparkSession, pairs: DataFrame, name: str) -> DataFr
     path = os.path.join(scratch_dir(spark, "cc_pairs:" + name), "pairs")
     pairs = pairs.select("doc_a", "doc_b")
     if os.path.isdir(path):
-        image = spark.read.parquet(path)
+        image = read_parquet(spark, path)
         if pairs.sameSemantics(image):
             return image
     pairs.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def connected_components(
@@ -704,7 +705,7 @@ def connected_components(
     def persist_reset(df: DataFrame, name: str) -> DataFrame:
         path = os.path.join(workdir, name)
         df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
 
     def ckpt_reset(df: DataFrame, name: str) -> DataFrame:
         ck = df.localCheckpoint(eager=True)

@@ -2439,6 +2439,7 @@ def op_band_index_merge(engine, df: DataFrame, params: Dict[str, Any]) -> DataFr
     import shutil
 
     from ..session import scratch
+    from ..sources.parquet import read_parquet
 
     tmp = scratch("band_merge_")
     try:
@@ -2446,7 +2447,7 @@ def op_band_index_merge(engine, df: DataFrame, params: Dict[str, Any]) -> DataFr
             "overwrite"
         ).parquet(tmp)
         (
-            engine.spark.read.parquet(tmp)
+            read_parquet(engine.spark, tmp)
             # whole-buckets-per-task shuffle (write_bucketed's rule):
             # each daily merge appends at most n_buckets files, not
             # n_tasks x n_buckets

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..session import fingerprint, memo, scoped_conf, scratch_dir
+from ..sources.parquet import read_parquet
 from .tables import load_tables, table_path
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -3816,8 +3817,8 @@ def _partitioned_events(spark: SparkSession, sf_dir: str) -> tuple:
             "SELECT DISTINCT day_no, day_no % 7 AS dow FROM (" + _PE_FACT_SQL + ")"
         )
         dim_src.coalesce(1).write.mode("overwrite").parquet(dim_path)
-        fact = spark.read.schema(fact_src.schema).parquet(fact_path)
-        dim = spark.read.schema(dim_src.schema).parquet(dim_path)
+        fact = read_parquet(spark, fact_path, schema=fact_src.schema)
+        dim = read_parquet(spark, dim_path, schema=dim_src.schema)
         return fact, dim
 
     return memo(spark, "events_layout", [table_path(sf_dir, "events")], build)
@@ -4089,7 +4090,7 @@ def q88(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(_Q88_SKEWED_SQL).createOrReplaceTempView("__q88_skewed__")
     prof_path = scratch_dir(spark, "q88_profile:" + os.path.abspath(sf_dir))
     spark.sql(_Q88_PROFILE_SQL).write.mode("overwrite").parquet(prof_path)
-    spark.read.parquet(prof_path).createOrReplaceTempView("__q88_profile__")
+    read_parquet(spark, prof_path).createOrReplaceTempView("__q88_profile__")
     with scoped_conf(spark, _Q88_SKEW_CONF):
         joined = spark.sql(_Q88_JOIN_SQL)
         _Q88_LAST_EXECUTED = _finalize_and_capture(joined)

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import memo, release, scratch
+from ..sources.parquet import read_parquet
 from .tables import load_tables, table_path
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -68,7 +69,7 @@ def _staged(spark: SparkSession, sf_dir: str, name: str, table: str, write) -> t
     def stage() -> tuple:
         path = scratch(name + "_")
         write(t[table], path)
-        return path, spark.read.parquet(path).schema
+        return path, read_parquet(spark, path).schema
 
     return memo(spark, name, [table_path(sf_dir, table)], stage, durable=True)
 
@@ -2138,7 +2139,7 @@ def st26(spark: SparkSession, sf_dir: str) -> DataFrame:
         path = scratch("streammedia_")
         media = synth_media_corrupt(spark, 120)
         media.repartitionByRange(6, "media_id").write.mode("overwrite").parquet(path)
-        return path, spark.read.parquet(path).schema
+        return path, read_parquet(spark, path).schema
 
     # synthetic input: no source files, so one staged copy per session
     staged, schema = memo(spark, "streammedia", (), stage, durable=True)
@@ -2415,7 +2416,7 @@ def st27(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     feed(0)
-    stream = stream_tap(spark, live, spark.read.parquet(staged).schema)
+    stream = stream_tap(spark, live, read_parquet(spark, staged).schema)
     agg = (
         stream.withWatermark("ts", f"{delay_min} minutes")
         .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
@@ -2450,7 +2451,7 @@ def st27(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact row image of the disorder relation (chunking is a
     # partition of it), so GROUP BY over it equals GROUP BY over the
     # corpus without recomputing the md5 rank windows per call
-    spark.read.parquet(staged).createOrReplaceTempView("st27_arrivals")
+    read_parquet(spark, staged).createOrReplaceTempView("st27_arrivals")
     # LEFT join from the arrival side: an event type whose rows are ALL
     # dropped by the watermark has no survivor rows, but must still be
     # reported with n_survived = 0 — the oracle's simulation keeps

@@ -11,11 +11,11 @@ from __future__ import annotations
 import os
 from typing import Dict
 
-import pyarrow.parquet as pq
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..session import forget, memo
+from ..sources.parquet import read_parquet
 
 TABLES = (
     "region",
@@ -42,10 +42,10 @@ def load_tables(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
 
     Works on ANY session, including the driver's vanilla one: pins the
     session to UTC (required for oracle-identical timestamp semantics)
-    and normalizes TIMESTAMP(NANOS) parquet columns to TimestampType —
-    they surface as timestamp_ntz on a default Spark 4 session, or as
-    int64 ns when spark.sql.legacy.parquet.nanosAsLong is set (then
-    converted via bigint `div`, never a lossy double round-trip).
+    and reads each table through ``sources.parquet.read_parquet``: the
+    schema comes from the file's footer (no inference job), and no-tz
+    timestamps of any unit are normalized to TimestampType (NANOS via
+    int64 ns and bigint `div`, never a lossy double round-trip).
 
     The DataFrames and the registered views are session memos keyed by
     the table files' fingerprint: a repeat call costs one fingerprint
@@ -70,17 +70,9 @@ def load_tables(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
 def _read_tables(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
     try:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        # nanos columns fail Spark's parquet converter outright; with the
-        # legacy flag they arrive as int64 ns and are converted below
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    utc_pinned = False
-    try:
-        utc_pinned = spark.conf.get("spark.sql.session.timeZone") == "UTC"
-    except Exception:
-        pass
-    if not utc_pinned:
+    except AnalysisException:
+        pass  # a session that refuses the pin is reported just below
+    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         import warnings
 
         warnings.warn(
@@ -88,37 +80,8 @@ def _read_tables(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
             "casts below will shift values by the session timezone offset",
             stacklevel=2,
         )
-    dfs: Dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = table_path(sf_dir, name)
-        if not os.path.exists(path):
-            continue
-        df = spark.read.parquet(path)
-        probe = path
-        if os.path.isdir(path):
-            import glob
-
-            parts = glob.glob(os.path.join(path, "*.parquet"))
-            probe = parts[0] if parts else None
-        ns_cols = (
-            {field.name for field in pq.read_schema(probe) if str(field.type) == "timestamp[ns]"}
-            if probe
-            else set()
-        )
-        for col, dtype in df.dtypes:
-            if dtype == "bigint" and col in ns_cols:
-                df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
-            elif dtype == "timestamp_ntz":
-                # parquet timestamps without a timezone (any unit — the
-                # driver has shipped both ns and us over rounds) surface as
-                # NTZ on a default Spark 4 session; watermarks and
-                # unix_micros need TIMESTAMP, and the UTC session pin makes
-                # the cast value-identical to DuckDB's naive reading.
-                # TimestampType() (not the "timestamp" alias): the alias
-                # follows spark.sql.timestampType, which a host session may
-                # set to TIMESTAMP_NTZ, silently making this cast a no-op.
-                from pyspark.sql.types import TimestampType
-
-                df = df.withColumn(col, F.col(col).cast(TimestampType()))
-        dfs[name] = df
-    return dfs
+    return {
+        name: read_parquet(spark, table_path(sf_dir, name), timestamps=True)
+        for name in TABLES
+        if os.path.exists(table_path(sf_dir, name))
+    }

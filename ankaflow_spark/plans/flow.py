@@ -8,7 +8,9 @@ once per row of the previous stage (rows cross to the driver — bounded
 by design, the only collect in the engine).
 
 Scale notes: transforms stay lazy (Catalyst fuses across stages); only
-taps materialize (read-once semantics for side-effecting sources). A
+taps materialize (read-once semantics for side-effecting sources), each
+in one job that fills its cache (``SparkEngine.register``); a stream
+stage's result is already in driver memory and is not cached again. A
 sink writes distributed output by default; ``single_file: true``
 coalesces to 1 partition for locator-compatible single-file output —
 documented as a small-result-only option.
@@ -234,7 +236,8 @@ def handle_stream(flow: Flow, stage: Stage) -> DataFrame:
     ``op`` selects the streaming operator: ``windowed_agg`` (default;
     complete mode) or ``dedup`` (append mode). The source schema is
     probed with a batch read of the same locator (schema inference is
-    disallowed on streaming file sources). In production the same stage
+    disallowed on streaming file sources); for parquet it comes from
+    the footer, with no job. In production the same stage
     runs unbounded by swapping the trigger; semantics are identical
     because the operators' state is associative (see operators/streamq
     value-oracle arguments).
@@ -253,6 +256,8 @@ def handle_stream(flow: Flow, stage: Stage) -> DataFrame:
     table, for one) keeps the session value. Every op checkpoints
     through Spark's FileSystem-based checkpoint manager (local
     checkpoints; see ``streaming/stream.py``)."""
+    from ..functions.fn import register_referenced
+    from ..sources.parquet import read_parquet
     from ..streaming.stream import (
         run_stream_to_memory,
         stream_tap,
@@ -285,7 +290,10 @@ def handle_stream(flow: Flow, stage: Stage) -> DataFrame:
             if not os.path.exists(link):
                 os.symlink(locator, link)
             locator = d
-        schema = spark.read.format(fmt).load(locator).schema
+        if fmt == "parquet":
+            schema = read_parquet(spark, locator).schema
+        else:
+            schema = spark.read.format(fmt).load(locator).schema
         stream = stream_tap(
             spark, locator, schema, fmt=fmt,
             max_files_per_trigger=params.get("max_files_per_trigger"),
@@ -378,6 +386,9 @@ def handle_stream(flow: Flow, stage: Stage) -> DataFrame:
                 batch_df.createOrReplaceTempView("__batch__")
                 return batch_df.sparkSession.sql(sql)
 
+            # the batch session is cloned at query start: register the
+            # Fn functions the SQL names on the engine's session first
+            register_referenced(spark, sql)
             base = scratch_dir(spark, f"batchsql:{locator}|{stage.name}") + "/state"
             final = foreachbatch_append(stream, _screen, base)
             return flow.engine.register(stage.name, final)
@@ -388,7 +399,8 @@ def handle_stream(flow: Flow, stage: Stage) -> DataFrame:
             )
         mem = "__stream_" + "".join(c if c.isalnum() else "_" for c in stage.name) + "__"
         run_stream_to_memory(out, mem, output_mode=mode)
-        return flow.engine.register(stage.name, spark.table(mem), materialize=True)
+        # the memory sink already holds the result in driver memory
+        return flow.engine.register(stage.name, spark.table(mem))
 
 
 HANDLERS = {

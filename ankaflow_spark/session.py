@@ -11,8 +11,8 @@ Responsibilities:
   strings (spaces allowed); Spark temp views are identifier-restricted,
   so a deterministic mangling layer maps user names -> view names and
   rewrites references inside user SQL.
-* Register the ``Fn.*`` function surface at connect time (see
-  ``ankaflow_spark.functions``).
+* Register the ``Fn.*`` SQL functions a statement names on its first
+  use in the session (see ``ankaflow_spark.functions``).
 * Own every piece of state that outlives one query: a per-session memo
   of shared relations keyed by input fingerprint, and one per-process
   scratch root for staged copies, state dirs and round-trip files
@@ -39,6 +39,8 @@ import weakref
 from typing import Callable, Dict, List, Optional, Sequence, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .sources.parquet import read_parquet
 
 _V = TypeVar("_V")
 
@@ -298,23 +300,23 @@ class SparkEngine:
         # user stage name -> mangled temp view name
         self._views: Dict[str, str] = {}
         self._cached: Dict[str, DataFrame] = {}
-        from .functions.fn import register_engine_functions
-
-        register_engine_functions(self.spark)
 
     # -- registry ---------------------------------------------------------
     def register(self, name: str, df: DataFrame, materialize: bool = False) -> DataFrame:
         """Register ``df`` under stage name ``name``.
 
         ``materialize=True`` reproduces the reference's tap semantics
-        (DuckDB CTAS = eager table): cache + trigger a count so that
-        side-effecting sources (REST/LLM) execute exactly once. Plain
-        transforms stay lazy views so Catalyst can fuse across stages.
+        (DuckDB CTAS = eager table): cache, then fill the cache with one
+        ``noop`` write, one job, so that side-effecting sources
+        (REST/LLM) execute exactly once. (A ``count()`` fills it too,
+        but under AQE that is three jobs: the cache stage, a partial
+        count and the result.) Plain transforms stay lazy views so
+        Catalyst can fuse across stages.
         """
         view = mangle_view_name(name)
         if materialize:
             df = df.cache()
-            df.count()  # force; bounded by tap semantics, not a data-path collect
+            df.write.format("noop").mode("overwrite").save()
             self._cached[name] = df
         df.createOrReplaceTempView(view)
         self._views[name] = view
@@ -344,11 +346,14 @@ class SparkEngine:
         3. Light dialect normalization (DuckDB-isms -> Spark).
 
         Comments are stripped first (hints kept), so no statement parser
-        below sees them.
+        below sees them. The ``fn_*`` functions the statement names are
+        registered on their first use in the session.
         """
+        from .functions.fn import register_referenced
         from .sqlfront.rewrite import parse_pivot_statement, rewrite_sql, strip_comments
 
         query = strip_comments(query)
+        register_referenced(self.spark, query)
         summ = re.match(r"(?is)^\s*SUMMARIZE\s+(.+?)\s*;?\s*$", query)
         if summ is not None:
             return self._run_summarize(summ.group(1))
@@ -384,7 +389,9 @@ class SparkEngine:
             except Exception:
                 return None
 
-        return self.spark.sql(rewrite_sql(query, self._views, schema_lookup))
+        rewritten = rewrite_sql(query, self._views, schema_lookup)
+        register_referenced(self.spark, rewritten)  # fn_* names from Fn.* macros
+        return self.spark.sql(rewritten)
 
     def _expand_optioned_readers(self, query: str) -> str:
         """DuckDB ``read_*('path', option=value, ...)`` table functions:
@@ -403,10 +410,18 @@ class SparkEngine:
             return query
         out = query
         for spec in reversed(calls):  # reverse span order keeps offsets valid
-            reader = self.spark.read.format(spec["fmt"]).options(**spec["options"])
-            if spec["schema_ddl"]:
-                reader = reader.schema(spec["schema_ddl"])
-            df = reader.load(spec["path"])
+            if spec["fmt"] == "parquet":
+                df = read_parquet(
+                    self.spark,
+                    spec["path"],
+                    schema=spec["schema_ddl"] or None,
+                    options=spec["options"],
+                )
+            else:
+                reader = self.spark.read.format(spec["fmt"]).options(**spec["options"])
+                if spec["schema_ddl"]:
+                    reader = reader.schema(spec["schema_ddl"])
+                df = reader.load(spec["path"])
             if spec["with_filename"]:
                 df = df.withColumn("filename", F.input_file_name())
             self._gen_view_n = getattr(self, "_gen_view_n", 0) + 1
@@ -611,9 +626,12 @@ class SparkEngine:
             os.remove(path)
         shutil.move(part_file, path)
         shutil.rmtree(tmp)
-        n = self.spark.read.format(fmt).options(
-            **({"header": "true"} if fmt == "csv" else {})
-        ).load(path).count()
+        if fmt == "parquet":
+            n = read_parquet(self.spark, path).count()
+        else:
+            n = self.spark.read.format(fmt).options(
+                **({"header": "true"} if fmt == "csv" else {})
+            ).load(path).count()
         return self.spark.createDataFrame([(n,)], "Count: bigint")
 
     def _run_summarize(self, target: str) -> DataFrame:

@@ -10,7 +10,7 @@ Scope (documented, checked):
 
 * **Read**: `_last_checkpoint` + parquet checkpoint + JSON commits are
   replayed into the active add-file set; data files load through
-  ``spark.read.parquet`` with ``basePath`` so partition columns recover
+  ``read_parquet`` with ``basePath`` so partition columns recover
   from the directory layout. Reader protocol is capped at 2 — tables
   using deletion vectors or column mapping raise a clear error rather
   than returning wrong rows.
@@ -36,6 +36,8 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from .parquet import read_parquet
 
 MAX_READER_VERSION = 2
 MAX_WRITER_VERSION = 2
@@ -87,7 +89,7 @@ def _read_checkpoint(
     if version < 0:
         return -1, {}, None
     ckpt = os.path.join(_log_dir(table_path), f"{version:020d}.checkpoint.parquet")
-    rows = spark.read.parquet(ckpt).collect()
+    rows = read_parquet(spark, ckpt).collect()
     adds: Dict[str, Dict[str, Any]] = {}
     meta: Optional[Dict[str, Any]] = None
     for r in rows:
@@ -183,8 +185,7 @@ def read_delta_table(
             raise ValueError(f"empty Delta table with no schema metadata: {table_path}")
         return spark.createDataFrame([], schema=schema)
     files = [os.path.join(table_path, unquote(p)) for p in sorted(adds)]
-    reader = spark.read.option("basePath", table_path)
-    df = reader.parquet(*files)
+    df = read_parquet(spark, files, options={"basePath": table_path})
     if schema is not None:
         # project to the declared column order (partition columns are
         # appended by the scan; the log's schema is the contract)

@@ -17,13 +17,16 @@ import hashlib
 import os
 import re
 import shutil
+import warnings
 from typing import Any, Dict, List, Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..models.core import Stage
 from ..session import SparkEngine
+from .parquet import read_parquet
 
 _DUCK_TO_SPARK = {
     "VARCHAR": T.StringType(),
@@ -165,20 +168,21 @@ class BaseFileConnection:
     def _schema(self) -> Optional[T.StructType]:
         return fields_to_schema(self.spec.get("fields"))
 
-    def _read(self, exact: bool = False) -> DataFrame:
+    def _reader(self):
         reader = self.engine.spark.read
         schema = self._schema()
-        if schema is not None:
-            reader = reader.schema(schema)
+        return reader.schema(schema) if schema is not None else reader
+
+    def _read(self, exact: bool = False) -> DataFrame:
         opts = dict(self.spec.get("options") or {})
         # the reference wildcard-substitutes every file tap's locator
         # (trailing number group -> *) so partitioned file families read
         # as one glob; `locator_wildcard: false` opts out per connection,
         # and ``exact`` reads the locator itself (a sink's read-back)
         wildcard = not exact and bool(self.spec.get("locator_wildcard", True))
-        return self._do_read(reader, self._locator(use_wildcard=wildcard), opts)
+        return self._do_read(self._locator(use_wildcard=wildcard), opts)
 
-    def _do_read(self, reader, path: str, opts: Dict[str, Any]) -> DataFrame:
+    def _do_read(self, path: str, opts: Dict[str, Any]) -> DataFrame:
         raise NotImplementedError
 
     # -- tap ---------------------------------------------------------------
@@ -250,12 +254,17 @@ class BaseFileConnection:
             return None
         try:
             rb = self._read(exact=True)
-            if [(f.name, f.dataType) for f in rb.schema.fields] == [
-                (f.name, f.dataType) for f in df.schema.fields
-            ]:
-                return rb
-        except Exception:
-            pass
+        except AnalysisException as exc:
+            warnings.warn(
+                f"parquet sink read-back failed ({exc.__class__.__name__}); "
+                "the sink stage keeps its lazy plan",
+                stacklevel=2,
+            )
+            return None
+        if [(f.name, f.dataType) for f in rb.schema.fields] == [
+            (f.name, f.dataType) for f in df.schema.fields
+        ]:
+            return rb
         return None
 
     def sink(self, df: DataFrame, stage: Stage) -> None:
@@ -340,47 +349,15 @@ class BaseFileConnection:
         raise NotImplementedError(f"{self.format} connection does not support sql stages")
 
 
-def convert_ns_timestamps(df: DataFrame, path: str) -> DataFrame:
-    """Normalize TIMESTAMP(NANOS) parquet columns to TimestampType: they
-    surface as timestamp_ntz on a default Spark 4 session, or as int64
-    ns under the nanosAsLong flag (converted via bigint `div` — a double
-    round-trip would lose precision above 2^53 ns)."""
-    try:
-        import pyarrow.parquet as pq
-        from pyspark.sql import functions as F
-
-        files = glob.glob(os.path.join(path, "*.parquet")) if os.path.isdir(path) else [path]
-        if not files or not os.path.exists(files[0]):
-            return df
-        ns_cols = {f.name for f in pq.read_schema(files[0]) if str(f.type) == "timestamp[ns]"}
-        for col, dtype in df.dtypes:
-            if dtype == "bigint" and col in ns_cols:
-                df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
-            elif dtype == "timestamp_ntz":
-                # no-tz parquet timestamps of ANY unit (us as well as ns)
-                # surface as NTZ on a default Spark 4 session; the UTC
-                # session pin makes the cast value-identical to DuckDB.
-                # Explicit TimestampType(): the "timestamp" alias follows
-                # spark.sql.timestampType and may resolve back to NTZ.
-                from pyspark.sql.types import TimestampType
-
-                df = df.withColumn(col, F.col(col).cast(TimestampType()))
-    except Exception:
-        pass
-    return df
-
-
 class ParquetConnection(BaseFileConnection):
     format = "parquet"
 
-    def _do_read(self, reader, path, opts):
+    def _do_read(self, path, opts):
         if opts.pop("union_by_name", None) or opts.pop("mergeSchema", None):
-            reader = reader.option("mergeSchema", "true")
-        try:
-            self.engine.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
-        return convert_ns_timestamps(reader.options(**opts).parquet(path), path)
+            opts["mergeSchema"] = "true"
+        return read_parquet(
+            self.engine.spark, path, schema=self._schema(), options=opts, timestamps=True
+        )
 
 
 class CSVConnection(BaseFileConnection):
@@ -394,7 +371,7 @@ class CSVConnection(BaseFileConnection):
             writer = writer.option("header", "true")
         writer.csv(path)
 
-    def _do_read(self, reader, path, opts):
+    def _do_read(self, path, opts):
         # map the reference's CSV option spelling onto Spark's
         mapped = {
             "header": str(opts.pop("header", True)).lower(),
@@ -404,7 +381,7 @@ class CSVConnection(BaseFileConnection):
         skip = opts.pop("skip", None)
         if self._schema() is None:
             mapped["inferSchema"] = "true"
-        df = reader.options(**mapped, **opts).csv(path)
+        df = self._reader().options(**mapped, **opts).csv(path)
         if skip:
             # no reader option for row-skip; the reference's `skip` applies
             # to physical leading lines — emulate via zipWithIndex-free filter
@@ -418,9 +395,10 @@ class CSVConnection(BaseFileConnection):
 class JSONConnection(BaseFileConnection):
     format = "json"
 
-    def _do_read(self, reader, path, opts):
+    def _do_read(self, path, opts):
         # the reference accepts `format:` at the connection level too
         fmt = str(opts.pop("format", self.spec.get("format", "lines"))).lower()
+        reader = self._reader()
         if fmt in ("array", "auto") or opts.pop("multiline", False):
             reader = reader.option("multiLine", "true")
         return reader.options(**opts).json(path)

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..session import scoped_conf
+from ..sources.parquet import read_parquet
 
 #: the two state store providers Spark ships. The default
 #: (HDFS-backed) keeps every store's working set on the executor HEAP —
@@ -518,7 +519,7 @@ def _fold(
         spark = batch_df.sparkSession
         prev = None
         if published:
-            prev = tuple(spark.read.parquet(p) for p in published[-1])
+            prev = tuple(read_parquet(spark, p) for p in published[-1])
         nxt = dirs[len(published) % 2]
         tables = step(batch_df, prev)
         paths = [f"{nxt}/{i}" for i in range(len(tables))]
@@ -531,7 +532,7 @@ def _fold(
         stream_df,
         state_base,
         fold_batch,
-        lambda spark: spark.read.parquet(published[-1][0]),
+        lambda spark: read_parquet(spark, published[-1][0]),
         dirs,
         metrics=metrics,
     )
@@ -578,7 +579,7 @@ def _append(
     def read_back(spark: SparkSession) -> DataFrame:
         # `batch=N` subdirs surface as a partition column on read-back —
         # an implementation detail of the idempotent layout, not output
-        outputs = spark.read.parquet(out)
+        outputs = read_parquet(spark, out)
         return finish(outputs) if finish else outputs.drop("batch")
 
     return _drive(
@@ -858,12 +859,12 @@ def foreachbatch_first_seen(
             # One read-only scan of the registry; only the batch's NEW
             # grams survive (and get appended below).
             new = batch_first.join(
-                spark.read.parquet(reg).select("g"), "g", "left_anti"
+                read_parquet(spark, reg).select("g"), "g", "left_anti"
             )
         else:
             new = batch_first
         new.write.mode("overwrite").parquet(f"{reg}/gen={batch_id}")
-        new_back = spark.read.parquet(f"{reg}/gen={batch_id}")
+        new_back = read_parquet(spark, f"{reg}/gen={batch_id}")
         return (
             grams.join(new_back, "g", "left")
             .groupBy("id")

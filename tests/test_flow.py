@@ -329,3 +329,83 @@ def test_recursive_cte_transform(engine, sf_dir):
     )
     rows = {r.node: r.n for r in flow.run().collect()}
     assert rows[0] == engine.spark.read.parquet(f"{sf_dir}/part.parquet").count()
+
+
+def _jobs_per_stage(flow):
+    """Run ``flow`` one stage at a time, each under its own job group;
+    returns {stage name: number of jobs the stage's thread submitted}."""
+    import uuid
+
+    sc = flow.engine.spark.sparkContext
+    groups = {}
+    for stage in flow.stages:
+        groups[stage.name] = f"stage-{uuid.uuid4().hex}"
+        sc.setJobGroup(groups[stage.name], stage.name)
+        try:
+            flow._run_stage(stage)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return {name: len(tracker.getJobIdsForGroup(g)) for name, g in groups.items()}
+
+
+def _cache_loaded(spark, df) -> bool:
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    return cached.isDefined() and cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+
+
+def test_tap_stream_sink_job_counts(engine, sf_dir, tmp_path):
+    """A parquet tap fills its cache in one job; a stream stage runs no
+    job besides its query (footer schema probe, memory-sink result not
+    cached again); the sink runs its write and no schema-inference job
+    for the read-back."""
+    import shutil
+
+    src = tmp_path / "events.parquet"
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), src)
+    flow = run_flow(
+        engine,
+        f"""
+- kind: tap
+  name: ev
+  connection: {{kind: parquet, locator: {src}}}
+- kind: stream
+  name: windows
+  connection: {{kind: parquet, locator: {src}}}
+  params: {{ts: ts, window: "5 minutes", keys: [event_type]}}
+- kind: sink
+  name: out
+  connection: {{kind: parquet, locator: {tmp_path / "out" / "windows.parquet"}}}
+""",
+    )
+    jobs = _jobs_per_stage(flow)
+    assert jobs == {"ev": 1, "windows": 0, "out": 1}, jobs
+    assert _cache_loaded(engine.spark, engine.table("ev"))
+    assert flow._last_df.count() == engine.table("windows").count() > 0
+
+
+def test_tap_reads_its_source_once(engine, sf_dir, tmp_path):
+    """A tap's rows are read once, by the tap stage: deleting its file
+    afterwards leaves downstream stages their rows."""
+    import shutil
+
+    src = tmp_path / "documents.parquet"
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), src)
+    want = engine.spark.read.parquet(str(src)).count()
+    flow = run_flow(
+        engine,
+        f"""
+- kind: tap
+  name: docs_once
+  connection: {{kind: parquet, locator: {src}}}
+- kind: transform
+  name: docs_after
+  query: SELECT doc_id FROM docs_once
+""",
+    )
+    tap, transform = flow.stages
+    flow._run_stage(tap)
+    os.remove(src)
+    flow._run_stage(transform)
+    assert flow._last_df.count() == want > 0

@@ -227,3 +227,66 @@ def test_fn_calendar_and_columns_in_sql(engine):
     engine.register("Cols Demo", engine.spark.sql("SELECT 1 AS a, 'x' AS b"))
     rows = engine.sql("SELECT * FROM Fn.columns('Cols Demo') ORDER BY column_name").collect()
     assert [(r["column_name"], r["data_type"]) for r in rows] == [("a", "int"), ("b", "string")]
+
+
+def _fresh_engine(spark):
+    """An engine on a new session of the same context: its own temp
+    functions, views and session registry."""
+    from ankaflow_spark.session import SparkEngine
+
+    return SparkEngine(spark.newSession())
+
+
+def test_fn_functions_register_on_first_use(spark):
+    engine = _fresh_engine(spark)
+    engine.sql("SELECT 1 AS one").collect()
+    assert not engine.spark.catalog.functionExists("fn_div")
+    row = engine.sql("SELECT Fn.div(6, 3) AS a, fn_div(1, 0) AS b").collect()[0]
+    assert (row["a"], row["b"]) == (2.0, 0.0)
+    assert engine.spark.catalog.functionExists("fn_div")
+    assert not engine.spark.catalog.functionExists("fn_trim")
+
+
+def test_fn_functions_in_tap_query_and_transform(spark, tmp_path):
+    from ankaflow_spark.models.core import Stages
+    from ankaflow_spark.plans.flow import Flow
+
+    engine = _fresh_engine(spark)
+    path = str(tmp_path / "nums.parquet")
+    engine.spark.range(1, 5).selectExpr("id", "id * 2.0 AS v").write.parquet(path)
+    flow = Flow(
+        Stages.loads(f"""
+- kind: tap
+  name: nums
+  connection: {{kind: parquet, locator: {path}}}
+  query: SELECT id, Fn.div(v, id) AS ratio FROM source
+- kind: transform
+  name: halves
+  query: SELECT id, fn_div(ratio, 4) AS half FROM nums ORDER BY id
+"""),
+        engine=engine,
+    )
+    rows = flow.run().collect()
+    assert [(r["id"], r["half"]) for r in rows] == [(i, 0.5) for i in range(1, 5)]
+
+
+def test_fn_functions_in_batch_sql_stream_stage(spark, tmp_path):
+    from ankaflow_spark.models.core import Stages
+    from ankaflow_spark.plans.flow import Flow
+
+    engine = _fresh_engine(spark)
+    src = str(tmp_path / "src")
+    engine.spark.range(1, 5).selectExpr("id", "id * 3.0 AS v").write.parquet(src)
+    flow = Flow(
+        Stages.loads(f"""
+- kind: stream
+  name: screened
+  op: batch_sql
+  connection: {{kind: parquet, locator: {src}}}
+  params:
+    sql: SELECT id, fn_div(v, id) AS ratio FROM __batch__
+"""),
+        engine=engine,
+    )
+    rows = flow.run().collect()
+    assert sorted((r["id"], r["ratio"]) for r in rows) == [(i, 3.0) for i in range(1, 5)]

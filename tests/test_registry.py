@@ -288,3 +288,60 @@ def test_sql_text_is_read_only_through_the_lexer():
         if (path, func) != lexer
     ]
     assert not offenders, offenders
+
+
+def _reader_of(node):
+    """``"read"`` or ``"write"``, whichever an expression's
+    call/attribute chain passes last (``spark.read.option(...)``,
+    ``df.write.mode(...)``), else the name the chain starts from."""
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Attribute) and node.attr in ("read", "write"):
+            return node.attr
+        node = node.func if isinstance(node, ast.Call) else node.value
+    return getattr(node, "id", None)
+
+
+def _batch_parquet_reads(tree):
+    """(top-level definition, line) of every batch parquet read in a
+    module: a ``.parquet(...)`` or ``.format("parquet")`` call on a
+    chain through ``.read``, or on a name assigned from such a chain."""
+    readers = {"read"} | {
+        target.id
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Assign) and _reader_of(node.value) == "read"
+        for target in node.targets
+        if isinstance(target, ast.Name)
+    }
+    found = []
+    for top in tree.body:
+        for node in ast.walk(top):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            attr, recv = node.func.attr, node.func.value
+            parquet = attr == "parquet" or (
+                attr == "format"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value == "parquet"
+            )
+            if parquet and _reader_of(recv) in readers:
+                found.append((getattr(top, "name", None), node.lineno))
+    return found
+
+
+def test_parquet_is_read_only_through_the_footer_helper():
+    """Every batch parquet read in the engine goes through
+    ``sources/parquet.py:read_parquet``, which takes the schema from the
+    file's footer instead of running Spark's schema-inference job: no
+    other function calls ``.read.parquet(`` or reads
+    ``format("parquet")`` itself."""
+    helper = (os.path.join(REPO, "ankaflow_spark", "sources", "parquet.py"), "read_parquet")
+    offenders, in_helper = [], 0
+    for path, tree in _engine_modules(with_session=True):
+        for func, line in _batch_parquet_reads(tree):
+            if (path, func) == helper:
+                in_helper += 1
+            else:
+                offenders.append(f"{path}:{line} parquet read in {func}")
+    assert not offenders, offenders
+    assert in_helper == 1

@@ -544,3 +544,111 @@ def test_sink_readback_ignores_wildcard_siblings(engine, tmp_path):
     df = flow.run()
     assert df.count() == 5
     assert {r["tag"] for r in df.collect()} == {"new"}
+
+
+# -- footer schemas (sources/parquet.py) -------------------------------------
+def _same_as_inference(spark, path):
+    """The footer route is taken and gives the schema Spark infers."""
+    from ankaflow_spark.sources.parquet import footer_schema, read_parquet
+
+    assert footer_schema(spark, path) is not None, path
+    assert read_parquet(spark, path).schema == spark.read.parquet(path).schema, path
+
+
+def test_footer_schema_equals_inference_on_every_table(spark, sf_dir):
+    """Every star-schema table of the sf0.01 test data (next to the
+    suite's default scale factor)."""
+    from ankaflow_spark.operators.tables import TABLES, table_path
+
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(sf001):
+        pytest.skip("sf0.01 test data not present")
+    for name in TABLES:
+        _same_as_inference(spark, table_path(sf001, name))
+
+
+def test_footer_schema_equals_inference_on_pyarrow_file(spark, tmp_path):
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pa.table(
+        {
+            "big": pa.array([1, None], pa.int64()),
+            "small": pa.array([1, 2], pa.int8()),
+            "dec": pa.array([decimal.Decimal("1.25"), None], pa.decimal128(10, 2)),
+            "wide": pa.array([decimal.Decimal("1.25"), None], pa.decimal128(30, 2)),
+            "day": pa.array([datetime.date(2024, 1, 1), None], pa.date32()),
+            "ntz": pa.array([1, 2], pa.timestamp("us")),
+            "ltz": pa.array([1, 2], pa.timestamp("us", tz="Europe/Tallinn")),
+            "ms": pa.array([1, 2], pa.timestamp("ms")),
+            "ns": pa.array([1000, 2000], pa.timestamp("ns")),
+            "name": pa.array(["x", None], pa.large_string()),
+            "raw": pa.array([b"x", None], pa.binary()),
+            "flag": pa.array([True, None]),
+            "tags": pa.array([[1, 2], None], pa.list_(pa.int64())),
+            "rows": pa.array([[{"p": 1}], None], pa.list_(pa.struct([("p", pa.int32())]))),
+            "attrs": pa.array([[("k", 1)], None], pa.map_(pa.string(), pa.int32())),
+            "pair": pa.array([{"x": 1, "y": "z"}, None]),
+        }
+    )
+    path = str(tmp_path / "arrow.parquet")
+    pq.write_table(table, path)
+    _same_as_inference(spark, path)
+
+
+def test_footer_schema_equals_inference_on_duckdb_file(spark, tmp_path):
+    duckdb = pytest.importorskip("duckdb")
+    path = str(tmp_path / "duck.parquet")
+    duckdb.connect().execute(
+        f"""COPY (SELECT 1::BIGINT AS big, 1::TINYINT AS tiny, 1.5::DECIMAL(12,3) AS dec,
+                  1.5::DECIMAL(38,3) AS dec38, DATE '2024-01-01' AS day,
+                  TIMESTAMP '2024-01-01 00:00:00' AS ntz,
+                  TIMESTAMPTZ '2024-01-01 00:00:00+00' AS ltz,
+                  TIMESTAMP_NS '2024-01-01 00:00:00' AS ns, 'x' AS name, 'b'::BLOB AS raw,
+                  [1, 2] AS tags, [{{'p': 1}}] AS rows_, MAP {{'k': 1}} AS attrs,
+                  {{'x': 1, 'y': 'z'}} AS pair)
+            TO '{path}' (FORMAT PARQUET)"""
+    )
+    _same_as_inference(spark, path)
+
+
+def test_footer_schema_equals_inference_on_spark_output(spark, tmp_path):
+    path = str(tmp_path / "spark_out")
+    spark.sql(
+        "SELECT 1 AS i, 'x' AS s, DATE'2024-01-01' AS day, "
+        "TIMESTAMP_NTZ'2024-01-01 00:00:00' AS ntz, TIMESTAMP'2024-01-01 00:00:00' AS ltz, "
+        "CAST(1.5 AS DECIMAL(12,3)) AS dec, array(1, 2) AS tags, named_struct('x', 1) AS pair, "
+        "map('k', 1) AS attrs, X'01' AS raw"
+    ).write.parquet(path)
+    _same_as_inference(spark, path)
+
+
+def test_footer_schema_falls_back_to_inference(spark, tmp_path):
+    """INT96 and unsigned columns, a hive-partitioned directory, schema
+    merging and a remote path leave the schema to Spark."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ankaflow_spark.sources.parquet import footer_schema, read_parquet
+
+    int96 = str(tmp_path / "int96.parquet")
+    pq.write_table(
+        pa.table({"t": pa.array([1000], pa.timestamp("ns"))}),
+        int96,
+        use_deprecated_int96_timestamps=True,
+    )
+    unsigned = str(tmp_path / "uint32.parquet")
+    pq.write_table(pa.table({"u": pa.array([1], pa.uint32())}), unsigned)
+    hive = str(tmp_path / "hive")
+    spark.range(4).selectExpr("id", "id % 2 AS k").write.partitionBy("k").parquet(hive)
+    for path in (int96, unsigned, hive):
+        assert footer_schema(spark, path) is None, path
+        assert read_parquet(spark, path).schema == spark.read.parquet(path).schema, path
+    plain = str(tmp_path / "plain.parquet")
+    pq.write_table(pa.table({"a": pa.array([1], pa.int64())}), plain)
+    assert footer_schema(spark, plain) is not None
+    assert footer_schema(spark, plain, {"mergeSchema": "true"}) is None
+    assert footer_schema(spark, "s3a://bucket/prefix/plain.parquet") is None

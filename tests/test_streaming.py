@@ -367,12 +367,9 @@ def test_stream_stage_upsert_op(engine, sf_dir):
     assert row.n_state == row.n_keys > 0  # exactly one row per key
 
 
-def test_st11_counts_merge_across_triggers(spark):
+def test_st11_counts_merge_across_triggers(spark, tmp_path):
     """foreachbatch_merge_counts must equal the batch GROUP BY when the
     stream is sliced into several micro-batches."""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ankaflow_spark.streaming.stream import (
@@ -380,7 +377,7 @@ def test_st11_counts_merge_across_triggers(spark):
         stream_tap,
     )
 
-    src = os.path.join(tempfile.gettempdir(), "st11_unit_src")
+    src = str(tmp_path / "st11_unit_src")
     df = spark.range(0, 300).select(
         F.col("id").alias("event_id"), (F.col("id") % 7).alias("user_id")
     )
