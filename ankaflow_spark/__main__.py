@@ -40,7 +40,7 @@ def _resolve_yaml_path(path_arg: str) -> str:
             pkg = files("ankaflow_spark") / "examples" / "demo.yaml"
             if pkg.is_file():
                 return str(pkg)
-        except Exception:
+        except (ImportError, OSError):  # package data not importable or not readable
             pass
         here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         candidate = os.path.join(here, "examples", "demo.yaml")

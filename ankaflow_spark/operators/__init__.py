@@ -141,7 +141,4 @@ def clear_shared_caches(spark) -> None:
     from ..session import reset_derived
 
     reset_derived(spark)
-    try:
-        spark.catalog.clearCache()  # drops cached_embeddings' table cache
-    except Exception:
-        pass
+    spark.catalog.clearCache()  # drops cached_embeddings' table cache

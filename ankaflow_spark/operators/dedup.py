@@ -1085,7 +1085,6 @@ def _sem_pair_ctes(spark_dialect: bool, table: str, threshold: float) -> str:
 
 
 def _semdedup_pairs_sql(
-    spark_dialect: bool,
     table: str = "embeddings",
     threshold: float = None,
     k: int = None,
@@ -1094,8 +1093,8 @@ def _semdedup_pairs_sql(
 
     threshold = SEMDEDUP_COSINE if threshold is None else threshold
     k = _sem_k_expr(table) if k is None else k
-    return f"""{ivf_assign_ctes(spark_dialect, table=table, k=k)},
-    {_sem_pair_ctes(spark_dialect, table, threshold)}"""
+    return f"""{ivf_assign_ctes(False, table=table, k=k)},
+    {_sem_pair_ctes(False, table, threshold)}"""
 
 
 def semdedup_pairs_df(
@@ -1207,7 +1206,7 @@ def d10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["d10_semantic_dedup"] = f"""
-    WITH RECURSIVE {_semdedup_pairs_sql(False)},
+    WITH RECURSIVE {_semdedup_pairs_sql()},
     -- MATERIALIZED (DuckDB-only hint; this text never runs on Spark):
     -- the recursive closure references semedges per iteration, and an
     -- inlined semedges re-executes the ENTIRE IVF+pair chain each
@@ -2257,6 +2256,7 @@ def d24(spark: SparkSession, sf_dir: str) -> DataFrame:
 # work to DuckDB); composes d01's rule with q73's drift framing.
 # ---------------------------------------------------------------------------
 def _dedup_bias_sql(spark_dialect: bool, keys_rel: str | None = None) -> str:
+    # Spark twin kept for its BROADCAST hint, which the oracle text cannot carry unchanged
     if spark_dialect:
         key = "md5(concat_ws(' ', array_sort(array_distinct(split(lower(text), ' ')))))"
     else:

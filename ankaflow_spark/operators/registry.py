@@ -24,6 +24,8 @@ from typing import Any, Callable, Dict
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sqlfront.rewrite import rewrite_sql
+
 OPERATORS: Dict[str, Callable] = {}
 
 
@@ -1668,7 +1670,7 @@ def op_dow_seasonality(engine, df: DataFrame, params: Dict[str, Any]) -> DataFra
         .localCheckpoint(eager=True)
     )
     daily.createOrReplaceTempView("__dowseas_daily__")
-    return engine.spark.sql(_dow_tail_sql("__dowseas_daily__", True))
+    return engine.spark.sql(rewrite_sql(_dow_tail_sql("__dowseas_daily__"), {}))
 
 
 @operator("repeat_gaps")
@@ -1844,7 +1846,7 @@ def op_langid_confusion(engine, df: DataFrame, params: Dict[str, Any]) -> DataFr
         F.col(text).alias("text"),
     ).createOrReplaceTempView(view)
     return engine.spark.sql(
-        _langid_confusion_sql(True).replace("FROM documents", f"FROM {view}")
+        rewrite_sql(_langid_confusion_sql().replace("FROM documents", f"FROM {view}"), {})
     )
 
 
@@ -2167,7 +2169,7 @@ def op_retention_ttl(engine, df: DataFrame, params: Dict[str, Any]) -> DataFrame
         F.col(key).alias("event_type"), F.col(ts_col).alias("ts")
     ).createOrReplaceTempView("__op_retention_ttl__")
     return engine.spark.sql(
-        _ttl_sql(True, table="__op_retention_ttl__", ttl_case=case)
+        rewrite_sql(_ttl_sql(table="__op_retention_ttl__", ttl_case=case), {})
     )
 
 
@@ -2184,7 +2186,7 @@ def op_seasonal_anomaly(engine, df: DataFrame, params: Dict[str, Any]) -> DataFr
         "__op_seasonal_anomaly__"
     )
     return engine.spark.sql(
-        _seasonal_anomaly_sql(True, table="__op_seasonal_anomaly__")
+        rewrite_sql(_seasonal_anomaly_sql(table="__op_seasonal_anomaly__"), {})
     )
 
 
@@ -2217,7 +2219,7 @@ def op_value_quantiles(engine, df: DataFrame, params: Dict[str, Any]) -> DataFra
     )
     state.createOrReplaceTempView("__op_value_quantiles__")
     return engine.spark.sql(
-        _stream_quantile_sql("__op_value_quantiles__", True, width=width)
+        rewrite_sql(_stream_quantile_sql("__op_value_quantiles__", width=width), {})
     )
 
 
@@ -2329,7 +2331,7 @@ def op_max_drawdown(engine, df: DataFrame, params: Dict[str, Any]) -> DataFrame:
     df.select(
         F.col(key).alias("event_type"), F.col(ts_col).alias("ts")
     ).createOrReplaceTempView("__op_max_drawdown__")
-    return engine.spark.sql(_drawdown_sql(True, table="__op_max_drawdown__"))
+    return engine.spark.sql(rewrite_sql(_drawdown_sql(table="__op_max_drawdown__"), {}))
 
 
 @operator("token_budget")
@@ -2347,7 +2349,7 @@ def op_token_budget(engine, df: DataFrame, params: Dict[str, Any]) -> DataFrame:
         F.col(group).alias("source"),
         F.col(text_col).alias("text"),
     ).createOrReplaceTempView("__op_token_budget__")
-    return engine.spark.sql(_token_budget_sql(True, table="__op_token_budget__"))
+    return engine.spark.sql(rewrite_sql(_token_budget_sql(table="__op_token_budget__"), {}))
 
 
 @operator("band_index_build")

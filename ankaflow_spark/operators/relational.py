@@ -31,6 +31,7 @@ from pyspark.sql.window import Window as W
 
 from ..session import fingerprint, memo, scoped_conf, scratch_dir
 from ..sources.parquet import read_parquet
+from ..sqlfront.rewrite import rewrite_sql
 from .tables import load_tables, table_path
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1593,6 +1594,7 @@ def q45(spark: SparkSession, sf_dir: str) -> DataFrame:
 # truth, sketches asserted against a tolerance.
 # ---------------------------------------------------------------------------
 def _approx_verdict_sql(spark_dialect: bool) -> str:
+    # Spark twin kept: DuckDB's approx_count_distinct takes no error bound (Spark's is 0.02)
     approx = (
         "approx_count_distinct(o_custkey, 0.02)"
         if spark_dialect
@@ -2064,6 +2066,7 @@ def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the oracle computes its own approximation directly.
 # ---------------------------------------------------------------------------
 def _hll_rollup_sql(spark_dialect: bool) -> str:
+    # Spark twin kept: merging Spark's HLL sketches is the query's subject
     if spark_dialect:
         return """
     WITH daily AS (
@@ -2121,6 +2124,7 @@ def q57(spark: SparkSession, sf_dir: str) -> DataFrame:
 # regime where a 25% relative band is meaninglessly tight).
 # ---------------------------------------------------------------------------
 def _theta_overlap_sql(spark_dialect: bool) -> str:
+    # Spark twin kept: intersecting Spark's Theta sketches is the query's subject
     if spark_dialect:
         est = """
     sketches AS (
@@ -3133,22 +3137,20 @@ _SMALL_FILE_BYTES = 16 * 1024 * 1024
 _ORDERS_FIXED_ROW_BYTES = 32
 
 
-def _partition_planner_sql(spark_dialect: bool) -> str:
-    intdiv = "div" if spark_dialect else "//"
-    # byte length of a VARCHAR: Spark octet_length; DuckDB strlen
-    blen = "octet_length" if spark_dialect else "strlen"
+def _partition_planner_sql() -> str:
+    # strlen is the byte length of a VARCHAR
     return f"""
     WITH parts AS (
       SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
              CAST(COUNT(*) AS BIGINT) AS n_rows,
              CAST(SUM({_ORDERS_FIXED_ROW_BYTES}
-                      + {blen}(o_orderstatus)
-                      + {blen}(o_orderpriority)) AS BIGINT) AS est_bytes
+                      + strlen(o_orderstatus)
+                      + strlen(o_orderpriority)) AS BIGINT) AS est_bytes
       FROM orders GROUP BY 1
     ),
     tot AS (SELECT CAST(SUM(est_bytes) AS BIGINT) AS table_bytes FROM parts)
     SELECT p.mon AS mon, p.n_rows AS n_rows, p.est_bytes AS est_bytes,
-           CAST((p.est_bytes + {_TARGET_FILE_BYTES - 1}) {intdiv} {_TARGET_FILE_BYTES}
+           CAST((p.est_bytes + {_TARGET_FILE_BYTES - 1}) // {_TARGET_FILE_BYTES}
                 AS BIGINT) AS target_files,
            p.est_bytes < {_SMALL_FILE_BYTES} AS small_file,
            CAST(p.est_bytes AS DOUBLE) / t.table_bytes AS bytes_share
@@ -3157,10 +3159,10 @@ def _partition_planner_sql(spark_dialect: bool) -> str:
     """
 
 
-@query("q77_partition_planner", oracle=_partition_planner_sql(False))
+@query("q77_partition_planner", oracle=_partition_planner_sql())
 def q77(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_partition_planner_sql(True))
+    return spark.sql(rewrite_sql(_partition_planner_sql(), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -3186,6 +3188,7 @@ _FRESH_SLA_MIN = 60
 def _freshness_sql(
     spark_dialect: bool, table: str = "events", per_rel: str | None = None
 ) -> str:
+    # Spark twin kept for its BROADCAST hint, which the oracle text cannot carry unchanged
     epoch = "unix_micros" if spark_dialect else "epoch_us"
     intdiv = "div" if spark_dialect else "//"
     day_us = 86400 * 1000000
@@ -3436,19 +3439,15 @@ _TTL_DAYS_CASE = (
 )
 
 
-def _ttl_sql(
-    spark_dialect: bool, table: str = "events", ttl_case: str | None = None
-) -> str:
-    epoch = "unix_micros" if spark_dialect else "epoch_us"
-    intdiv = "div" if spark_dialect else "//"
+def _ttl_sql(table: str = "events", ttl_case: str | None = None) -> str:
     day_us = 86400 * 1000000
     ttl_case = ttl_case or _TTL_DAYS_CASE
     return f"""
     WITH base AS (
       SELECT event_type,
              {ttl_case} AS ttl_days,
-             CAST({epoch}(ts) AS BIGINT) AS ts_us,
-             CAST({epoch}(ts) {intdiv} {day_us} AS BIGINT) AS day_no
+             CAST(epoch_us(ts) AS BIGINT) AS ts_us,
+             CAST(epoch_us(ts) // {day_us} AS BIGINT) AS day_no
       FROM {table}
     ),
     edge AS (SELECT CAST(MAX(ts_us) AS BIGINT) AS edge_us FROM base)
@@ -3469,10 +3468,10 @@ def _ttl_sql(
     """
 
 
-@query("q81_retention_ttl_audit", oracle=_ttl_sql(False))
+@query("q81_retention_ttl_audit", oracle=_ttl_sql())
 def q81(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_ttl_sql(True))
+    return spark.sql(rewrite_sql(_ttl_sql(), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -3509,6 +3508,7 @@ def q81(spark: SparkSession, sf_dir: str) -> DataFrame:
 # to DuckDB); the batch calibration study for the st-family watermarks.
 # ---------------------------------------------------------------------------
 def _late_arrival_sql(spark_dialect: bool, table: str = "events") -> str:
+    # Spark twin kept: the two-phase prefix max (scale-shape note above) is a plan, not a spelling
     epoch = "unix_micros" if spark_dialect else "epoch_us"
     intdiv = "div" if spark_dialect else "//"
     if spark_dialect:

@@ -1632,6 +1632,7 @@ _CM_ROWS = ((0, 2654435761), (1, 1566083941), (2, 1103515245), (3, 22695477))
 
 
 def _cm_sql(spark_dialect: bool) -> str:
+    # Spark twin kept for its BROADCAST hint, which the oracle text cannot carry unchanged
     rows = ", ".join(f"({j}, {m})" for j, m in _CM_ROWS)
     # cell_j(u): ((u mod P) * mult_j + j) mod P mod W — BIGINT-safe
     # (2^31 * 2.7e9 < 2^63) and identical arithmetic in both engines.
@@ -2547,20 +2548,19 @@ def _plane_sweep_tail_sql(
     """
 
 
-def _plane_sweep_sql(spark_dialect: bool) -> str:
+def _plane_sweep_sql() -> str:
     """One-string form: the shared tail with sig/norms defined inline
     as CTEs (the oracle's spelling — DuckDB computes multi-referenced
     CTEs once, so inlining costs nothing there)."""
-    norm = _SPARK_NORM if spark_dialect else _DUCK_NORM
     lead = (
-        f"sig AS ({_bucket_sql_n(spark_dialect, _S24_MAXP)}),\n"
-        f"    norms AS ({norm}),\n    "
+        f"sig AS ({_bucket_sql_n(False, _S24_MAXP)}),\n"
+        f"    norms AS ({_DUCK_NORM}),\n    "
     )
-    return _plane_sweep_tail_sql(spark_dialect, "sig", "norms", lead_ctes=lead)
+    return _plane_sweep_tail_sql(False, "sig", "norms", lead_ctes=lead)
 
 
 def s24(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged spelling of _plane_sweep_sql(True) — guide §2.4 shared
+    """Staged Spark spelling of _plane_sweep_sql() — guide §2.4 shared
     work: Spark inlines multiply-referenced CTEs, so the one-string
     form re-ran the 10-plane corpus signature fold three times (occ +
     the approx self-join's two masked sides) and the corpus norm fold
@@ -2582,7 +2582,7 @@ def s24(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["s24_lsh_plane_sweep"] = s24
-ORACLES["s24_lsh_plane_sweep"] = _plane_sweep_sql(False)
+ORACLES["s24_lsh_plane_sweep"] = _plane_sweep_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -2821,9 +2821,8 @@ _CH_ASSIGN = """
     """
 
 
-def _ch_sql(spark_dialect: bool) -> str:
-    intdiv = "div" if spark_dialect else "//"
-    dims = "SELECT * FROM __km_dims__" if spark_dialect else _dims_sql(False)
+def _ch_sql() -> str:
+    dims = _dims_sql(False)
     assign = _CH_ASSIGN
     return f"""
     WITH dims AS ({dims}),
@@ -2845,12 +2844,12 @@ def _ch_sql(spark_dialect: bool) -> str:
     within AS (
       SELECT m2.c,
              CAST(COUNT(*) AS BIGINT) AS n_members,
-             CAST(SUM(m2.dist {intdiv} 1000000) AS BIGINT) AS within_e6
+             CAST(SUM(m2.dist // 1000000) AS BIGINT) AS within_e6
       FROM m2 GROUP BY m2.c
     ),
     between_c AS (
       SELECT c1.c,
-             CAST(SUM((c1.q - g.q) * (c1.q - g.q)) {intdiv} 1000000 AS BIGINT) AS cg_e6
+             CAST(SUM((c1.q - g.q) * (c1.q - g.q)) // 1000000 AS BIGINT) AS cg_e6
       FROM c1 JOIN gcent g ON g.d = c1.d
       GROUP BY c1.c
     ),
@@ -2875,9 +2874,9 @@ def _ch_sql(spark_dialect: bool) -> str:
     """
 
 
-@query("s26_calinski_harabasz", oracle=_ch_sql(False))
+@query("s26_calinski_harabasz", oracle=_ch_sql())
 def s26(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged spelling of _ch_sql(True) — guide §2.4 shared work: Spark
+    """Staged Spark spelling of _ch_sql() — guide §2.4 shared work: Spark
     inlines multiply-referenced CTEs, so the one-string form re-ran the
     first Lloyd scoring chain twice (`c1` feeds both a2 and between_c)
     and the whole a2 chain twice more (`per_cluster` feeds both the
@@ -2999,8 +2998,8 @@ def _ari_run(tag: str, lo: int, hi: int) -> str:
     )
 
 
-def _stability_sql(spark_dialect: bool) -> str:
-    dims = "SELECT * FROM __km_dims__" if spark_dialect else _dims_sql(False)
+def _stability_sql() -> str:
+    dims = _dims_sql(False)
     run = _ari_run
 
     return f"""
@@ -3032,9 +3031,9 @@ def _stability_sql(spark_dialect: bool) -> str:
     """
 
 
-@query("s27_clustering_stability", oracle=_stability_sql(False))
+@query("s27_clustering_stability", oracle=_stability_sql())
 def s27(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged spelling of _stability_sql(True) — guide §2.4 shared
+    """Staged Spark spelling of _stability_sql() — guide §2.4 shared
     work: the one-string form references `cont` FIVE times (rowsums,
     colsums, two ari scalar subqueries, the report), and Spark inlines
     each into a fresh execution of BOTH Lloyd runs (two n x k scoring

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..session import memo, release, scratch
 from ..sources.parquet import read_parquet
+from ..sqlfront.rewrite import rewrite_sql
 from .tables import load_tables, table_path
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1606,12 +1607,11 @@ _M10_ANCHORS = (
 )
 
 
-def _aspect_plan_sql(imgs: str, spark_dialect: bool) -> str:
+def _aspect_plan_sql(imgs: str) -> str:
     """Aspect-bucket + resize-plan tail over an (media_id, w, h)
     relation — shared verbatim by both engines (argmin via a
     per-image rank against the 5-row anchor table; the ratio distance
     |w*ah - aw*h| * (144/ah) is all-integer, ties break on bucket)."""
-    intdiv = "div" if spark_dialect else "//"
     return f"""
     WITH anchors AS (
       SELECT * FROM (VALUES {_M10_ANCHORS}) AS t(bucket, aw, ah, tw, th)
@@ -1620,7 +1620,7 @@ def _aspect_plan_sql(imgs: str, spark_dialect: bool) -> str:
       SELECT i.media_id, a.bucket, a.tw, a.th,
              ROW_NUMBER() OVER (
                PARTITION BY i.media_id
-               ORDER BY ABS(i.w * a.ah - a.aw * i.h) * (144 {intdiv} a.ah), a.bucket
+               ORDER BY ABS(i.w * a.ah - a.aw * i.h) * (144 // a.ah), a.bucket
              ) AS rn
       FROM {imgs} i CROSS JOIN anchors a
     ),
@@ -1658,14 +1658,14 @@ def m10(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("meta", "w").cast("bigint").alias("w"),
         F.element_at("meta", "h").cast("bigint").alias("h"),
     ).createOrReplaceTempView("__m10_imgs__")
-    return spark.sql(_aspect_plan_sql("__m10_imgs__", True))
+    return spark.sql(rewrite_sql(_aspect_plan_sql("__m10_imgs__"), {}))
 
 
 QUERIES["m10_aspect_buckets"] = m10
 ORACLES["m10_aspect_buckets"] = (
     "WITH imgs AS (SELECT i AS media_id, 160 + (i * 37) % 480 AS w, "
     "120 + (i * 53) % 600 AS h FROM range(120) t(i)), "
-    + _aspect_plan_sql("imgs", False).strip()[len("WITH "):]
+    + _aspect_plan_sql("imgs").strip()[len("WITH "):]
 )
 
 
@@ -1767,7 +1767,7 @@ def _st22_oracle() -> str:
     shared survival tail."""
     from .timeseries import _survival_sessions_sql, _survival_tail_sql
 
-    sessions = _survival_sessions_sql(False, with_keys=True)
+    sessions = _survival_sessions_sql(with_keys=True)
     closed = f"""
     SELECT dur_min, end_us FROM (
       SELECT user_id, session_seq, dur_min, end_us,
@@ -1866,8 +1866,7 @@ ORACLES["m11_shot_lengths"] = (
 _SHARD_BUDGET_BYTES = 256
 
 
-def _shard_plan_sql(items: str, spark_dialect: bool) -> str:
-    intdiv = "div" if spark_dialect else "//"
+def _shard_plan_sql(items: str) -> str:
     return f"""
     WITH packed AS (
       SELECT media_id, kind, nb,
@@ -1876,7 +1875,7 @@ def _shard_plan_sql(items: str, spark_dialect: bool) -> str:
                CAST(0 AS BIGINT)) AS prior
       FROM {items}
     )
-    SELECT CAST(prior {intdiv} {_SHARD_BUDGET_BYTES} AS BIGINT) AS shard_id,
+    SELECT CAST(prior // {_SHARD_BUDGET_BYTES} AS BIGINT) AS shard_id,
            CAST(COUNT(*) AS BIGINT) AS n_items,
            CAST(SUM(nb) AS BIGINT) AS shard_bytes,
            CAST(SUM(CASE WHEN kind = 'image' THEN 1 ELSE 0 END) AS BIGINT) AS n_images,
@@ -1901,7 +1900,7 @@ def m12(spark: SparkSession, sf_dir: str) -> DataFrame:
     media.select(
         "media_id", "kind", F.octet_length("payload").cast("bigint").alias("nb")
     ).createOrReplaceTempView("__m12_items__")
-    return spark.sql(_shard_plan_sql("__m12_items__", True))
+    return spark.sql(rewrite_sql(_shard_plan_sql("__m12_items__"), {}))
 
 
 QUERIES["m12_shard_planner"] = m12
@@ -1912,8 +1911,7 @@ ORACLES["m12_shard_planner"] = _shard_plan_sql(
                   WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
              CAST(16 * (4 + i % 5) AS BIGINT) AS nb
       FROM range(120) t(i)
-    )""",
-    False,
+    )"""
 )
 
 
@@ -2227,21 +2225,13 @@ def _md5_disorder_sql(table: str = "events", seq_alias: str = "seq") -> str:
     """
 
 
-def _st27_sim_sql(spark_dialect: bool, table: str = "events") -> str:
-    epoch = "unix_micros" if spark_dialect else "epoch_us"
-    intdiv = "div" if spark_dialect else "//"
-    if spark_dialect:
-        # the Spark side ranks two-phase (_md5_disorder_sql); the
-        # DuckDB branch below keeps the plain single-window spelling —
-        # identical seq values, and the oracle is not the scaled side
-        dis = f"""
-      SELECT event_type, CAST({epoch}(ts) AS BIGINT) AS ts_us, seq
-      FROM ({_md5_disorder_sql(table, "seq")}) two_phase
-    """
-    else:
-        dis = f"""
+def _st27_sim_sql(table: str = "events") -> str:
+    """The oracle's integer simulation of st27's watermark rule; it
+    ranks arrival with one global window (the staged replay ranks
+    two-phase, _md5_disorder_sql — identical seq values)."""
+    dis = f"""
       SELECT event_type,
-             CAST({epoch}(CAST(ts AS TIMESTAMP)) AS BIGINT) AS ts_us,
+             CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS BIGINT) AS ts_us,
              ROW_NUMBER() OVER (ORDER BY md5(CAST(event_id AS VARCHAR))) AS seq
       FROM {table}
     """
@@ -2251,7 +2241,7 @@ def _st27_sim_sql(spark_dialect: bool, table: str = "events") -> str:
       SELECT event_type,
              CAST((MAX(ts_us) OVER (PARTITION BY event_type ORDER BY seq
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ts_us)
-                  {intdiv} 60000000 AS BIGINT) AS late_min
+                  // 60000000 AS BIGINT) AS late_min
       FROM dis
     ),
     ranked AS (
@@ -2270,7 +2260,7 @@ def _st27_sim_sql(spark_dialect: bool, table: str = "events") -> str:
     tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM dis),
     chunked AS (
       SELECT event_type, ts_us,
-             CAST((seq - 1) {intdiv} ((n + 7) {intdiv} 8) AS BIGINT) AS chunk
+             CAST((seq - 1) // ((n + 7) // 8) AS BIGINT) AS chunk
       FROM dis CROSS JOIN tot
     ),
     chunk_max AS (
@@ -2286,8 +2276,8 @@ def _st27_sim_sql(spark_dialect: bool, table: str = "events") -> str:
     verdict AS (
       SELECT c.event_type,
              CASE WHEN w.prev_max_us IS NOT NULL
-                   AND ((c.ts_us {intdiv} 3600000000) + 1) * 3600000
-                       <= (w.prev_max_us {intdiv} 1000) - d.delay_min * 60000
+                   AND ((c.ts_us // 3600000000) + 1) * 3600000
+                       <= (w.prev_max_us // 1000) - d.delay_min * 60000
                   THEN 1 ELSE 0 END AS dropped
       FROM chunked c JOIN wm w ON w.chunk = c.chunk CROSS JOIN delay d
     )
@@ -2476,7 +2466,7 @@ def st27(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["st27_stream_watermark_drops"] = st27
-ORACLES["st27_stream_watermark_drops"] = _st27_sim_sql(False)
+ORACLES["st27_stream_watermark_drops"] = _st27_sim_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -2498,10 +2488,7 @@ ORACLES["st27_stream_watermark_drops"] = _st27_sim_sql(False)
 _ST24_BUCKET_CENTS = 500
 
 
-def _stream_quantile_sql(
-    src: str, spark_dialect: bool, width: int = _ST24_BUCKET_CENTS
-) -> str:
-    intdiv = "div" if spark_dialect else "//"
+def _stream_quantile_sql(src: str, width: int = _ST24_BUCKET_CENTS) -> str:
     w = width
     return f"""
     WITH tot AS (
@@ -2517,11 +2504,11 @@ def _stream_quantile_sql(
     )
     SELECT t.event_type AS event_type,
            t.total AS n_events,
-           CAST(MIN(CASE WHEN c.cum_n >= (t.total + 1) {intdiv} 2
+           CAST(MIN(CASE WHEN c.cum_n >= (t.total + 1) // 2
                          THEN c.bucket END) * {w} AS BIGINT) AS p50_lo_cents,
-           CAST(MIN(CASE WHEN c.cum_n >= (9 * t.total + 9) {intdiv} 10
+           CAST(MIN(CASE WHEN c.cum_n >= (9 * t.total + 9) // 10
                          THEN c.bucket END) * {w} AS BIGINT) AS p90_lo_cents,
-           CAST(MIN(CASE WHEN c.cum_n >= (99 * t.total + 99) {intdiv} 100
+           CAST(MIN(CASE WHEN c.cum_n >= (99 * t.total + 99) // 100
                          THEN c.bucket END) * {w} AS BIGINT) AS p99_lo_cents
     FROM tot t JOIN cum c ON c.event_type = t.event_type
     GROUP BY t.event_type, t.total
@@ -2549,7 +2536,7 @@ def st24(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     state = foreachbatch_merge_counts(bucketed, ["event_type", "bucket"], base)
     state.createOrReplaceTempView("st24_state")
-    return spark.sql(_stream_quantile_sql("st24_state", True))
+    return spark.sql(rewrite_sql(_stream_quantile_sql("st24_state"), {}))
 
 
 QUERIES["st24_stream_quantiles"] = st24
@@ -2564,7 +2551,7 @@ ORACLES["st24_stream_quantiles"] = (
       FROM events GROUP BY 1, 2
     ),
     q AS ("""
-    + _stream_quantile_sql("st24_state", False)
+    + _stream_quantile_sql("st24_state")
     + """)
     SELECT * FROM q
 """

@@ -15,6 +15,7 @@ from typing import Callable, Dict
 from pyspark.sql import DataFrame, SparkSession
 
 from ..session import memo
+from ..sqlfront.rewrite import rewrite_sql
 from .tables import load_tables, table_path
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -564,8 +565,7 @@ def t09(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MIX_RATES = {"en": 0.35, "de": 0.80, "fr": 0.80, "es": 0.80, "zh": 1.00}
 
 
-def _mix_sql(spark_dialect: bool) -> str:
-    cast_s = "STRING" if spark_dialect else "VARCHAR"
+def _mix_sql() -> str:
     cuts = " ".join(
         f"WHEN '{lang}' THEN '{min(int(rate * 65536), 65535):04x}'"
         for lang, rate in sorted(_MIX_RATES.items())
@@ -575,19 +575,19 @@ def _mix_sql(spark_dialect: bool) -> str:
     keep_all = ", ".join(f"'{k}'" for k, v in sorted(_MIX_RATES.items()) if v >= 1.0)
     return f"""
     SELECT doc_id, lang,
-           substr(md5(concat('mix', CAST(doc_id AS {cast_s}))), 1, 4) AS u16
+           substr(md5(concat('mix', CAST(doc_id AS VARCHAR))), 1, 4) AS u16
     FROM documents
     WHERE lang IN ({keep_all})
-       OR substr(md5(concat('mix', CAST(doc_id AS {cast_s}))), 1, 4)
+       OR substr(md5(concat('mix', CAST(doc_id AS VARCHAR))), 1, 4)
           < CASE lang {cuts} ELSE '0000' END
     ORDER BY doc_id
     """
 
 
-@query("t10_stratified_mix", oracle=_mix_sql(False))
+@query("t10_stratified_mix", oracle=_mix_sql())
 def t10(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_mix_sql(True))
+    return spark.sql(rewrite_sql(_mix_sql(), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -602,13 +602,9 @@ def t10(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VOCAB_K = 200
 
 
-def _vocab_sql(spark_dialect: bool) -> str:
-    if spark_dialect:
-        toks = "SELECT doc_id, explode(split(lower(text), ' ')) AS tok FROM documents"
-    else:
-        toks = "SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents"
+def _vocab_sql() -> str:
     return f"""
-    WITH toks AS ({toks}),
+    WITH toks AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents),
     counts AS (
       SELECT tok, COUNT(*) AS n, COUNT(DISTINCT doc_id) AS df
       FROM toks WHERE tok <> '' GROUP BY tok
@@ -622,10 +618,10 @@ def _vocab_sql(spark_dialect: bool) -> str:
     """
 
 
-@query("t11_vocab_topk", oracle=_vocab_sql(False))
+@query("t11_vocab_topk", oracle=_vocab_sql())
 def t11(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_vocab_sql(True))
+    return spark.sql(rewrite_sql(_vocab_sql(), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -1011,15 +1007,11 @@ def t17(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sums, and the slope combines them in fixed-order DOUBLE arithmetic —
 # engine-identical.
 # ---------------------------------------------------------------------------
-def _zipf_sql(spark_dialect: bool) -> str:
-    if spark_dialect:
-        tok = "SELECT explode(split(lower(text), ' ')) AS term FROM documents"
-    else:
-        tok = "SELECT unnest(string_split(lower(text), ' ')) AS term FROM documents"
-    return f"""
+def _zipf_sql() -> str:
+    return """
     WITH freq AS (
       SELECT term, COUNT(*) AS f
-      FROM ({tok}) raw WHERE term <> ''
+      FROM (SELECT unnest(string_split(lower(text), ' ')) AS term FROM documents) raw WHERE term <> ''
       GROUP BY term
     ),
     fcounts AS (
@@ -1054,10 +1046,10 @@ def _zipf_sql(spark_dialect: bool) -> str:
     """
 
 
-@query("t18_zipf_fit", oracle=_zipf_sql(False))
+@query("t18_zipf_fit", oracle=_zipf_sql())
 def t18(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_zipf_sql(True))
+    return spark.sql(rewrite_sql(_zipf_sql(), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -1356,14 +1348,10 @@ def t22(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is size(split(...)), one groupBy(bin) shuffle, scalar totals
 # broadcast back.
 # ---------------------------------------------------------------------------
-def _woe_sql(spark_dialect: bool, bins_rel: str | None = None) -> str:
-    if spark_dialect:
-        ntok = "size(split(text, ' '))"
-    else:
-        ntok = "len(string_split(text, ' '))"
-    bins_sql = f"""
+def _woe_sql(bins_rel: str | None = None) -> str:
+    bins_sql = """
     WITH feats AS (
-      SELECT CAST(least(floor({ntok} / 10.0), 15) AS BIGINT) AS bin,
+      SELECT CAST(least(floor(len(string_split(text, ' ')) / 10.0), 15) AS BIGINT) AS bin,
              CAST(lang = 'en' AS INT) AS pos
       FROM documents
     )
@@ -1399,14 +1387,14 @@ def _woe_sql(spark_dialect: bool, bins_rel: str | None = None) -> str:
     """
 
 
-@query("t23_woe_binning", oracle=_woe_sql(False))
+@query("t23_woe_binning", oracle=_woe_sql())
 def t23(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    bins = spark.sql(_woe_sql(True, bins_rel="__bins_only__")).localCheckpoint(
+    bins = spark.sql(rewrite_sql(_woe_sql(bins_rel="__bins_only__"), {})).localCheckpoint(
         eager=True
     )
     bins.createOrReplaceTempView("__t23_bins__")
-    return spark.sql(_woe_sql(True, bins_rel="__t23_bins__"))
+    return spark.sql(rewrite_sql(_woe_sql(bins_rel="__t23_bins__"), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -1889,11 +1877,8 @@ def t29(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Reference parity: no counterpart (core/flow.py delegates relational
 # work to DuckDB); the corpus rollup of t02's per-document verdicts.
 # ---------------------------------------------------------------------------
-def _langid_confusion_sql(spark_dialect: bool, conf_rel: str | None = None) -> str:
-    if spark_dialect:
-        count = lambda p: f"CAST(regexp_count(lower(text), '{p}') AS BIGINT)"
-    else:
-        count = lambda p: f"CAST(len(regexp_extract_all(lower(text), '{p}')) AS BIGINT)"
+def _langid_confusion_sql(conf_rel: str | None = None) -> str:
+    count = lambda p: f"CAST(len(regexp_extract_all(lower(text), '{p}')) AS BIGINT)"
     score_cols = ", ".join(
         f"{_lang_score(lg, count)} AS score_{lg}" for lg in _LANG_WORDS
     )
@@ -1938,14 +1923,14 @@ def _langid_confusion_sql(spark_dialect: bool, conf_rel: str | None = None) -> s
     """
 
 
-@query("t30_langid_confusion", oracle=_langid_confusion_sql(False))
+@query("t30_langid_confusion", oracle=_langid_confusion_sql())
 def t30(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
     conf = spark.sql(
-        _langid_confusion_sql(True, conf_rel="__conf_only__")
+        rewrite_sql(_langid_confusion_sql(conf_rel="__conf_only__"), {})
     ).localCheckpoint(eager=True)
     conf.createOrReplaceTempView("__t30_conf__")
-    return spark.sql(_langid_confusion_sql(True, conf_rel="__t30_conf__"))
+    return spark.sql(rewrite_sql(_langid_confusion_sql(conf_rel="__t30_conf__"), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -2222,8 +2207,7 @@ ORACLES["t33_pii_audit"] = _pii_audit_sql(False)
 _KS_FLAG_E6 = 150000  # flag sources whose KS distance exceeds 0.15
 
 
-def _length_ks_sql(spark_dialect: bool, per_rel: str | None = None) -> str:
-    intdiv = "div" if spark_dialect else "//"
+def _length_ks_sql(per_rel: str | None = None) -> str:
     per_sql = """
       SELECT source, n_chars,
              CAST(COUNT(*) AS BIGINT) AS c
@@ -2267,8 +2251,8 @@ def _length_ks_sql(spark_dialect: bool, per_rel: str | None = None) -> str:
     ),
     diffs AS (
       SELECT sc.source, sc.n_src,
-             abs(CAST(sc.cum_s * 1000000 {intdiv} sc.n_src AS BIGINT)
-               - CAST(g.cum_g * 1000000 {intdiv} t.n_all AS BIGINT)) AS d_e6
+             abs(CAST(sc.cum_s * 1000000 // sc.n_src AS BIGINT)
+               - CAST(g.cum_g * 1000000 // t.n_all AS BIGINT)) AS d_e6
       FROM src_cum sc
       JOIN gdist g ON g.n_chars = sc.n_chars
       CROSS JOIN tot t
@@ -2284,14 +2268,14 @@ def _length_ks_sql(spark_dialect: bool, per_rel: str | None = None) -> str:
     """
 
 
-@query("t34_length_ks_drift", oracle=_length_ks_sql(False))
+@query("t34_length_ks_drift", oracle=_length_ks_sql())
 def t34(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
     per = spark.sql(
-        _length_ks_sql(True, per_rel="__per_only__")
+        rewrite_sql(_length_ks_sql(per_rel="__per_only__"), {})
     ).localCheckpoint(eager=True)
     per.createOrReplaceTempView("__t34_per__")
-    return spark.sql(_length_ks_sql(True, per_rel="__t34_per__"))
+    return spark.sql(rewrite_sql(_length_ks_sql(per_rel="__t34_per__"), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -2384,19 +2368,13 @@ def t35(spark: SparkSession, sf_dir: str) -> DataFrame:
 # to DuckDB); the planning complement of d01 (which documents survive)
 # and t01 (how many tokens exist) — this says how many tokens REMAIN.
 # ---------------------------------------------------------------------------
-def _token_budget_sql(spark_dialect: bool, table: str = "documents") -> str:
-    if spark_dialect:
-        key = ("md5(concat_ws(' ', array_sort(array_distinct("
-               "split(lower(text), ' ')))))")
-        ntok = "size(split(text, ' '))"
-    else:
-        key = ("md5(array_to_string(list_sort(list_distinct("
-               "string_split(lower(text), ' '))), ' '))")
-        ntok = "len(string_split(text, ' '))"
+def _token_budget_sql(table: str = "documents") -> str:
+    key = ("md5(array_to_string(list_sort(list_distinct("
+           "string_split(lower(text), ' '))), ' '))")
     return f"""
     WITH toks AS (
       SELECT doc_id, source, {key} AS content_key,
-             CAST({ntok} AS BIGINT) AS ntok
+             CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
       FROM {table}
     ),
     surv AS (
@@ -2418,7 +2396,7 @@ def _token_budget_sql(spark_dialect: bool, table: str = "documents") -> str:
     """
 
 
-@query("t36_token_budget", oracle=_token_budget_sql(False))
+@query("t36_token_budget", oracle=_token_budget_sql())
 def t36(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_token_budget_sql(True))
+    return spark.sql(rewrite_sql(_token_budget_sql(), {}))

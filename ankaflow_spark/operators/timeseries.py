@@ -15,6 +15,7 @@ from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sqlfront.rewrite import rewrite_sql
 from .tables import load_tables
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -478,17 +479,11 @@ ANOMALY_Z = 3.0
 BASELINE_BUCKETS = 60
 
 
-def _anomaly_sql(spark_dialect: bool) -> str:
-    if spark_dialect:
-        minute_idx = "(unix_micros(ts) div 1000000) div 60"
-        bucket_ts = "timestamp_seconds(min_idx * 60)"
-    else:
-        minute_idx = "(epoch_us(ts) // 1000000) // 60"
-        bucket_ts = "make_timestamp(min_idx * 60 * 1000000)"
+def _anomaly_sql() -> str:
     frame = f"ROWS BETWEEN {BASELINE_BUCKETS} PRECEDING AND 1 PRECEDING"
     return f"""
     WITH minute AS (
-      SELECT {minute_idx} AS min_idx, event_type,
+      SELECT (epoch_us(ts) // 1000000) // 60 AS min_idx, event_type,
              CAST(floor(SUM(CAST(value AS DECIMAL(18,6))) * 100) AS BIGINT) AS tot_e2,
              COUNT(*) AS n_events
       FROM events GROUP BY 1, 2
@@ -512,7 +507,7 @@ def _anomaly_sql(spark_dialect: bool) -> str:
       FROM base
       WHERE base_n >= 30
     )
-    SELECT {bucket_ts} AS bucket, event_type,
+    SELECT make_timestamp(min_idx * 60 * 1000000) AS bucket, event_type,
            CAST(tot_e2 AS DOUBLE) / 100 AS bucket_total,
            n_events, base_n, z
     FROM scored
@@ -521,10 +516,10 @@ def _anomaly_sql(spark_dialect: bool) -> str:
     """
 
 
-@query("ts10_anomaly_zscore", oracle=_anomaly_sql(False))
+@query("ts10_anomaly_zscore", oracle=_anomaly_sql())
 def ts10(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_anomaly_sql(True))
+    return spark.sql(rewrite_sql(_anomaly_sql(), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -541,13 +536,7 @@ def ts10(spark: SparkSession, sf_dir: str) -> DataFrame:
 EWMA_K = 10
 
 
-def _ewma_sql(spark_dialect: bool) -> str:
-    if spark_dialect:
-        minute_idx = "(unix_micros(ts) div 1000000) div 60"
-        bucket_ts = "timestamp_seconds(min_idx * 60)"
-    else:
-        minute_idx = "(epoch_us(ts) // 1000000) // 60"
-        bucket_ts = "make_timestamp(min_idx * 60 * 1000000)"
+def _ewma_sql() -> str:
     lags = ",\n        ".join(
         f"LAG(tot_e2, {j}) OVER (PARTITION BY event_type ORDER BY min_idx) AS l{j}"
         for j in range(1, EWMA_K)
@@ -565,7 +554,7 @@ def _ewma_sql(spark_dialect: bool) -> str:
     )
     return f"""
     WITH minute AS (
-      SELECT {minute_idx} AS min_idx, event_type,
+      SELECT (epoch_us(ts) // 1000000) // 60 AS min_idx, event_type,
              CAST(floor(SUM(CAST(value AS DECIMAL(18,6))) * 100) AS BIGINT) AS tot_e2
       FROM events GROUP BY 1, 2
     ),
@@ -574,7 +563,7 @@ def _ewma_sql(spark_dialect: bool) -> str:
         {lags}
       FROM minute
     )
-    SELECT {bucket_ts} AS bucket, event_type,
+    SELECT make_timestamp(min_idx * 60 * 1000000) AS bucket, event_type,
            CAST(tot_e2 AS DOUBLE) / 100 AS bucket_total,
            CAST({num} AS DOUBLE) / ({den}) / 100 AS ewma
     FROM lagged
@@ -582,28 +571,21 @@ def _ewma_sql(spark_dialect: bool) -> str:
     """
 
 
-@query("ts11_ewma_smoothing", oracle=_ewma_sql(False))
+@query("ts11_ewma_smoothing", oracle=_ewma_sql())
 def ts11(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_ewma_sql(True))
+    return spark.sql(rewrite_sql(_ewma_sql(), {}))
 
 
 # ---------------------------------------------------------------------------
 # ts12 — weekly seasonality profile: the (day-of-week x hour) traffic
 # matrix per event_type. One groupBy over integer-derived calendar
-# keys (dayofweek follows ISO Monday=1 in both spellings below);
+# keys (isodow: ISO Monday=1);
 # decimal sums emitted as double. Pure single-shuffle aggregation.
 # ---------------------------------------------------------------------------
-def _dow_hour_sql(spark_dialect: bool) -> str:
-    if spark_dialect:
-        # Spark dayofweek(): Sunday=1 .. Saturday=7 -> remap to ISO Mon=1
-        dow = "CAST(((dayofweek(ts) + 5) % 7) + 1 AS BIGINT)"
-        hour = "CAST(hour(ts) AS BIGINT)"
-    else:
-        dow = "CAST(isodow(ts) AS BIGINT)"
-        hour = "CAST(hour(ts) AS BIGINT)"
-    return f"""
-    SELECT {dow} AS iso_dow, {hour} AS hour, event_type,
+def _dow_hour_sql() -> str:
+    return """
+    SELECT CAST(isodow(ts) AS BIGINT) AS iso_dow, CAST(hour(ts) AS BIGINT) AS hour, event_type,
            COUNT(*) AS n_events,
            CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
     FROM events
@@ -612,10 +594,10 @@ def _dow_hour_sql(spark_dialect: bool) -> str:
     """
 
 
-@query("ts12_dow_hour_profile", oracle=_dow_hour_sql(False))
+@query("ts12_dow_hour_profile", oracle=_dow_hour_sql())
 def ts12(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_dow_hour_sql(True))
+    return spark.sql(rewrite_sql(_dow_hour_sql(), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -805,23 +787,22 @@ def ts14(spark: SparkSession, sf_dir: str) -> DataFrame:
 # frame bound orders by integer epoch seconds (identical in both
 # engines); value sums accumulate in DECIMAL.
 # ---------------------------------------------------------------------------
-def _range_window_sql(spark_dialect: bool) -> str:
-    es = "unix_micros(ts) DIV 1000000" if spark_dialect else "epoch_us(ts) // 1000000"
-    return f"""
+def _range_window_sql() -> str:
+    return """
     SELECT user_id, ts,
            COUNT(*) OVER w AS n_last_hour,
            CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE) AS value_last_hour
     FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY {es}
+    WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts) // 1000000
                  RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
     ORDER BY user_id, ts
     """
 
 
-@query("ts15_range_window", oracle=_range_window_sql(False))
+@query("ts15_range_window", oracle=_range_window_sql())
 def ts15(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_range_window_sql(True))
+    return spark.sql(rewrite_sql(_range_window_sql(), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -905,8 +886,7 @@ def ts17(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vector grades cell-exact. At 100 TB this is the daily feature-build
 # job: map-side combinable, partitioned by the entity key.
 # ---------------------------------------------------------------------------
-def _user_features_sql(spark_dialect: bool) -> str:
-    eus = "unix_micros" if spark_dialect else "epoch_us"
+def _user_features_sql() -> str:
     day = (
         "CAST(date_trunc('day', ts) AS TIMESTAMP)"  # identical in both
     )
@@ -922,7 +902,7 @@ def _user_features_sql(spark_dialect: bool) -> str:
            MAX(ts) AS last_seen,
            CAST(SUM(CASE WHEN event_type = 'purchase'
                     THEN CAST(value AS DECIMAL(18,6)) ELSE 0 END) AS DOUBLE) AS total_spend,
-           CAST({eus}(MAX(ts)) - {eus}(MIN(ts)) AS DOUBLE)
+           CAST(epoch_us(MAX(ts)) - epoch_us(MIN(ts)) AS DOUBLE)
              / (COUNT(*) - 1) / 60000000.0 AS avg_gap_minutes
     FROM events
     GROUP BY user_id
@@ -931,10 +911,10 @@ def _user_features_sql(spark_dialect: bool) -> str:
     """
 
 
-@query("ts18_user_features", oracle=_user_features_sql(False))
+@query("ts18_user_features", oracle=_user_features_sql())
 def ts18(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_user_features_sql(True))
+    return spark.sql(rewrite_sql(_user_features_sql(), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -1185,7 +1165,7 @@ def _log_cell(u: str, idiv: str) -> str:
     return "CASE " + " ".join(branches) + f" ELSE {63 * S} END"
 
 
-def _rfm_stage1_sql(spark_dialect: bool, table: str = "events") -> str:
+def _rfm_stage1_sql(table: str = "events") -> str:
     """The ONE raw-table pass: per-user profile aggregation."""
     return f"""
       SELECT user_id, MAX(ts) AS last_ts, COUNT(*) AS frequency,
@@ -1301,17 +1281,17 @@ def _rfm_stage3_sql(spark_dialect: bool, cells: str = "cells") -> str:
     """
 
 
-def _rfm_sql(spark_dialect: bool) -> str:
+def _rfm_sql() -> str:
     """Single-string spelling (the DuckDB oracle — DuckDB plans each
     CTE once, so the inline form is fine there)."""
     return f"""
-    WITH per_user AS ({_rfm_stage1_sql(spark_dialect)}),
-    {_rfm_stage2_ctes(spark_dialect)},
-    {_rfm_stage3_sql(spark_dialect)}
+    WITH per_user AS ({_rfm_stage1_sql()}),
+    {_rfm_stage2_ctes(False)},
+    {_rfm_stage3_sql(False)}
     """
 
 
-@query("ts22_rfm_segmentation", oracle=_rfm_sql(False))
+@query("ts22_rfm_segmentation", oracle=_rfm_sql())
 def ts22(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark side runs STAGED with two localCheckpoint barriers: Spark
     re-expands a CTE per reference, and the inline spelling re-planned
@@ -1322,7 +1302,7 @@ def ts22(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation (consumed by three histograms + scoring); everything
     downstream scans the materialized |users|-row relations only."""
     load_tables(spark, sf_dir)
-    pu = spark.sql(_rfm_stage1_sql(True)).localCheckpoint(eager=True)
+    pu = spark.sql(_rfm_stage1_sql()).localCheckpoint(eager=True)
     pu.createOrReplaceTempView("__rfm_pu__")
     cells = spark.sql(
         "WITH " + _rfm_stage2_ctes(True, "__rfm_pu__") + " SELECT * FROM cells"
@@ -1406,8 +1386,7 @@ def ts23(spark: SparkSession, sf_dir: str) -> DataFrame:
 # microseconds — cell-exact cross-engine. One shuffle on user_id; every
 # feature extends the same window frame.
 # ---------------------------------------------------------------------------
-def _pit_features_sql(spark_dialect: bool) -> str:
-    ep = "unix_micros" if spark_dialect else "epoch_us"
+def _pit_features_sql() -> str:
     frame = ("PARTITION BY user_id ORDER BY ts, event_id "
              "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING")
     return f"""
@@ -1424,17 +1403,17 @@ def _pit_features_sql(spark_dialect: bool) -> str:
     )
     SELECT user_id, event_id, ts,
            prior_clicks, prior_views, prior_purchases, prior_spend,
-           CAST(COALESCE({ep}(ts) - {ep}(first_seen_ts), 0) AS BIGINT) AS tenure_us
+           CAST(COALESCE(epoch_us(ts) - epoch_us(first_seen_ts), 0) AS BIGINT) AS tenure_us
     FROM labeled
     WHERE event_type = 'purchase'
     ORDER BY user_id, event_id
     """
 
 
-@query("ts24_pit_features", oracle=_pit_features_sql(False))
+@query("ts24_pit_features", oracle=_pit_features_sql())
 def ts24(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_pit_features_sql(True))
+    return spark.sql(rewrite_sql(_pit_features_sql(), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -1483,6 +1462,7 @@ _N_PROMOS = 30
 
 
 def _interval_join_sql(spark_dialect: bool) -> str:
+    # Spark twin kept: its per-day equi-join avoids the range join's nested-loop plan
     if spark_dialect:
         promos = f"""
       SELECT id AS promo_id,
@@ -1575,18 +1555,12 @@ def ts27(spark: SparkSession, sf_dir: str) -> DataFrame:
 # spelling), no row multiplication. Exactness: counts are integers;
 # retention divides two exact BIGINTs in doubles once at emit. Age is
 # an integer day delta over epoch seconds (both stamps are
-# date_trunc'd, so the difference is an exact multiple of 86400); only
-# the epoch-extraction spelling differs per engine (Spark
-# unix_timestamp, DuckDB epoch). Cells cap at cohorts x horizon,
+# date_trunc'd, so the difference is an exact multiple of 86400).
+# Cells cap at cohorts x horizon,
 # whatever the event volume — a bounded triangle at any scale.
 # ---------------------------------------------------------------------------
-def _cohort_retention_sql(spark_dialect: bool) -> str:
-    age = (
-        "CAST((unix_timestamp(wk) - unix_timestamp(cohort_wk)) DIV 86400 AS BIGINT)"
-        if spark_dialect
-        else "CAST((epoch(wk) - epoch(cohort_wk)) // 86400 AS BIGINT)"
-    )
-    return f"""
+def _cohort_retention_sql() -> str:
+    return """
     WITH au AS (
       SELECT DISTINCT user_id,
              CAST(date_trunc('day', ts) AS TIMESTAMP) AS wk
@@ -1599,7 +1573,7 @@ def _cohort_retention_sql(spark_dialect: bool) -> str:
     ),
     cells AS (
       SELECT cohort_wk,
-             {age} AS age_weeks,
+             CAST((epoch(wk) - epoch(cohort_wk)) // 86400 AS BIGINT) AS age_weeks,
              CAST(COUNT(*) AS BIGINT) AS n_active
       FROM cohorted
       GROUP BY cohort_wk, 2
@@ -1618,10 +1592,10 @@ def _cohort_retention_sql(spark_dialect: bool) -> str:
     """
 
 
-@query("ts28_cohort_retention", oracle=_cohort_retention_sql(False))
+@query("ts28_cohort_retention", oracle=_cohort_retention_sql())
 def ts28(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_cohort_retention_sql(True))
+    return spark.sql(rewrite_sql(_cohort_retention_sql(), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -1925,13 +1899,12 @@ def ts32(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Reference parity: no counterpart (core/flow.py delegates relational
 # work to DuckDB); extends the drift-monitor family like ts30/ts31.
 # ---------------------------------------------------------------------------
-def _dow_tail_sql(daily: str, spark_dialect: bool) -> str:
+def _dow_tail_sql(daily: str) -> str:
     """Seasonality tail over a daily-count relation (event_type, day,
-    n); only the ISO-weekday projection differs per engine."""
-    isodow = "weekday(day) + 1" if spark_dialect else "isodow(day)"
+    n), in DuckDB's spelling."""
     return f"""
     WITH d2 AS (
-      SELECT event_type, day, n, CAST({isodow} AS BIGINT) AS iso_dow
+      SELECT event_type, day, n, CAST(isodow(day) AS BIGINT) AS iso_dow
       FROM {daily}
     ),
     per AS (
@@ -1958,14 +1931,14 @@ def _dow_tail_sql(daily: str, spark_dialect: bool) -> str:
 
 @query(
     "ts33_dow_seasonality",
-    oracle=f"WITH daily AS ({_MAD_DAILY_SQL}), {_dow_tail_sql('daily', False).strip()[len('WITH '):]}",
+    oracle=f"WITH daily AS ({_MAD_DAILY_SQL}), {_dow_tail_sql('daily').strip()[len('WITH '):]}",
 )
 def ts33(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
     spark.sql(_MAD_DAILY_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
         "__ts33_daily__"
     )
-    return spark.sql(_dow_tail_sql("__ts33_daily__", True))
+    return spark.sql(rewrite_sql(_dow_tail_sql("__ts33_daily__"), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -1982,11 +1955,10 @@ def ts33(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Reference parity: no counterpart (core/flow.py delegates relational
 # work to DuckDB); extends the behavioral family like ts14/ts28/ts32.
 # ---------------------------------------------------------------------------
-def _repeat_gap_sql(spark_dialect: bool) -> str:
-    epoch = "unix_micros" if spark_dialect else "epoch_us"
-    return f"""
+def _repeat_gap_sql() -> str:
+    return """
     SELECT user_id,
-           CAST(floor(CAST({epoch}(ts) - {epoch}(prev_ts) AS DOUBLE)
+           CAST(floor(CAST(epoch_us(ts) - epoch_us(prev_ts) AS DOUBLE)
                       / 86400000000.0) AS BIGINT) AS gap_days
     FROM (
       SELECT user_id, ts,
@@ -2014,13 +1986,12 @@ def _repeat_tail_sql(gaps: str) -> str:
 
 @query(
     "ts34_repeat_purchase_gaps",
-    oracle=f"WITH gaps AS ({_repeat_gap_sql(False)}), {_repeat_tail_sql('gaps').strip()[len('WITH '):]}",
+    oracle=f"WITH gaps AS ({_repeat_gap_sql()}), {_repeat_tail_sql('gaps').strip()[len('WITH '):]}",
 )
 def ts34(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    spark.sql(_repeat_gap_sql(True)).localCheckpoint(eager=True).createOrReplaceTempView(
-        "__ts34_gaps__"
-    )
+    gaps = spark.sql(rewrite_sql(_repeat_gap_sql(), {})).localCheckpoint(eager=True)
+    gaps.createOrReplaceTempView("__ts34_gaps__")
     return spark.sql(_repeat_tail_sql("__ts34_gaps__"))
 
 
@@ -2040,12 +2011,11 @@ def ts34(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Reference parity: no counterpart (core/flow.py delegates relational
 # work to DuckDB); completes the ts13/ts21/ts28/ts34 behavioral set.
 # ---------------------------------------------------------------------------
-def _streak_sql(spark_dialect: bool) -> str:
-    epoch = "unix_micros" if spark_dialect else "epoch_us"
-    return f"""
+def _streak_sql() -> str:
+    return """
     WITH daily AS (
       SELECT DISTINCT user_id,
-             CAST(floor(CAST({epoch}(ts) AS DOUBLE) / 86400000000.0) AS BIGINT) AS day
+             CAST(floor(CAST(epoch_us(ts) AS DOUBLE) / 86400000000.0) AS BIGINT) AS day
       FROM events
     ),
     lagged AS (
@@ -2078,10 +2048,10 @@ def _streak_sql(spark_dialect: bool) -> str:
     """
 
 
-@query("ts35_activity_streaks", oracle=_streak_sql(False))
+@query("ts35_activity_streaks", oracle=_streak_sql())
 def ts35(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_streak_sql(True))
+    return spark.sql(rewrite_sql(_streak_sql(), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -2210,18 +2180,17 @@ def _survival_tail_sql(per_session: str) -> str:
     """
 
 
-def _survival_sessions_sql(spark_dialect: bool, with_keys: bool = False) -> str:
+def _survival_sessions_sql(with_keys: bool = False) -> str:
     """ts02's gap-island sessionizer reduced to the tail's
     (dur_min, end_us) contract. ``with_keys`` also projects the
     (user_id, session_seq) group keys — st22's bounded-state oracle
     needs them to drop each user's last (never-closed) island."""
-    epoch = "unix_micros" if spark_dialect else "epoch_us"
     gap_us = SESSION_GAP_MIN * 60 * 1000000
     keys = "user_id, session_seq, " if with_keys else ""
     return f"""
-    SELECT {keys}CAST(floor(CAST(MAX({epoch}(ts)) - MIN({epoch}(ts)) AS DOUBLE) / 60000000.0)
+    SELECT {keys}CAST(floor(CAST(MAX(epoch_us(ts)) - MIN(epoch_us(ts)) AS DOUBLE) / 60000000.0)
                 AS BIGINT) AS dur_min,
-           CAST(MAX({epoch}(ts)) AS BIGINT) AS end_us
+           CAST(MAX(epoch_us(ts)) AS BIGINT) AS end_us
     FROM (
       SELECT user_id, ts,
              SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -2229,7 +2198,7 @@ def _survival_sessions_sql(spark_dialect: bool, with_keys: bool = False) -> str:
       FROM (
         SELECT user_id, event_id, ts,
                CASE WHEN prev_ts IS NULL
-                    OR {epoch}(ts) - {epoch}(prev_ts) > {gap_us} THEN 1 ELSE 0 END AS new_session
+                    OR epoch_us(ts) - epoch_us(prev_ts) > {gap_us} THEN 1 ELSE 0 END AS new_session
         FROM (
           SELECT user_id, event_id, ts,
                  LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
@@ -2241,21 +2210,21 @@ def _survival_sessions_sql(spark_dialect: bool, with_keys: bool = False) -> str:
     """
 
 
-def _survival_sql(spark_dialect: bool) -> str:
-    sessions = _survival_sessions_sql(spark_dialect)
+def _survival_sql() -> str:
+    sessions = _survival_sessions_sql()
     tail = _survival_tail_sql("per_session").strip()
     assert tail.startswith("WITH ")
     return f"WITH per_session AS ({sessions}), {tail[len('WITH '):]}"
 
 
-@query("ts37_survival_curve", oracle=_survival_sql(False))
+@query("ts37_survival_curve", oracle=_survival_sql())
 def ts37(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark side checkpoints the per-session relation: the
     Kaplan-Meier tail consumes it several times (at-risk totals,
     the duration spine, the cumulative walk), and each reference
     would re-run the sessionizer over raw events (PERF.md r27)."""
     load_tables(spark, sf_dir)
-    per = spark.sql(_survival_sessions_sql(True)).localCheckpoint(eager=True)
+    per = spark.sql(rewrite_sql(_survival_sessions_sql(), {})).localCheckpoint(eager=True)
     per.createOrReplaceTempView("__ts37_sessions__")
     return spark.sql(_survival_tail_sql("__ts37_sessions__"))
 
@@ -2284,11 +2253,10 @@ _WEEK_US = 7 * 86400 * 1000000
 DECAY_TOP_N = 10
 
 
-def _weekly_counts_sql(spark_dialect: bool) -> str:
-    epoch = "unix_micros" if spark_dialect else "epoch_us"
+def _weekly_counts_sql() -> str:
     return f"""
     SELECT user_id,
-           CAST(floor(CAST({epoch}(ts) AS DOUBLE) / {_WEEK_US}.0) AS BIGINT) AS week,
+           CAST(floor(CAST(epoch_us(ts) AS DOUBLE) / {_WEEK_US}.0) AS BIGINT) AS week,
            CAST(COUNT(*) AS BIGINT) AS n
     FROM events GROUP BY user_id, 2
     """
@@ -2360,11 +2328,11 @@ def _decay_tail_sql(weekly: str, spark_dialect: bool) -> str:
 
 @query(
     "ts38_decayed_leaderboard",
-    oracle=f"WITH weekly AS ({_weekly_counts_sql(False)}), {_decay_tail_sql('weekly', False).strip()[len('WITH '):]}",
+    oracle=f"WITH weekly AS ({_weekly_counts_sql()}), {_decay_tail_sql('weekly', False).strip()[len('WITH '):]}",
 )
 def ts38(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    spark.sql(_weekly_counts_sql(True)).createOrReplaceTempView("__ts38_weekly__")
+    spark.sql(rewrite_sql(_weekly_counts_sql(), {})).createOrReplaceTempView("__ts38_weekly__")
     return spark.sql(_decay_tail_sql("__ts38_weekly__", True))
 
 
@@ -2407,6 +2375,7 @@ def _attribution_sql(spark_dialect: bool) -> str:
     the naive single-key spelling: a structurally different plan
     producing the identical pair set is a stronger independent
     check."""
+    # Spark twin kept: the (user_id, bucket) equi-join is the skew fix above, not a spelling
     epoch = "unix_micros" if spark_dialect else "epoch_us"
     intdiv = "div" if spark_dialect else "//"
     if spark_dialect:
@@ -2715,10 +2684,7 @@ def ts42(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _cooccurrence_sql(
-    spark_dialect: bool, table: str = "events", baskets_rel: str | None = None
-) -> str:
-    epoch = "unix_micros" if spark_dialect else "epoch_us"
+def _cooccurrence_sql(table: str = "events", baskets_rel: str | None = None) -> str:
     gap_us = SESSION_GAP_MIN * 60 * 1000000
     baskets_sql = f"""
     WITH ordered AS (
@@ -2729,7 +2695,7 @@ def _cooccurrence_sql(
     flagged AS (
       SELECT user_id, event_id, ts, event_type,
              CASE WHEN prev_ts IS NULL
-                  OR {epoch}(ts) - {epoch}(prev_ts) > {gap_us} THEN 1 ELSE 0 END AS new_session
+                  OR epoch_us(ts) - epoch_us(prev_ts) > {gap_us} THEN 1 ELSE 0 END AS new_session
       FROM ordered
     ),
     baskets_core AS (
@@ -2791,15 +2757,15 @@ def cooccurrence_staged(spark: SparkSession, table: str = "events") -> DataFrame
     """Run the co-occurrence report with the session-basket relation
     checkpointed (shared by ts43 and the YAML stage op)."""
     baskets = spark.sql(
-        _cooccurrence_sql(True, table=table, baskets_rel="__baskets_only__")
+        rewrite_sql(_cooccurrence_sql(table=table, baskets_rel="__baskets_only__"), {})
     ).localCheckpoint(eager=True)
     baskets.createOrReplaceTempView("__ts43_baskets__")
     return spark.sql(
-        _cooccurrence_sql(True, table=table, baskets_rel="__ts43_baskets__")
+        rewrite_sql(_cooccurrence_sql(table=table, baskets_rel="__ts43_baskets__"), {})
     )
 
 
-@query("ts43_session_cooccurrence", oracle=_cooccurrence_sql(False))
+@query("ts43_session_cooccurrence", oracle=_cooccurrence_sql())
 def ts43(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
     return cooccurrence_staged(spark)
@@ -2833,15 +2799,13 @@ def ts43(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _seasonal_anomaly_sql(spark_dialect: bool, table: str = "events") -> str:
-    epoch = "unix_micros" if spark_dialect else "epoch_us"
-    intdiv = "div" if spark_dialect else "//"
+def _seasonal_anomaly_sql(table: str = "events") -> str:
     day_us = 86400 * 1000000
     hour_us = 3600 * 1000000
     return f"""
     WITH cells AS (
-      SELECT CAST({epoch}(ts) {intdiv} {day_us} AS BIGINT) AS day_no,
-             CAST(({epoch}(ts) % {day_us}) {intdiv} {hour_us} AS BIGINT) AS hr,
+      SELECT CAST(epoch_us(ts) // {day_us} AS BIGINT) AS day_no,
+             CAST((epoch_us(ts) % {day_us}) // {hour_us} AS BIGINT) AS hr,
              CAST(COUNT(*) AS BIGINT) AS n_events
       FROM {table} GROUP BY 1, 2
     ),
@@ -2872,10 +2836,10 @@ def _seasonal_anomaly_sql(spark_dialect: bool, table: str = "events") -> str:
     """
 
 
-@query("ts44_seasonal_anomaly", oracle=_seasonal_anomaly_sql(False))
+@query("ts44_seasonal_anomaly", oracle=_seasonal_anomaly_sql())
 def ts44(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_seasonal_anomaly_sql(True))
+    return spark.sql(rewrite_sql(_seasonal_anomaly_sql(), {}))
 
 
 # ---------------------------------------------------------------------------
@@ -2988,14 +2952,12 @@ def ts45(spark: SparkSession, sf_dir: str) -> DataFrame:
 # to DuckDB); completes the ts10/ts30/ts44 anomaly family with the
 # cumulative-collapse view.
 # ---------------------------------------------------------------------------
-def _drawdown_sql(spark_dialect: bool, table: str = "events") -> str:
-    epoch = "unix_micros" if spark_dialect else "epoch_us"
-    intdiv = "div" if spark_dialect else "//"
+def _drawdown_sql(table: str = "events") -> str:
     day_us = 86400 * 1000000
     return f"""
     WITH daily AS (
       SELECT event_type,
-             CAST(CAST({epoch}(ts) AS BIGINT) {intdiv} {day_us} AS BIGINT) AS day_no,
+             CAST(CAST(epoch_us(ts) AS BIGINT) // {day_us} AS BIGINT) AS day_no,
              CAST(COUNT(*) AS BIGINT) AS n
       FROM {table} GROUP BY 1, 2
     ),
@@ -3026,7 +2988,7 @@ def _drawdown_sql(spark_dialect: bool, table: str = "events") -> str:
     """
 
 
-@query("ts46_max_drawdown", oracle=_drawdown_sql(False))
+@query("ts46_max_drawdown", oracle=_drawdown_sql())
 def ts46(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    return spark.sql(_drawdown_sql(True))
+    return spark.sql(rewrite_sql(_drawdown_sql(), {}))

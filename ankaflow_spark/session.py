@@ -397,9 +397,11 @@ class SparkEngine:
         """DuckDB ``read_*('path', option=value, ...)`` table functions:
         materialize each as a Spark reader call (options mapped — see
         sqlfront/statements.py) registered under a temp view, then
-        substitute the view name into the SQL text. Single-argument
-        calls keep the pure-text ``format.`path``` rewrite (no session
-        needed). Reference parity: util.py make_selectable_func builds
+        substitute the view name into the SQL text. A single-argument
+        ``read_parquet('path')`` is read the same way, so its schema
+        comes from the footer (``sources/parquet.py``); other
+        single-argument calls keep the pure-text ``format.`path```
+        rewrite (no session needed). Reference parity: util.py make_selectable_func builds
         the same optioned calls programmatically."""
         from pyspark.sql import functions as F
 

@@ -70,8 +70,9 @@ def read_parquet(
     ``schema`` (a StructType or DDL string) skips the footer read;
     without it the footer schema is used (see the module docstring).
     ``options`` go to the reader as given. ``timestamps`` applies the engine's timestamp normalization
-    for external files: no-tz TIMESTAMP(NANOS) columns, read as int64 ns
-    under nanosAsLong, become TIMESTAMP through bigint ``div`` (a double
+    for external files: TIMESTAMP(NANOS) columns, with or without a time
+    zone, read as int64 ns under nanosAsLong, become TIMESTAMP through
+    bigint ``div`` (a double
     round-trip would lose precision above 2^53 ns), and TIMESTAMP_NTZ
     columns of any unit are cast to TIMESTAMP (the engine pins the
     session to UTC, so the cast is value-identical to DuckDB's naive
@@ -102,8 +103,8 @@ def footer_schema(
 def _probe(
     spark: SparkSession, paths: Sequence[str], options: Dict[str, str]
 ) -> Tuple[Optional[T.StructType], FrozenSet[str]]:
-    """(schema or None, top-level no-tz ``timestamp[ns]`` columns) from
-    the footer of the one file Spark's inference would read."""
+    """(schema or None, top-level ``timestamp[ns]`` columns of any time
+    zone) from the footer of the one file Spark's inference would read."""
     local = _local_path(spark, paths[0]) if len(paths) == 1 else None
     data = _data_file(local) if local is not None else None
     if data is None:
@@ -113,7 +114,9 @@ def _probe(
         arrow = meta.schema.to_arrow_schema()
     except (OSError, pa.ArrowException):
         return None, frozenset()
-    ns_cols = frozenset(f.name for f in arrow if str(f.type) == "timestamp[ns]")
+    ns_cols = frozenset(
+        f.name for f in arrow if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    )
     if options or spark.conf.get("spark.sql.parquet.mergeSchema", "false") == "true":
         return None, ns_cols
     stored = (meta.metadata or {}).get(SPARK_SCHEMA_KEY)

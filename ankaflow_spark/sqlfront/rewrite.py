@@ -436,7 +436,7 @@ DIALECT_FN_RENAMES: Dict[str, str] = {
     "list_value": "array",
     "list_pack": "array",
     "isodow": "weekday",  # + +1 handled by template below
-    "strlen": "length",
+    "strlen": "octet_length",  # DuckDB strlen counts bytes, Spark length characters
     "approx_unique": "approx_count_distinct",
     "strpos": "instr",
     "list": "collect_list",
@@ -1467,6 +1467,32 @@ def rewrite_json_arrows(sql: str) -> str:
 
 
 
+_CAST_OPEN = re.compile(r"\b(?:TRY_)?CAST\s*\(", re.IGNORECASE)
+_CAST_STRING_TYPE = re.compile(r"\bAS\s+(VARCHAR|TEXT)\s*$", re.IGNORECASE)
+_COLON_STRING_TYPE = re.compile(r"::\s*(VARCHAR|TEXT)\b(?!\s*[(\[])", re.IGNORECASE)
+_CTE_MATERIALIZED = re.compile(r"\bAS\s+((?:NOT\s+)?MATERIALIZED)\s*\(", re.IGNORECASE)
+
+
+def rewrite_type_spellings(sql: str) -> str:
+    """DuckDB spellings that Spark 4 rejects, rewritten in code only: an
+    unsized ``VARCHAR`` or ``TEXT`` cast target becomes ``STRING``
+    (Spark wants ``VARCHAR(n)`` and has no ``TEXT`` type), and the
+    ``[NOT] MATERIALIZED`` CTE marker is dropped. A type is rewritten
+    only as a cast target — after ``::`` or as the tail of
+    ``[TRY_]CAST(x AS ...)`` — because ``text`` is also a common column
+    name and alias."""
+    edits = [(m.start(1), m.end(1), "STRING") for m in _code_matches(sql, _COLON_STRING_TYPE)]
+    for m in _code_matches(sql, _CAST_OPEN):
+        close = _find_matching(sql, m.end() - 1)
+        t = _CAST_STRING_TYPE.search(sql, m.end(), close) if close > 0 else None
+        if t:
+            edits.append((t.start(1), t.end(1), "STRING"))
+    edits += [(m.start(1), m.end(1), "") for m in _code_matches(sql, _CTE_MATERIALIZED)]
+    for start, end, repl in sorted(edits, reverse=True):
+        sql = sql[:start] + repl + sql[end:]
+    return sql
+
+
 _FROM_FIRST = re.compile(r"^\s*FROM\b", re.IGNORECASE)
 
 
@@ -1529,7 +1555,8 @@ def normalize_dialect(sql: str) -> str:
         out = _EXCLUDE_BARE.sub(r"\1EXCEPT(\2)", out)
         return out
 
-    out = rewrite_from_first(sql)
+    out = rewrite_type_spellings(sql)
+    out = rewrite_from_first(out)
     out = rewrite_unpivot_statement(out)
     out = rewrite_star_replace(out)
     out = rewrite_star_rename(out)

@@ -257,9 +257,11 @@ def _columns_struct_to_ddl(value: str) -> str:
 
 
 def parse_reader_calls(sql: str) -> List[dict]:
-    """Every optioned ``read_*`` call in the statement: [{span, fn,
-    path, options, with_filename, schema_ddl}]. Single-argument calls
-    are left for the pure-text path-table rewrite."""
+    """Every optioned ``read_*`` call in the statement, and every
+    ``read_parquet('path')``: [{span, fn, path, options, with_filename,
+    schema_ddl}]. Other single-argument calls are left for the pure-text
+    path-table rewrite; a parquet one is read here so that its schema
+    comes from the file footer rather than from a Spark inference job."""
     out = []
     for m in _code_matches(sql, _READ_OPT_CALL):
         open_idx = m.end() - 1
@@ -267,15 +269,18 @@ def parse_reader_calls(sql: str) -> List[dict]:
         if close < 0:
             continue
         args = _split_top_level(sql[open_idx + 1 : close])
-        if len(args) <= 1:
+        fn = m.group(1).lower()
+        single = len(args) == 1
+        if not args or (single and fn != "read_parquet"):
             continue
         quoted = re.fullmatch(r"'(.*)'", args[0], re.DOTALL)
         if quoted is None:
+            if single:
+                continue
             raise UnsupportedDialect(
                 f"read_*: first argument must be a path literal, got {args[0]!r}"
             )
         path = quoted.group(1)
-        fn = m.group(1).lower()
         fmt = {"read_parquet": "parquet"}.get(fn, "csv" if "csv" in fn else "json")
         options: Dict[str, str] = {}
         schema_ddl = None

@@ -441,6 +441,28 @@ def test_parquet_us_ntz_timestamp_reads_as_timestamp(engine, tmp_path):
     assert rows[2] == (1717201815000000, 1717201815000000)
 
 
+def test_parquet_tz_aware_ns_timestamp_reads_as_timestamp(spark, tmp_path):
+    """A UTC-adjusted TIMESTAMP(NANOS) column reads as BIGINT ns under
+    nanosAsLong like a no-tz one, and must be normalized the same way."""
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ankaflow_spark.sources.parquet import read_parquet
+
+    when = [datetime(2024, 1, 1, 12, tzinfo=timezone.utc), datetime(2024, 6, 1, 0, 30, 15, tzinfo=timezone.utc)]
+    path = str(tmp_path / "ns_tz.parquet")
+    pq.write_table(
+        pa.table({"t": pa.array(when, pa.timestamp("ns", tz="UTC")), "u": pa.array(when, pa.timestamp("us"))}),
+        path,
+    )
+    df = read_parquet(spark, path, timestamps=True)
+    assert df.dtypes == [("t", "timestamp"), ("u", "timestamp")]
+    rows = df.selectExpr("unix_micros(t) AS t", "unix_micros(u) AS u").collect()
+    assert [(r["t"], r["u"]) for r in rows] == [(1704110400000000,) * 2, (1717201815000000,) * 2]
+
+
 class TestDuckTypeToSpark:
     """Mirrors reference tests/test_common_util.py (duckdb_to_pyarrow_type)
     including the nested cases the reference's non-recursive regex skips."""

@@ -205,6 +205,59 @@ def test_duckdb_dialect_functions(engine, tmp_path):
     assert engine.sql("SELECT 'epoch_us(x) // 2' AS s").collect()[0]["s"] == "epoch_us(x) // 2"
 
 
+def test_single_argument_read_parquet_plans_without_a_job(engine, tmp_path):
+    """read_parquet('file') takes its schema from the footer: building
+    the DataFrame submits no Spark job (schema inference would run one)."""
+    import uuid
+
+    import pandas as pd
+
+    pd.DataFrame({"v": [1, 2]}).to_parquet(tmp_path / "one.parquet")
+    sc = engine.spark.sparkContext
+    group = f"read-parquet-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan only")
+    try:
+        df = engine.sql(f"SELECT v FROM read_parquet('{tmp_path}/one.parquet')")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert sorted(r.v for r in df.collect()) == [1, 2]
+
+
+def test_duckdb_string_types_and_materialized_ctes_run(engine):
+    # Spark 4 rejects unsized VARCHAR and has no TEXT type; DuckDB
+    # accepts both as cast targets
+    row = engine.sql(
+        "SELECT CAST(1 AS VARCHAR) AS a, 2::VARCHAR AS b, CAST(3 AS TEXT) AS c,"
+        " try_cast(4 AS varchar) AS d, 5::text AS e"
+    ).first()
+    assert tuple(row) == ("1", "2", "3", "4", "5")
+    # `text` as a column name or alias is not a type and stays as it is
+    row = engine.sql(
+        "SELECT text, CAST(text AS VARCHAR) AS t2 FROM (SELECT 'x' AS text)"
+    ).first()
+    assert row.asDict() == {"text": "x", "t2": "x"}
+    # the CTE materialization marker is a DuckDB planner hint
+    assert engine.sql(
+        "WITH x AS MATERIALIZED (SELECT 1 AS a), y AS NOT MATERIALIZED"
+        " (SELECT a + 1 AS a FROM x) SELECT a FROM y"
+    ).first()["a"] == 2
+    # inside a string literal nothing is rewritten
+    assert engine.sql("SELECT 'CAST(1 AS VARCHAR)' AS s").first()["s"] == "CAST(1 AS VARCHAR)"
+    # a list type is not a scalar cast target: both cast forms leave it alone
+    from ankaflow_spark.sqlfront.rewrite import rewrite_type_spellings
+
+    lists = "SELECT x::VARCHAR[], CAST(y AS TEXT[]) FROM t"
+    assert rewrite_type_spellings(lists) == lists
+
+
+def test_strlen_counts_bytes(engine):
+    # DuckDB strlen is the byte length; length() counts characters
+    row = engine.sql("SELECT strlen('añb') AS b, length('añb') AS c").first()
+    assert (row["b"], row["c"]) == (4, 3)
+
+
 def test_rewrite_views_token_aware():
     from ankaflow_spark.sqlfront.rewrite import rewrite_views
 

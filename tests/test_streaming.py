@@ -879,11 +879,13 @@ def test_st27_watermark_drops_vs_python(spark, sf_dir):
         assert r["n_dropped"] == n_dropped[t]
         assert r["n_survived"] == n_rows[t] - n_dropped[t]
     assert sum(n_dropped.values()) > 0
-    # the oracle's watermark simulation is engine-independent: its
-    # Spark-dialect spelling must reproduce the streamed result too
+    # the oracle's watermark simulation is engine-independent: run
+    # through the SQL translator on Spark it reproduces the streamed
+    # result too
     from ankaflow_spark.operators.streamq import _st27_sim_sql
+    from ankaflow_spark.sqlfront.rewrite import rewrite_sql
 
-    sim = spark.sql(_st27_sim_sql(True)).collect()
+    sim = spark.sql(rewrite_sql(_st27_sim_sql(), {})).collect()
     assert [tuple(r) for r in sim] == [tuple(r) for r in out]
     # the calibrated delay is a pure function of the staged data: it is
     # memoized with the staged dir per session and events fingerprint,
