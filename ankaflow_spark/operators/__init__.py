@@ -132,7 +132,7 @@ def clear_shared_caches(spark) -> None:
     passes; without this, pass 2+ reads shared relations built in pass
     1, so the per-query minimum for every cache-building query (d02,
     d19, ...) silently excludes its cold build (the r9 judge's
-    "laundered minima" finding). Per-call localCheckpoint lattices
+    "laundered minima" finding). Per-call materialized lattices
     (s20's IVF views, s26's __km_dims__) rebuild every call and need no
     clearing. Durable entries are deliberately kept — load_tables'
     DataFrames and views and the staged stream copies are one-time

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sqlfront.ranking import versioned_dedup  # re-export for q06  # noqa: F401
-from ..session import memo
+from ..session import materialize, memo
 from ..sources.parquet import read_parquet
 from .tables import load_tables, table_path
 
@@ -145,14 +145,8 @@ _BAND_JOIN = " AND ".join(
 )
 
 # The shared near-dup relations below are session memos keyed by the
-# documents file's fingerprint (session.memo). Materialized via
-# localCheckpoint, NOT cache(): a temp view over a checkpointed
-# DataFrame resolves to a LogicalRDD, so every reference — including
-# both sides of the LSH self-join and repeated queries after view
-# re-registration — reads the computed blocks by construction.
-# cache() relies on CacheManager plan matching, which was observed to
-# silently miss after load_tables re-registers the source views
-# (the signature aggregation then re-executed per join side).
+# documents file's fingerprint (session.memo), each stored once by
+# session.materialize.
 
 
 def _docs_memo(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
@@ -182,9 +176,10 @@ def cached_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "shingles",
-        lambda: spark.sql(SPARK_SHINGLES)
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .localCheckpoint(),
+        lambda: materialize(
+            spark.sql(SPARK_SHINGLES)
+            .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        ),
     )
 
 
@@ -216,7 +211,7 @@ def cached_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     production near-dup pipeline maintains."""
     cached_shingles(spark, sf_dir)
     return _docs_memo(
-        spark, sf_dir, "bands", lambda: spark.sql(_SPARK_BANDS_SQL).localCheckpoint()
+        spark, sf_dir, "bands", lambda: materialize(spark.sql(_SPARK_BANDS_SQL))
     )
 
 
@@ -244,9 +239,9 @@ def cached_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "cands",
-        lambda: spark.sql(
-            f"WITH {_SPARK_CANDS_JOIN} SELECT doc_a, doc_b FROM cands"
-        ).localCheckpoint(),
+        lambda: materialize(
+            spark.sql(f"WITH {_SPARK_CANDS_JOIN} SELECT doc_a, doc_b FROM cands")
+        ),
     )
 
 
@@ -503,8 +498,7 @@ def d09(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation executes once per join side (plan-audited). The
     # checkpointed signature table is what a production pipeline
     # persists anyway (same rationale as cached_bands for d02).
-    sigs = spark.sql(_simhash_spark_core()).localCheckpoint()
-    sigs.createOrReplaceTempView("__d09_sigs__")
+    materialize(spark.sql(_simhash_spark_core()), "__d09_sigs__")
     return spark.sql(f"""
     WITH sigs AS (SELECT * FROM __d09_sigs__),
     blocks AS (
@@ -606,7 +600,7 @@ ORACLES["d05_embedding_neardup"] = ORACLES["d05_embedding_neardup"].format(
 # d06 — near-dup cluster assignment: TRUE connected components over the
 # MinHash candidate pairs. Spark iterates min-label propagation to a
 # FIXPOINT (each round one join+groupBy over the tiny pairs table,
-# lineage truncated per round with localCheckpoint); the oracle computes
+# lineage truncated per round); the oracle computes
 # the same ground truth as a DuckDB recursive transitive closure. Both
 # yield min-reachable-id per node, so they agree for any chain length —
 # unlike a fixed round count, which under-merges components whose
@@ -671,15 +665,15 @@ def connected_components(
     checkpoints release their blocks immediately.
     """
     # The per-round materialization must truncate BOTH lineage and
-    # Catalyst's ESTIMATED statistics. A plain localCheckpoint keeps the
+    # Catalyst's ESTIMATED statistics. A plain materialize keeps the
     # origin plan's estimated sizeInBytes, and in an iterative join loop
     # that estimate compounds geometrically round over round — measured:
     # by round ~8 jobs with constant plans/rows/tasks slowed ~6x per
     # round while a driver thread spun in BigInteger.multiplyToomCook3
     # under stats estimation (IterableOnceOps.product), multiplying
     # million-digit size estimates. The LOOP rounds therefore checkpoint
-    # in RAM (ckpt_reset: through the public localCheckpoint, so plan
-    # audits that wrap it still see every pre-checkpoint fragment, then
+    # in RAM (ckpt_reset: through session.materialize, so plan audits
+    # that wrap the checkpoint still see every pre-checkpoint fragment, then
     # the DataFrame is rebuilt from the checkpointed InternalRow RDD —
     # the fresh LogicalRDD carries NO origin stats, so nothing
     # compounds; within the loop every join pairs it against the
@@ -708,7 +702,7 @@ def connected_components(
         return read_parquet(spark, path)
 
     def ckpt_reset(df: DataFrame, name: str) -> DataFrame:
-        ck = df.localCheckpoint(eager=True)
+        ck = materialize(df)
         try:
             jdf = ck._jdf
             new_jdf = spark._jsparkSession.internalCreateDataFrame(
@@ -722,12 +716,11 @@ def connected_components(
 
     if not pairs_persisted:
         pairs = persist_reset(pairs.select("doc_a", "doc_b"), "pairs")
-    edges = (
+    edges = materialize(
         pairs.selectExpr("doc_a AS doc_id", "doc_b AS nbr")
         .unionAll(pairs.selectExpr("doc_b AS doc_id", "doc_a AS nbr"))
         .unionAll(pairs.selectExpr("doc_a AS doc_id", "doc_a AS nbr"))
         .unionAll(pairs.selectExpr("doc_b AS doc_id", "doc_b AS nbr"))
-        .localCheckpoint()
     )
     labels = ckpt_reset(
         edges.groupBy("doc_id").agg(F.min("nbr").alias("lbl")), "labels_init"
@@ -1106,7 +1099,7 @@ def semdedup_pairs_df(
     """Semantic near-dup pairs with an at-scale Spark execution shape:
     the corpus is repartitioned by vec_id before the dims explode, the
     TRAINED CENTROID DIMS and the cell assignment are each materialized
-    once with localCheckpoint (Spark inlines CTEs, so the multi-ref
+    once (Spark inlines CTEs, so the multi-ref
     two-level routing and the within-cell self-join would otherwise
     re-execute the Lloyd-training chain per reference — measured at 10x
     volume: 177s of a 196s wall was training re-execution), and
@@ -1135,15 +1128,13 @@ def semdedup_pairs_df(
         # so each intermediate materializes once (measured at 10x
         # volume: 177s of a 196s wall was training re-execution).
         init_sql = ivf_assign_ctes(True, table=view, k=k, init_only=True)
-        tdims = spark.sql(
+        materialize(spark.sql(
             f"WITH {init_sql} SELECT vec_id, d, q FROM ivf_tdims"
-        ).localCheckpoint(eager=True)
-        tdims.createOrReplaceTempView("__semdedup_tdims__")
-        icdims = spark.sql(
+        ), "__semdedup_tdims__")
+        materialize(spark.sql(
             f"WITH {init_sql} SELECT cid, d, q FROM ivf_icdims"
-        ).localCheckpoint(eager=True)
-        icdims.createOrReplaceTempView("__semdedup_icdims__")
-        tcdims = spark.sql(
+        ), "__semdedup_icdims__")
+        materialize(spark.sql(
             f"WITH train_set AS (SELECT vec_id, embedding FROM {view}"
             f" WHERE vec_id % {IVF_TRAIN_MOD} = 0),\n"
             + ivf_train_tail_ctes(
@@ -1153,13 +1144,11 @@ def semdedup_pairs_df(
                 icdims="__semdedup_icdims__",
             )
             + " SELECT cid, d, q FROM ivf_tcdims"
-        ).localCheckpoint(eager=True)
-        tcdims.createOrReplaceTempView(tview)
-        assign = spark.sql(
+        ), tview)
+        materialize(spark.sql(
             f"WITH {ivf_routing_ctes(True, table=view, two_level=two_level, tcdims=tview)} "
             "SELECT vec_id, cid FROM assign2"
-        ).localCheckpoint(eager=True)
-        assign.createOrReplaceTempView(aview)
+        ), aview)
     else:
         # literal K (the YAML operator's target_cell_size path): flat
         # argmin at both levels references every CTE in the
@@ -1168,11 +1157,10 @@ def semdedup_pairs_df(
         # only paid 3 extra driver jobs per call (r14 profile: 0.15 +
         # 0.14 + 0.67 s at sf0.1). Run the whole chain as one statement
         # and materialize only the multiply-consumed assignment.
-        assign = spark.sql(
+        materialize(spark.sql(
             "WITH " + ivf_assign_ctes(True, table=view, k=k)
             + " SELECT vec_id, cid FROM assign2"
-        ).localCheckpoint(eager=True)
-        assign.createOrReplaceTempView(aview)
+        ), aview)
     return spark.sql(f"""
     WITH assign2 AS (SELECT * FROM {aview}),
     {_sem_pair_ctes(True, view, threshold)}
@@ -1521,10 +1509,11 @@ def d15(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     a = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     b = pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    edges = a.unionAll(b).localCheckpoint()
-    edges.createOrReplaceTempView("__d15_edges__")
-    deg = edges.groupBy(F.col("src").alias("doc_id")).agg(F.count("*").alias("deg")).localCheckpoint()
-    deg.createOrReplaceTempView("__d15_deg__")
+    edges = materialize(a.unionAll(b), "__d15_edges__")
+    materialize(
+        edges.groupBy(F.col("src").alias("doc_id")).agg(F.count("*").alias("deg")),
+        "__d15_deg__",
+    )
     return spark.sql(_pagerank_sql(True))
 
 
@@ -1609,20 +1598,17 @@ def d17(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-execute those subtrees per consumer (38s -> ~4s at sf0.1; the
     # production pattern is the same — stage outputs persist, the
     # cascade joins the persisted verdicts)
-    exact = (
+    exact = materialize(
         QUERIES["d01_exact_dedup"](spark, sf_dir)
         .select(F.col("keep_doc_id").alias("doc_id"), F.lit(True).alias("__e__"))
-        .localCheckpoint(eager=True)
     )
-    near = (
+    near = materialize(
         QUERIES["d08_dedup_survivors"](spark, sf_dir)
         .select("doc_id", F.col("keep").alias("__n__"))
-        .localCheckpoint(eager=True)
     )
-    sem = (
+    sem = materialize(
         QUERIES["d10_semantic_dedup"](spark, sf_dir)
         .select(F.col("vec_id").alias("doc_id"), F.col("keep").alias("__s__"))
-        .localCheckpoint(eager=True)
     )
     keep_exact = F.coalesce(F.col("__e__"), F.lit(False))
     keep_near = F.coalesce(F.col("__n__"), F.lit(True))
@@ -1857,10 +1843,12 @@ def cached_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "spans",
-        lambda: spark.sql(
-            f"WITH {_span_ctes(True)} "
-            "SELECT doc_id, n_chars, span_start, span_end FROM spans"
-        ).localCheckpoint(),
+        lambda: materialize(
+            spark.sql(
+                f"WITH {_span_ctes(True)} "
+                "SELECT doc_id, n_chars, span_start, span_end FROM spans"
+            )
+        ),
     )
 
 
@@ -2048,10 +2036,9 @@ def _bloom_decontam_sql(spark_dialect: bool, bench_rel: str | None = None) -> st
 @query("d21_bloom_decontam", oracle=_bloom_decontam_sql(False))
 def d21(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    bench = spark.sql(
+    materialize(spark.sql(
         _bloom_decontam_sql(True, bench_rel="__grams_only__")
-    ).localCheckpoint(eager=True)
-    bench.createOrReplaceTempView("__d21_bench__")
+    ), "__d21_bench__")
     return spark.sql(_bloom_decontam_sql(True, bench_rel="__d21_bench__"))
 
 
@@ -2305,10 +2292,9 @@ def _dedup_bias_sql(spark_dialect: bool, keys_rel: str | None = None) -> str:
 @query("d25_dedup_bias_audit", oracle=_dedup_bias_sql(False))
 def d25(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    keys = spark.sql(
+    materialize(spark.sql(
         _dedup_bias_sql(True, keys_rel="__keys_only__")
-    ).localCheckpoint(eager=True)
-    keys.createOrReplaceTempView("__d25_keys__")
+    ), "__d25_keys__")
     return spark.sql(_dedup_bias_sql(True, keys_rel="__d25_keys__"))
 
 
@@ -2492,7 +2478,7 @@ def d27(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification join at ~10 executions in the one-string plan.
     Materialize `verified` (pair list) once and the per-class COUNTS
     (<= 3 rows — never the wedge-sized classified relation, r13 ADVICE)
-    once with eager localCheckpoints; the report replays the verbatim
+    once; the report replays the verbatim
     expressions over the views. Oracle replays the one-string form
     (DuckDB computes each CTE once).
 
@@ -2509,7 +2495,7 @@ def d27(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
     cached_shingles(spark, sf_dir)
     cached_cands(spark, sf_dir)
-    spark.sql("""
+    materialize(spark.sql("""
     WITH shingles AS (SELECT doc_id, sh FROM __shingles__),
     cands AS (SELECT doc_a, doc_b FROM __cands__),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM shingles GROUP BY doc_id),
@@ -2526,7 +2512,7 @@ def d27(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes zb ON zb.doc_id = c.doc_b
     LEFT JOIN common cm ON cm.doc_a = c.doc_a AND cm.doc_b = c.doc_b
     WHERE COALESCE(cm.nc, 0) * 5 >= za.n + zb.n - COALESCE(cm.nc, 0)
-    """).localCheckpoint(eager=True).createOrReplaceTempView("__d27_verified__")
+    """), "__d27_verified__")
     # Checkpoint only the |classes|-bounded COUNTS (<= 3 rows), not the
     # wedge-sized classified relation: wedges grow quadratically in
     # verified-edge degree, so materializing them pressures executor
@@ -2535,7 +2521,7 @@ def d27(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it into the same statement loses no sharing; the report tail
     # divides the same BIGINT count by the same BIGINT total in DOUBLE,
     # bit-identical to the previous two-read spelling.
-    spark.sql("""
+    materialize(spark.sql("""
     WITH verified AS (SELECT * FROM __d27_verified__),
     edges AS (
       SELECT doc_a AS m, doc_b AS o FROM verified
@@ -2556,7 +2542,7 @@ def d27(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT wedge_class, CAST(COUNT(*) AS BIGINT) AS n_wedges
     FROM classified GROUP BY wedge_class
-    """).localCheckpoint(eager=True).createOrReplaceTempView("__d27_counts__")
+    """), "__d27_counts__")
     return spark.sql("""
     SELECT c.wedge_class AS wedge_class,
            c.n_wedges AS n_wedges,

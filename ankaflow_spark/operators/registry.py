@@ -24,6 +24,7 @@ from typing import Any, Callable, Dict
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from ..sqlfront.rewrite import rewrite_sql
 
 OPERATORS: Dict[str, Callable] = {}
@@ -552,7 +553,7 @@ def op_bigram_surprisal(engine, df: DataFrame, params: Dict[str, Any]) -> DataFr
     the corpus MLE bigram model (two map-side-combinable groupBys) and
     scores each document's avg/max -ln P(w2|w1) + novel-bigram
     fraction. Documents shorter than two tokens are excluded (no
-    bigrams). The bigram table materializes once (localCheckpoint)."""
+    bigrams). The bigram table materializes once."""
     from .textops import _bigram_surprisal_sql
 
     id_col = params.get("id_column", "doc_id")
@@ -561,14 +562,13 @@ def op_bigram_surprisal(engine, df: DataFrame, params: Dict[str, Any]) -> DataFr
     df.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     ).createOrReplaceTempView(view)
-    bigrams = engine.spark.sql(f"""
+    materialize(engine.spark.sql(f"""
       SELECT doc_id, pos, w[pos - 1] AS w1, w[pos] AS w2
       FROM (SELECT doc_id, filter(split(lower(text), ' '), x -> x <> '') AS w FROM {view})
       LATERAL VIEW explode(
         CASE WHEN size(w) >= 2 THEN sequence(1, size(w) - 1) ELSE array() END
       ) t AS pos
-    """).localCheckpoint(eager=True)
-    bigrams.createOrReplaceTempView("t13_bigrams")
+    """), "t13_bigrams")
     return engine.spark.sql(_bigram_surprisal_sql(True))
 
 
@@ -983,7 +983,7 @@ def op_growth_accounting(engine, df: DataFrame, params: Dict[str, Any]) -> DataF
         )
         .otherwise("resurrected")
     )
-    weekly = (
+    weekly = materialize(
         lagd.withColumn("__st__", status)
         .groupBy(F.col("__wk__").alias("week_start"))
         .agg(
@@ -992,7 +992,6 @@ def op_growth_accounting(engine, df: DataFrame, params: Dict[str, Any]) -> DataF
             F.count(F.when(F.col("__st__") == "retained", 1)).alias("n_retained"),
             F.count(F.when(F.col("__st__") == "resurrected", 1)).alias("n_resurrected"),
         )
-        .localCheckpoint(eager=True)
     )
     prev = weekly.select(
         (F.col("week_start") + F.expr("INTERVAL 7 DAY")).alias("week_start"),
@@ -1021,10 +1020,9 @@ def op_heavy_hitters(engine, df: DataFrame, params: Dict[str, Any]) -> DataFrame
         F.col(key_col).alias("__key__"),
     ).agg(F.count("*").alias("__c__"))
     win = W.partitionBy("__shard__").orderBy(F.col("__c__").desc(), F.col("__key__"))
-    kept = (
+    kept = materialize(
         shard_counts.withColumn("__rn__", F.row_number().over(win))
         .filter(F.col("__rn__") <= m)
-        .localCheckpoint(eager=True)
     )
     bound = kept.agg(
         F.coalesce(F.sum(F.when(F.col("__rn__") == m, F.col("__c__"))), F.lit(0)).alias(
@@ -1484,7 +1482,7 @@ def op_pmi_collocations(engine, df: DataFrame, params: Dict[str, Any]) -> DataFr
     min_count = int(params.get("min_count", 5))
     top = int(params.get("top", 50))
     df.createOrReplaceTempView("__pmi_in__")
-    big = engine.spark.sql(
+    materialize(engine.spark.sql(
         f"""
         SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c2 FROM (
           SELECT w[pos - 1] AS w1, w[pos] AS w2
@@ -1495,8 +1493,7 @@ def op_pmi_collocations(engine, df: DataFrame, params: Dict[str, Any]) -> DataFr
           ) t AS pos
         ) GROUP BY w1, w2
         """
-    ).localCheckpoint(eager=True)
-    big.createOrReplaceTempView("__pmi_big__")
+    ), "__pmi_big__")
     from .textops import _pmi_tail_sql
 
     return engine.spark.sql(_pmi_tail_sql("__pmi_big__", min_count, top))
@@ -1661,15 +1658,13 @@ def op_dow_seasonality(engine, df: DataFrame, params: Dict[str, Any]) -> DataFra
 
     group = params.get("group", "event_type")
     ts_col = params.get("ts_col", "ts")
-    daily = (
+    materialize(
         df.groupBy(
             F.col(group).alias("event_type"),
             F.col(ts_col).cast("date").alias("day"),
-        )
-        .agg(F.count("*").cast("bigint").alias("n"))
-        .localCheckpoint(eager=True)
+        ).agg(F.count("*").cast("bigint").alias("n")),
+        "__dowseas_daily__",
     )
-    daily.createOrReplaceTempView("__dowseas_daily__")
     return engine.spark.sql(rewrite_sql(_dow_tail_sql("__dowseas_daily__"), {}))
 
 
@@ -1689,7 +1684,7 @@ def op_repeat_gaps(engine, df: DataFrame, params: Dict[str, Any]) -> DataFrame:
         df = df.filter(params["where"])
     order = [F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
     w = Window.partitionBy(user).orderBy(*order)
-    gaps = (
+    gaps = materialize(
         df.withColumn("__prev__", F.lag(F.unix_micros(F.col(ts_col))).over(w))
         .filter(F.col("__prev__").isNotNull())
         .select(
@@ -1699,7 +1694,6 @@ def op_repeat_gaps(engine, df: DataFrame, params: Dict[str, Any]) -> DataFrame:
                 / 86400000000.0
             ).cast("bigint").alias("gap_days"),
         )
-        .localCheckpoint(eager=True)
     )
     hist = gaps.groupBy("gap_days").agg(
         F.count("*").cast("bigint").alias("n_gaps"),
@@ -1739,12 +1733,11 @@ def op_activity_streaks(engine, df: DataFrame, params: Dict[str, Any]) -> DataFr
             ).otherwise(0)
         ).over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
-    best = (
+    best = materialize(
         islands.groupBy("__u__", "__isl__")
         .agg(F.count("*").cast("bigint").alias("__len__"))
         .groupBy("__u__")
         .agg(F.max("__len__").alias("streak_days"))
-        .localCheckpoint(eager=True)
     )
     tot = best.agg(F.count("*").cast("bigint").alias("__n__"))
     return (
@@ -1891,7 +1884,7 @@ def op_survival_curve(engine, df: DataFrame, params: Dict[str, Any]) -> DataFram
     us = F.unix_micros(F.col(ts_col))
     order = [F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
     w = Window.partitionBy(user).orderBy(*order)
-    sessions = (
+    sessions = materialize(
         df.withColumn("__us__", us)
         .withColumn("__prev__", F.lag("__us__").over(w))
         .withColumn(
@@ -1908,7 +1901,6 @@ def op_survival_curve(engine, df: DataFrame, params: Dict[str, Any]) -> DataFram
             .alias("__dur__"),
             F.max("__us__").alias("__end__"),
         )
-        .localCheckpoint(eager=True)
     )
     edge = sessions.agg(F.max("__end__").alias("__edge__"))
     labeled = sessions.crossJoin(F.broadcast(edge)).select(
@@ -2237,10 +2229,9 @@ def op_daily_acf(engine, df: DataFrame, params: Dict[str, Any]) -> DataFrame:
     df.select(
         F.col(key).alias("event_type"), F.col(ts_col).alias("ts")
     ).createOrReplaceTempView("__op_daily_acf__")
-    daily = engine.spark.sql(
+    materialize(engine.spark.sql(
         _daily_acf_sql(True, daily_rel="__daily_only__", table="__op_daily_acf__")
-    ).localCheckpoint(eager=True)
-    daily.createOrReplaceTempView("__op_daily_acf_lattice__")
+    ), "__op_daily_acf_lattice__")
     return engine.spark.sql(
         _daily_acf_sql(True, daily_rel="__op_daily_acf_lattice__")
     )

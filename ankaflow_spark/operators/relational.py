@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..session import fingerprint, memo, scoped_conf, scratch_dir
+from ..session import fingerprint, materialize, memo, scoped_conf, scratch_dir
 from ..sources.parquet import read_parquet
 from ..sqlfront.rewrite import rewrite_sql
 from .tables import load_tables, table_path
@@ -1873,10 +1873,9 @@ def q52(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the candidate summary is <= SHARDS*M rows; materialize it once so
     # cand/bound don't each re-run the shard aggregation (Spark inlines
     # CTE consumers — PERF.md r4 findings)
-    kept = (
+    kept = materialize(
         shard_counts.withColumn("rn", F.row_number().over(win))
         .filter(F.col("rn") <= _HH_M)
-        .localCheckpoint(eager=True)
     )
     bound = kept.agg(
         F.coalesce(
@@ -2647,7 +2646,7 @@ def q69(spark: SparkSession, sf_dir: str) -> DataFrame:
 # two-phase, no Expand), the FK check is one NOT-EXISTS anti join, and
 # the verdict table is assembled by UNION ALL over the 1-row
 # relations. Spark materializes the three 1-row relations once
-# (localCheckpoint) because the assembly references each up to 3x and
+# because the assembly references each up to 3x and
 # CTE inlining would re-run the table scans per reference; DuckDB
 # runs the identical SQL as plain CTEs.
 # ---------------------------------------------------------------------------
@@ -2719,7 +2718,7 @@ def q70(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("__dq_l__", _DQ_L_SQL),
         ("__dq_fk__", _DQ_FK_SQL),
     ):
-        spark.sql(sql).localCheckpoint(eager=True).createOrReplaceTempView(name)
+        materialize(spark.sql(sql), name)
     return spark.sql(_dq_checks_sql("__dq_o__", "__dq_l__", "__dq_fk__"))
 
 
@@ -2947,8 +2946,7 @@ _PSI_SQL = (
 @query("q73_psi_drift", oracle=_PSI_SQL)
 def q73(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    cells = spark.sql(_PSI_CELLS_SQL).localCheckpoint(eager=True)
-    cells.createOrReplaceTempView("__q73_cells__")
+    materialize(spark.sql(_PSI_CELLS_SQL), "__q73_cells__")
     return spark.sql(_psi_tail_sql("__q73_cells__"))
 
 
@@ -3241,10 +3239,9 @@ def _freshness_sql(
 def freshness_staged(spark: SparkSession, table: str = "events") -> DataFrame:
     """Run the freshness audit with the per-type profile checkpointed
     (shared by q78 and the YAML stage op)."""
-    per = spark.sql(
+    materialize(spark.sql(
         _freshness_sql(True, table=table, per_rel="__per_only__")
-    ).localCheckpoint(eager=True)
-    per.createOrReplaceTempView("__q78_per__")
+    ), "__q78_per__")
     return spark.sql(_freshness_sql(True, table=table, per_rel="__q78_per__"))
 
 
@@ -3347,12 +3344,9 @@ def _erasure_sql() -> str:
 @query("q79_erasure_cascade", oracle=_erasure_sql())
 def q79(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    cohort = spark.sql(_ERASURE_COHORT_SQL).localCheckpoint(eager=True)
-    cohort.createOrReplaceTempView("__q79_cohort__")
-    ord_rel = spark.sql(_erasure_ord_sql("__q79_cohort__")).localCheckpoint(eager=True)
-    ord_rel.createOrReplaceTempView("__q79_ord__")
-    li_n = spark.sql(_erasure_li_sql("__q79_ord__")).localCheckpoint(eager=True)
-    li_n.createOrReplaceTempView("__q79_li__")
+    materialize(spark.sql(_ERASURE_COHORT_SQL), "__q79_cohort__")
+    materialize(spark.sql(_erasure_ord_sql("__q79_cohort__")), "__q79_ord__")
+    materialize(spark.sql(_erasure_li_sql("__q79_ord__")), "__q79_li__")
     return spark.sql(
         _erasure_tail_sql("__q79_cohort__", "__q79_ord__", li_rel="__q79_li__")
     )

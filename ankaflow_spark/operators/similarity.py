@@ -26,6 +26,7 @@ from typing import Callable, Dict
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import materialize
 from .tables import load_tables
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -860,10 +861,9 @@ def s06(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(floor(CAST(p.pv AS DOUBLE) * 1000000) AS BIGINT) AS v_e6
       FROM embeddings LATERAL VIEW posexplode(embedding) p AS d, pv
     """
-    cent = spark.sql(
+    materialize(spark.sql(
         f"SELECT label, d, CAST(SUM(v_e6) AS BIGINT) AS s_e6 FROM ({dims}) dims GROUP BY label, d"
-    ).localCheckpoint()
-    cent.createOrReplaceTempView("__s06_cent__")
+    ), "__s06_cent__")
     return spark.sql(_label_cohesion_sql(True))
 
 
@@ -1139,8 +1139,7 @@ def _pq_recall_sql(spark_dialect: bool) -> str:
 @query("s10_pq_recall_eval", oracle=_pq_recall_sql(False))
 def s10(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    approx = QUERIES["s09_pq_adc_search"](spark, sf_dir).localCheckpoint()
-    approx.createOrReplaceTempView("__s10_approx__")
+    materialize(QUERIES["s09_pq_adc_search"](spark, sf_dir), "__s10_approx__")
     return spark.sql(_pq_recall_sql(True))
 
 
@@ -1203,7 +1202,7 @@ def s11(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     t = load_tables(spark, sf_dir)
-    dims = (
+    dims = materialize(  # consumed 4x below
         t["embeddings"]
         .select("vec_id", F.posexplode("embedding").alias("d", "pv"))
         .select(
@@ -1211,7 +1210,6 @@ def s11(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d",
             F.floor(F.col("pv").cast("double") * 1000000).cast("bigint").alias("q"),
         )
-        .localCheckpoint(eager=True)  # consumed 4x below; materialize once
     )
 
     def assign(cents: DataFrame) -> DataFrame:
@@ -1227,13 +1225,12 @@ def s11(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("c"), "d", "q"
     )
     m1 = assign(c0).select("vec_id", "c")
-    c1 = (
+    c1 = materialize(  # k x DIM rows; feeds the round-2 broadcast
         dims.join(m1, "vec_id")
         .groupBy("c", "d")
         .agg(
             F.floor(F.sum("q").cast("double") / F.count("*")).cast("bigint").alias("q")
         )
-        .localCheckpoint(eager=True)  # k x DIM rows; feeds the round-2 broadcast
     )
     return (
         assign(c1)
@@ -1310,7 +1307,7 @@ def _ivf_recall_sql(spark_dialect: bool) -> str:
     else:
         exact = ORACLES["s01_cosine_topk"].replace("ORDER BY query_id, rn", "")
         approx = ORACLES["s03_ivf_ann"].replace("ORDER BY query_id, rn", "")
-    # both sides are localCheckpoint'ed (no stats) and tiny by
+    # both sides are materialized (no stats) and tiny by
     # construction (queries x TOP_K rows) — declare the broadcast (the
     # s09/r3 lesson: constant-size relations must be hinted)
     hint = "/*+ BROADCAST(a) */" if spark_dialect else ""
@@ -1330,10 +1327,8 @@ def _ivf_recall_sql(spark_dialect: bool) -> str:
 @query("s13_ivf_recall_eval", oracle=_ivf_recall_sql(False))
 def s13(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    exact = QUERIES["s01_cosine_topk"](spark, sf_dir).localCheckpoint()
-    approx = QUERIES["s03_ivf_ann"](spark, sf_dir).localCheckpoint()
-    exact.createOrReplaceTempView("__s13_exact__")
-    approx.createOrReplaceTempView("__s13_approx__")
+    materialize(QUERIES["s01_cosine_topk"](spark, sf_dir), "__s13_exact__")
+    materialize(QUERIES["s03_ivf_ann"](spark, sf_dir), "__s13_approx__")
     return spark.sql(_ivf_recall_sql(True))
 
 
@@ -1539,7 +1534,7 @@ def s17(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     t = load_tables(spark, sf_dir)
-    dims = (
+    dims = materialize(  # consumed 3x: round-1/2 scoring + update
         t["embeddings"]
         .select("vec_id", F.posexplode("embedding").alias("d", "pv"))
         .select(
@@ -1547,7 +1542,6 @@ def s17(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d",
             F.floor(F.col("pv").cast("double") * 1000000).cast("bigint").alias("q"),
         )
-        .localCheckpoint(eager=True)  # consumed 3x: round-1/2 scoring + update
     )
 
     def scores(cents: DataFrame) -> DataFrame:
@@ -1563,13 +1557,12 @@ def s17(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("c"), "d", "q"
     )
     m1 = scores(c0).filter(F.col("rk") == 1).select("vec_id", "c")
-    c1 = (
+    c1 = materialize(
         dims.join(m1, "vec_id")
         .groupBy("c", "d")
         .agg(
             F.floor(F.sum("q").cast("double") / F.count("*")).cast("bigint").alias("q")
         )
-        .localCheckpoint(eager=True)
     )
     pairs = (
         scores(c1)
@@ -1689,9 +1682,9 @@ def s15(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-ranks an ANN shortlist rather than the corpus. Spark-side the
 # corpus pass is ONE zip_with/aggregate integer fold per candidate row
 # (s01's plan class — no posexplode, no per-dimension shuffle); the
-# shortlist and its pair-dot table are materialized once
-# (localCheckpoint), and each greedy step is materialized too: the
-# step CTEs reference their predecessor 2-3 times, so leaving them to
+# shortlist and its pair-dot table are materialized once, and each
+# greedy step is materialized too: the step CTEs reference their
+# predecessor 2-3 times, so leaving them to
 # Catalyst's CTE inlining re-expands the chain ~3^k-fold (a ~25k-node
 # physical plan and multi-second compile observed when fully inlined).
 # Each step is a <=30-row job; DuckDB runs the identical step SQL as a
@@ -1798,7 +1791,7 @@ def s18(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer fold per candidate row, top-30 via TakeOrderedAndProject.
     # Embeddings ride along so the pair-dot table needs no second
     # corpus scan.
-    sl_full = spark.sql(f"""
+    sl_full = materialize(spark.sql(f"""
       SELECT /*+ BROADCAST(q) */ c.vec_id AS cid,
              {_mmr_fold('c.embedding', 'q.qe')} AS rel,
              c.embedding AS e
@@ -1806,24 +1799,23 @@ def s18(spark: SparkSession, sf_dir: str) -> DataFrame:
       CROSS JOIN (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0) q
       WHERE c.vec_id <> 0
       ORDER BY 2 DESC, 1 LIMIT {_MMR_SHORTLIST}
-    """).localCheckpoint(eager=True)
-    sl_full.createOrReplaceTempView("s18_slf")
+    """), "s18_slf")
     sl_full.select("cid", "rel").createOrReplaceTempView("s18_sl")
-    spark.sql(f"""
+    materialize(spark.sql(f"""
       SELECT a.cid AS a, b.cid AS b, {_mmr_fold('a.e', 'b.e')} AS dot
       FROM s18_slf a JOIN s18_slf b ON a.cid <> b.cid
-    """).localCheckpoint(eager=True).createOrReplaceTempView("s18_pd")
+    """), "s18_pd")
     hint = "/*+ BROADCAST(p) */ "
-    sel = spark.sql(
+    sel = materialize(spark.sql(
         "SELECT cid, rel, 1 AS pick FROM s18_sl ORDER BY rel DESC, cid LIMIT 1"
-    ).localCheckpoint(eager=True)
+    ))
     for k in range(2, _MMR_K + 1):
         sel.createOrReplaceTempView("s18_sel")
         step = spark.sql(_mmr_step_sql(k, "s18_sl", "s18_pd", "s18_sel", hint))
         # Materialize each <=k-row selection set: the step SQL
         # references its predecessor 2-3x, and inlined CTEs re-expand
         # the chain ~3^k-fold (plan compile dominates wall time).
-        sel = sel.union(step).localCheckpoint(eager=True)
+        sel = materialize(sel.union(step))
     sel.createOrReplaceTempView("s18_last")
     return spark.sql(_mmr_final_sql("s18_last", "s18_pd", hint))
 
@@ -2016,21 +2008,19 @@ def _probe_sweep_sql(spark_dialect: bool) -> str:
 def s20(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
     cached_embeddings(spark)
-    spark.sql(
+    materialize(spark.sql(
         "WITH " + ivf_assign_ctes(True, training_only=True)
         + " SELECT cid, d, q FROM ivf_tcdims"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("__s20_cdims__")
+    ), "__s20_cdims__")
     # Route against the checkpointed trained-centroid dims instead of
     # re-running the Lloyd training chain inside the assignment build
     # (same relation by construction — ivf_routing_ctes routes assign2
     # against tcdims; measured bit-identical, ~0.7 s of the 2.4 s).
-    spark.sql(
+    materialize(spark.sql(
         "WITH " + ivf_routing_ctes(True, tcdims="__s20_cdims__")
         + " SELECT vec_id, cid FROM assign2"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("__s20_assign__")
-    QUERIES["s01_cosine_topk"](spark, sf_dir).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("__s20_exact__")
+    ), "__s20_assign__")
+    materialize(QUERIES["s01_cosine_topk"](spark, sf_dir), "__s20_exact__")
     return spark.sql(_probe_sweep_sql(True))
 
 
@@ -2172,9 +2162,9 @@ def _cell_balance_sql(spark_dialect: bool) -> str:
 def s22(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
     cached_embeddings(spark)
-    spark.sql(
+    materialize(spark.sql(
         "WITH " + ivf_assign_ctes(True) + " SELECT vec_id, cid FROM assign2"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("__s22_assign__")
+    ), "__s22_assign__")
     return spark.sql(_cell_balance_sql(True))
 
 
@@ -2397,18 +2387,14 @@ def s23(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature fold 4x (q/c sides x the UNION ALL mirror) and the
     per-pair cosine fold 2x (the mirror) — guide §2.4 shared work.
     Materializing `buckets` (|V| rows) and `half` (~|V|*occ/2 rows)
-    with eager localCheckpoints computes each fold exactly once; the
+    computes each fold exactly once; the
     mirror replays the SAME doubles (cosine is symmetric — this is the
     documented bit-identical mirror, now by construction). The oracle
     replays the one-string CTE form (DuckDB computes each CTE once)."""
     load_tables(spark, sf_dir)
     cached_embeddings(spark)
-    spark.sql(_adaptive_bucket_sql(True, HUB_TARGET_OCC)).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("__s23_buckets__")
-    spark.sql(_hubness_half_sql("__s23_buckets__")).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("__s23_half__")
+    materialize(spark.sql(_adaptive_bucket_sql(True, HUB_TARGET_OCC)), "__s23_buckets__")
+    materialize(spark.sql(_hubness_half_sql("__s23_buckets__")), "__s23_half__")
     return spark.sql(_hubness_tail_sql("__s23_half__"))
 
 
@@ -2564,18 +2550,14 @@ def s24(spark: SparkSession, sf_dir: str) -> DataFrame:
     work: Spark inlines multiply-referenced CTEs, so the one-string
     form re-ran the 10-plane corpus signature fold three times (occ +
     the approx self-join's two masked sides) and the corpus norm fold
-    four times. Materialize the signature and the norms once (eager
-    localCheckpoints); `masked` stays inline — over the view it is a
+    four times. Materialize the signature and the norms once; `masked`
+    stays inline — over the view it is a
     modulo projection, not a fold. The oracle replays the one-string
     CTE form (DuckDB computes each CTE once)."""
     load_tables(spark, sf_dir)
     cached_embeddings(spark)
-    spark.sql(_bucket_sql_n(True, _S24_MAXP)).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("__s24_sig__")
-    spark.sql(_SPARK_NORM).localCheckpoint(eager=True).createOrReplaceTempView(
-        "__s24_norms__"
-    )
+    materialize(spark.sql(_bucket_sql_n(True, _S24_MAXP)), "__s24_sig__")
+    materialize(spark.sql(_SPARK_NORM), "__s24_norms__")
     return spark.sql(
         _plane_sweep_tail_sql(True, "__s24_sig__", "__s24_norms__")
     )
@@ -2733,7 +2715,7 @@ def s25(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-ran the stale-centroid training + full-corpus routing twice (the
     aq/am self-join on assign_all) and the corpus norm fold four times.
     Materialize the trained-centroid dims, the corpus assignment, and
-    the norms once (eager localCheckpoints, the s17/s20 pattern); the
+    the norms once (the s17/s20 pattern); the
     tail replays the SAME stored values. The oracle replays the
     one-string CTE form (DuckDB computes each CTE once)."""
     load_tables(spark, sf_dir)
@@ -2741,20 +2723,18 @@ def s25(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(
         "SELECT vec_id, embedding FROM embeddings WHERE vec_id % 4 <> 3"
     ).createOrReplaceTempView("__s25_old__")
-    spark.sql(
+    materialize(spark.sql(
         "WITH "
         + ivf_assign_ctes(True, table="__s25_old__", training_only=True)
         + " SELECT cid, d, q FROM ivf_tcdims"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("__s25_tcdims__")
+    ), "__s25_tcdims__")
     # ivf_routing_ctes' ivf_alldims/assign2 are textually the same
     # expansion+argmin as _stale_recall_sql's all_dims/assign_all.
-    spark.sql(
+    materialize(spark.sql(
         "WITH " + ivf_routing_ctes(True, tcdims="__s25_tcdims__")
         + " SELECT vec_id, cid FROM assign2"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("__s25_assign__")
-    spark.sql(_SPARK_NORM).localCheckpoint(eager=True).createOrReplaceTempView(
-        "__s25_norms__"
-    )
+    ), "__s25_assign__")
+    materialize(spark.sql(_SPARK_NORM), "__s25_norms__")
     return spark.sql(_stale_recall_tail_sql("__s25_assign__", "__s25_norms__"))
 
 
@@ -2799,14 +2779,12 @@ def _dims_sql(spark_dialect: bool) -> str:
 
 
 def _cached_dims(spark: SparkSession) -> None:
-    """Materialize the e6 dims lattice ONCE per query (localCheckpoint,
-    eager): the s26/s27 CTE chains reference dims 6-8 times and Spark
+    """Materialize the e6 dims lattice ONCE per query: the s26/s27
+    CTE chains reference dims 6-8 times and Spark
     inlines CTEs, so without this every reference re-runs the scan +
     explode. At cluster scale this is the persisted feature lattice a
     clustering pipeline stages before Lloyd iterations."""
-    spark.sql(_dims_sql(True)).localCheckpoint(eager=True).createOrReplaceTempView(
-        "__km_dims__"
-    )
+    materialize(spark.sql(_dims_sql(True)), "__km_dims__")
 
 
 _CH_ASSIGN = """
@@ -2881,14 +2859,14 @@ def s26(spark: SparkSession, sf_dir: str) -> DataFrame:
     first Lloyd scoring chain twice (`c1` feeds both a2 and between_c)
     and the whole a2 chain twice more (`per_cluster` feeds both the
     report and tot). Materialize c1 (k x 64 rows) and per_cluster
-    (k rows) once with eager localCheckpoints; every stage replays the
+    (k rows) once; every stage replays the
     verbatim CTE expressions (the shared _CH_ASSIGN template) over the
     views. Oracle replays the one-string CTE form."""
     intdiv = "div"
     load_tables(spark, sf_dir)
     cached_embeddings(spark)
     _cached_dims(spark)
-    spark.sql(f"""
+    materialize(spark.sql(f"""
     WITH dims AS (SELECT * FROM __km_dims__),
     c0 AS (SELECT vec_id AS c, d, q FROM dims WHERE vec_id < {_KM_K}),
     a1 AS ({_CH_ASSIGN.format(cent="c0")}),
@@ -2900,8 +2878,8 @@ def s26(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY m1.c, dims.d
     )
     SELECT c, d, q FROM c1
-    """).localCheckpoint(eager=True).createOrReplaceTempView("__s26_c1__")
-    spark.sql(f"""
+    """), "__s26_c1__")
+    materialize(spark.sql(f"""
     WITH dims AS (SELECT * FROM __km_dims__),
     c1 AS (SELECT * FROM __s26_c1__),
     a2 AS ({_CH_ASSIGN.format(cent="c1")}),
@@ -2925,7 +2903,7 @@ def s26(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT w.c, w.n_members, w.within_e6,
            CAST(w.n_members * b.cg_e6 AS BIGINT) AS between_e6
     FROM within w JOIN between_c b ON b.c = w.c
-    """).localCheckpoint(eager=True).createOrReplaceTempView("__s26_pc__")
+    """), "__s26_pc__")
     return spark.sql("""
     SELECT p.c AS cluster, p.n_members AS n_members,
            p.within_e6 AS within_e6, p.between_e6 AS between_e6,
@@ -3044,14 +3022,14 @@ def s27(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
     cached_embeddings(spark)
     _cached_dims(spark)
-    spark.sql(f"""
+    materialize(spark.sql(f"""
     WITH dims AS (SELECT * FROM __km_dims__),
     {_ari_run("a", 0, _KM_K)},
     {_ari_run("b", _KM_K, 2 * _KM_K)}
     SELECT a.c AS ca, b.c AS cb, CAST(COUNT(*) AS BIGINT) AS n
     FROM m2a a JOIN m2b b ON b.vec_id = a.vec_id
     GROUP BY a.c, b.c
-    """).localCheckpoint(eager=True).createOrReplaceTempView("__s27_cont__")
+    """), "__s27_cont__")
     return spark.sql("""
     WITH cont AS (SELECT * FROM __s27_cont__),
     rowsums AS (SELECT ca, CAST(SUM(n) AS BIGINT) AS n FROM cont GROUP BY ca),

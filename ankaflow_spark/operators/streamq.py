@@ -17,7 +17,7 @@ from typing import Callable, Dict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import memo, release, scratch
+from ..session import materialize, memo, release, scratch
 from ..sources.parquet import read_parquet
 from ..sqlfront.rewrite import rewrite_sql
 from .tables import load_tables, table_path
@@ -959,15 +959,14 @@ def st13(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     docs = load_tables(spark, sf_dir)["documents"]
-    bench = (
+    bench = materialize(
         grams_of(docs.filter(F.col("doc_id") % DECONTAM_MOD == 0))
-        .select("g").distinct().localCheckpoint()
+        .select("g").distinct()
     )
-    bits = (
+    bits = materialize(
         bench.select(probe("g", 1).alias("b"))
         .union(bench.select(probe("g", 9).alias("b")))
         .distinct()
-        .localCheckpoint()
     )
 
     def screen(batch_df: DataFrame) -> DataFrame:
@@ -2069,8 +2068,7 @@ def m14(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .multimodal import dhash_fingerprints, synth_media_neardup
 
     media = synth_media_neardup(spark, 120)
-    fps = dhash_fingerprints(media).localCheckpoint(eager=True)
-    fps.createOrReplaceTempView("__m14_fps__")
+    materialize(dhash_fingerprints(media), "__m14_fps__")
     return spark.sql("WITH " + _phash_pairs_tail("__m14_fps__", True))
 
 
@@ -2320,9 +2318,8 @@ def _st27_stage(spark: SparkSession) -> tuple:
     # ONE materialization of the two-phase rank: every downstream
     # action (count, 8 chunk writes, calibration) re-executes the full
     # corpus windows without it — the 67s-vs-16s cold/warm gap the
-    # PERF ledger measured (r13 self-review; localCheckpoint per the
-    # shared-relation convention, freed after staging)
-    dis = spark.sql(_md5_disorder_sql("events", "seq")).localCheckpoint()
+    # PERF ledger measured (r13 self-review; freed after staging)
+    dis = materialize(spark.sql(_md5_disorder_sql("events", "seq")))
     n = dis.count()
     per_chunk = -(-n // _ST27_N_CHUNKS)
     import glob as _glob

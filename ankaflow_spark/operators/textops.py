@@ -14,7 +14,7 @@ from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import memo
+from ..session import materialize, memo
 from ..sqlfront.rewrite import rewrite_sql
 from .tables import load_tables, table_path
 
@@ -682,19 +682,17 @@ _T13_SPARK_BIGRAMS = """
 
 def _t13_bigrams(spark: SparkSession, sf_dir: str) -> None:
     """Register the corpus bigram table as ``t13_bigrams``: a session memo
-    keyed by the documents fingerprint, shared by t13 and t26.
-    localCheckpoint, not cache(): the scoring SQL references the bigram
-    table three times (corpus prefix counts, corpus bigram counts,
-    per-doc scoring) and a view over a checkpointed DataFrame reads the
-    computed blocks by construction. At cluster scale this is the
-    persisted bigram table every LM-scoring pipeline writes once and
-    joins repeatedly."""
+    keyed by the documents fingerprint, shared by t13 and t26. The
+    scoring SQL references the bigram table three times (corpus prefix
+    counts, corpus bigram counts, per-doc scoring). At cluster scale
+    this is the persisted bigram table every LM-scoring pipeline writes
+    once and joins repeatedly."""
     load_tables(spark, sf_dir)
     memo(
         spark,
         "t13_bigrams",
         [table_path(sf_dir, "documents")],
-        lambda: spark.sql(_T13_SPARK_BIGRAMS).localCheckpoint(eager=True),
+        lambda: materialize(spark.sql(_T13_SPARK_BIGRAMS)),
     ).createOrReplaceTempView("t13_bigrams")
 
 
@@ -845,13 +843,12 @@ def t15(spark: SparkSession, sf_dir: str) -> DataFrame:
     # production pipeline keeps); docfreq and the scored join both read
     # it, leaving ONE tokenization scan of the corpus.
     load_tables(spark, sf_dir)
-    tf = spark.sql("""
+    materialize(spark.sql("""
       SELECT doc_id, term, COUNT(*) AS tf
       FROM (SELECT doc_id, explode(split(lower(text), ' ')) AS term FROM documents) raw
       WHERE term <> ''
       GROUP BY doc_id, term
-    """).localCheckpoint()
-    tf.createOrReplaceTempView("__t15_tf__")
+    """), "__t15_tf__")
     return spark.sql("""
     WITH docfreq AS (
       SELECT term, COUNT(*) AS df FROM __t15_tf__ GROUP BY term
@@ -927,12 +924,11 @@ def t16(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the checkpointed handful of rows.
     load_tables(spark, sf_dir)
     ntok = "size(split(text, ' '))"
-    per_group = spark.sql(f"""
+    materialize(spark.sql(f"""
       SELECT lang, source, COUNT(*) AS n_docs,
              CAST(SUM({ntok}) AS BIGINT) AS n_tokens
       FROM documents GROUP BY lang, source
-    """).localCheckpoint()
-    per_group.createOrReplaceTempView("__t16_domains__")
+    """), "__t16_domains__")
     return spark.sql("""
     WITH tot AS (
       SELECT CAST(SUM(n_tokens) AS BIGINT) AS total_tokens FROM __t16_domains__
@@ -1102,7 +1098,10 @@ def t19(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.split(F.lower(F.col("text")), " ").alias("ws"))
         .filter(F.size("ws") >= W_)
     )
-    inst = (
+    # consumed twice (per-chunk doc counts + the per-doc fold):
+    # without the checkpoint each consumer re-runs the chunk
+    # explode over raw documents TEXT (PERF.md r27)
+    inst = materialize(
         w.select(
             "doc_id",
             "ws",
@@ -1116,10 +1115,6 @@ def t19(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_join(F.slice(F.col("ws"), F.col("i") * W_ + 1, W_), " ")
             ).alias("h"),
         )
-        # consumed twice (per-chunk doc counts + the per-doc fold):
-        # without the checkpoint each consumer re-runs the chunk
-        # explode over raw documents TEXT (PERF.md r27)
-        .localCheckpoint(eager=True)
     )
     cc = inst.groupBy("h").agg(F.countDistinct("doc_id").alias("nd"))
     dup = F.count(F.when(F.col("nd") > 1, F.lit(1)))
@@ -1329,10 +1324,9 @@ def _chunk_rewrite_sql(spark_dialect: bool, inst_rel: str | None = None) -> str:
 @query("t22_chunk_dedup_rewrite", oracle=_chunk_rewrite_sql(False))
 def t22(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    inst = spark.sql(
+    materialize(spark.sql(
         _chunk_rewrite_sql(True, inst_rel="__inst_only__")
-    ).localCheckpoint(eager=True)
-    inst.createOrReplaceTempView("__t22_inst__")
+    ), "__t22_inst__")
     return spark.sql(_chunk_rewrite_sql(True, inst_rel="__t22_inst__"))
 
 
@@ -1390,10 +1384,9 @@ def _woe_sql(bins_rel: str | None = None) -> str:
 @query("t23_woe_binning", oracle=_woe_sql())
 def t23(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    bins = spark.sql(rewrite_sql(_woe_sql(bins_rel="__bins_only__"), {})).localCheckpoint(
-        eager=True
+    materialize(
+        spark.sql(rewrite_sql(_woe_sql(bins_rel="__bins_only__"), {})), "__t23_bins__"
     )
-    bins.createOrReplaceTempView("__t23_bins__")
     return spark.sql(rewrite_sql(_woe_sql(bins_rel="__t23_bins__"), {}))
 
 
@@ -1446,7 +1439,7 @@ def _novelty_sql(spark_dialect: bool) -> str:
         # MIN(doc_id) OVER (PARTITION BY g) — the same window spelling
         # d19's hits step uses — so the gram relation is consumed ONCE
         # (no groupBy(g) + shuffle-join-back on g, no caller-side
-        # localCheckpoint to protect two consumers; guide §2.4 "two
+        # materialize to protect two consumers; guide §2.4 "two
         # operations keyed the same way share one exchange"). The
         # per-doc fold then re-aggregates on doc_id as before.
         return f"""
@@ -1595,7 +1588,7 @@ def t25(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus (t13's materialized bigram table on the Spark side), one
 # groupBy, then the marginals/total are aggregations over `big`
 # itself (vocab^2-bounded, far smaller than the corpus), so no second
-# corpus scan. Spark materializes `big` once (localCheckpoint): the
+# corpus scan. Spark materializes `big` once: the
 # tail references it four times and CTE inlining would re-run the
 # bigram groupBy per reference. Cross-engine: counts are exact
 # BIGINTs, the PMI double is ROUND(...,6) (t13's ln convention), ties
@@ -1651,10 +1644,10 @@ def _pmi_oracle_sql() -> str:
 @query("t26_pmi_collocations", oracle=_pmi_oracle_sql())
 def t26(spark: SparkSession, sf_dir: str) -> DataFrame:
     _t13_bigrams(spark, sf_dir)
-    spark.sql(
+    materialize(spark.sql(
         "SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c2 "
         "FROM t13_bigrams GROUP BY w1, w2"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("t26_big")
+    ), "t26_big")
     return spark.sql(_pmi_tail_sql("t26_big"))
 
 
@@ -1926,10 +1919,9 @@ def _langid_confusion_sql(conf_rel: str | None = None) -> str:
 @query("t30_langid_confusion", oracle=_langid_confusion_sql())
 def t30(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    conf = spark.sql(
+    materialize(spark.sql(
         rewrite_sql(_langid_confusion_sql(conf_rel="__conf_only__"), {})
-    ).localCheckpoint(eager=True)
-    conf.createOrReplaceTempView("__t30_conf__")
+    ), "__t30_conf__")
     return spark.sql(rewrite_sql(_langid_confusion_sql(conf_rel="__t30_conf__"), {}))
 
 
@@ -2018,10 +2010,9 @@ def t31(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     load_tables(spark, sf_dir)
     cached_shingles(spark, sf_dir)
-    src_sh = spark.sql(
+    materialize(spark.sql(
         _source_overlap_sql(True, src_sh_rel="__src_sh_only__")
-    ).localCheckpoint(eager=True)
-    src_sh.createOrReplaceTempView("__t31_src_sh__")
+    ), "__t31_src_sh__")
     return spark.sql(_source_overlap_sql(True, src_sh_rel="__t31_src_sh__"))
 
 
@@ -2099,10 +2090,9 @@ def _temperature_mix_sql(spark_dialect: bool, quant_rel: str | None = None) -> s
 
 def t32(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    quant = spark.sql(
+    materialize(spark.sql(
         _temperature_mix_sql(True, quant_rel="__quant_only__")
-    ).localCheckpoint(eager=True)
-    quant.createOrReplaceTempView("__t32_quant__")
+    ), "__t32_quant__")
     return spark.sql(_temperature_mix_sql(True, quant_rel="__t32_quant__"))
 
 
@@ -2271,10 +2261,9 @@ def _length_ks_sql(per_rel: str | None = None) -> str:
 @query("t34_length_ks_drift", oracle=_length_ks_sql())
 def t34(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    per = spark.sql(
+    materialize(spark.sql(
         rewrite_sql(_length_ks_sql(per_rel="__per_only__"), {})
-    ).localCheckpoint(eager=True)
-    per.createOrReplaceTempView("__t34_per__")
+    ), "__t34_per__")
     return spark.sql(rewrite_sql(_length_ks_sql(per_rel="__t34_per__"), {}))
 
 

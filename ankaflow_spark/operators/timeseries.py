@@ -15,6 +15,7 @@ from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import materialize
 from ..sqlfront.rewrite import rewrite_sql
 from .tables import load_tables
 
@@ -385,13 +386,13 @@ def ts08(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark inlines CTEs, so the naive single-statement spelling executes
     # the minute->hourly chain once per UNION branch — TWO raw scans
     # (plan-audited). The hourly rollup is instead materialized
-    # (localCheckpoint: thousands of rows at any corpus size — this is
-    # the persisted continuous-aggregate table) so the raw stream is
+    # (thousands of rows at any corpus size — this is the persisted
+    # continuous-aggregate table) so the raw stream is
     # scanned exactly once and the day level re-aggregates the hour
     # table, which is the entire point of the cascade.
     load_tables(spark, sf_dir)
     minute_idx = "(unix_micros(ts) div 1000000) div 60"
-    hourly = spark.sql(f"""
+    materialize(spark.sql(f"""
       SELECT min_idx div 60 AS hour_idx, event_type,
              CAST(SUM(n_events) AS BIGINT) AS n_events,
              SUM(sum_value) AS sum_value,
@@ -402,8 +403,7 @@ def ts08(spark: SparkSession, sf_dir: str) -> DataFrame:
                SUM(CAST(value AS DECIMAL(18,6))) AS sum_value
         FROM events GROUP BY 1, 2
       ) minute GROUP BY 1, 2
-    """).localCheckpoint()
-    hourly.createOrReplaceTempView("__ts08_hourly__")
+    """), "__ts08_hourly__")
     return spark.sql("""
     WITH daily AS (
       SELECT hour_idx div 24 AS day_idx, event_type,
@@ -727,27 +727,24 @@ def ts14(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sets pins raw-table work at exactly three DISJOINT type-slice
     # scans (event_type pushes down to the scan, so together they read
     # each row group's type partition once).
-    v = (
+    v = materialize(
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .localCheckpoint(eager=True)
     )
-    c = (
+    c = materialize(
         ev.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter(F.col("ts") > F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .localCheckpoint(eager=True)
     )
-    p = (
+    p = materialize(
         ev.filter(F.col("event_type") == "purchase")
         .join(c, "user_id")
         .filter(F.col("ts") > F.col("t2"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t3"))
-        .localCheckpoint(eager=True)
     )
 
     def _lat(later, earlier):
@@ -1084,7 +1081,9 @@ def ts21(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("prev_wk") == F.col("wk") - F.expr("INTERVAL 7 DAY"), "retained")
         .otherwise("resurrected")
     )
-    weekly = (
+    # |weeks| rows; the churn self-join below consumes it twice — one
+    # events scan total
+    weekly = materialize(
         lagd.withColumn("status", status)
         .groupBy("wk")
         .agg(
@@ -1093,8 +1092,6 @@ def ts21(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("status") == "retained", 1)).alias("n_retained"),
             F.count(F.when(F.col("status") == "resurrected", 1)).alias("n_resurrected"),
         )
-        .localCheckpoint(eager=True)  # |weeks| rows; the churn self-join below
-        # consumes it twice — one events scan total
     )
     prev = weekly.select(
         (F.col("wk") + F.expr("INTERVAL 7 DAY")).alias("wk"),
@@ -1293,7 +1290,7 @@ def _rfm_sql() -> str:
 
 @query("ts22_rfm_segmentation", oracle=_rfm_sql())
 def ts22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark side runs STAGED with two localCheckpoint barriers: Spark
+    """Spark side runs STAGED with two materialize barriers: Spark
     re-expands a CTE per reference, and the inline spelling re-planned
     the raw events scan 22x (events appears once per expansion of the
     per_user/anchor/base chain under cells' four consumers — measured
@@ -1302,12 +1299,10 @@ def ts22(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation (consumed by three histograms + scoring); everything
     downstream scans the materialized |users|-row relations only."""
     load_tables(spark, sf_dir)
-    pu = spark.sql(_rfm_stage1_sql()).localCheckpoint(eager=True)
-    pu.createOrReplaceTempView("__rfm_pu__")
-    cells = spark.sql(
+    materialize(spark.sql(_rfm_stage1_sql()), "__rfm_pu__")
+    materialize(spark.sql(
         "WITH " + _rfm_stage2_ctes(True, "__rfm_pu__") + " SELECT * FROM cells"
-    ).localCheckpoint(eager=True)
-    cells.createOrReplaceTempView("__rfm_cells__")
+    ), "__rfm_cells__")
     return spark.sql("WITH " + _rfm_stage3_sql(True, "__rfm_cells__"))
 
 
@@ -1653,7 +1648,7 @@ def ts29(spark: SparkSession, sf_dir: str) -> DataFrame:
 # combinable groupBy); both medians are aggregates over THAT bounded
 # relation, never the corpus — the per-type daily series is what a
 # production monitor persists anyway. Spark materializes the daily
-# relation once (localCheckpoint): the chain references it three times
+# relation once: the chain references it three times
 # and CTE inlining would re-run the corpus groupBy per reference.
 # Exactness: daily counts are exact BIGINTs; median over integers is
 # the same (a+b)/2 interpolation in both engines (exactly
@@ -1701,9 +1696,7 @@ _MAD_DAILY_SQL = """
 )
 def ts30(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    spark.sql(_MAD_DAILY_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "__ts30_daily__"
-    )
+    materialize(spark.sql(_MAD_DAILY_SQL), "__ts30_daily__")
     return spark.sql(_mad_tail_sql("__ts30_daily__"))
 
 
@@ -1758,9 +1751,7 @@ def _cusum_tail_sql(daily: str) -> str:
 )
 def ts31(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    spark.sql(_MAD_DAILY_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "__ts31_daily__"
-    )
+    materialize(spark.sql(_MAD_DAILY_SQL), "__ts31_daily__")
     return spark.sql(_cusum_tail_sql("__ts31_daily__"))
 
 
@@ -1848,9 +1839,9 @@ _FUNNEL32_SQL = _funnel_sql()
 
 @query("ts32_funnel_conversion", oracle=_FUNNEL32_SQL)
 def ts32(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Spark side materializes each per-user step table once
-    # (localCheckpoint): the counts CTE references every step relation
-    # a second time, and uncorrelated scalar subqueries re-execute
+    # Spark side materializes each per-user step table once: the
+    # counts CTE references every step relation a second time, and
+    # uncorrelated scalar subqueries re-execute
     # their whole input plan — without this the corpus is scanned
     # ~12x (s3's count re-runs s2 which re-runs s1). The DuckDB oracle
     # runs the identical SQL as plain CTEs (it materializes CTEs
@@ -1870,9 +1861,7 @@ def ts32(spark: SparkSession, sf_dir: str) -> DataFrame:
             WHERE e.event_type = '{step}' AND e.ts > p.t{i - 1}
             GROUP BY e.user_id
             """
-        spark.sql(sql).localCheckpoint(eager=True).createOrReplaceTempView(
-            f"__ts32_s{i}__"
-        )
+        materialize(spark.sql(sql), f"__ts32_s{i}__")
         prev = f"__ts32_s{i}__"
     spark.sql("""
     SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM __ts32_s1__) AS n1,
@@ -1935,9 +1924,7 @@ def _dow_tail_sql(daily: str) -> str:
 )
 def ts33(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    spark.sql(_MAD_DAILY_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "__ts33_daily__"
-    )
+    materialize(spark.sql(_MAD_DAILY_SQL), "__ts33_daily__")
     return spark.sql(rewrite_sql(_dow_tail_sql("__ts33_daily__"), {}))
 
 
@@ -1990,8 +1977,7 @@ def _repeat_tail_sql(gaps: str) -> str:
 )
 def ts34(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    gaps = spark.sql(rewrite_sql(_repeat_gap_sql(), {})).localCheckpoint(eager=True)
-    gaps.createOrReplaceTempView("__ts34_gaps__")
+    materialize(spark.sql(rewrite_sql(_repeat_gap_sql(), {})), "__ts34_gaps__")
     return spark.sql(_repeat_tail_sql("__ts34_gaps__"))
 
 
@@ -2107,9 +2093,7 @@ def _backtest_tail_sql(daily: str) -> str:
 )
 def ts36(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    spark.sql(_MAD_DAILY_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "__ts36_daily__"
-    )
+    materialize(spark.sql(_MAD_DAILY_SQL), "__ts36_daily__")
     return spark.sql(_backtest_tail_sql("__ts36_daily__"))
 
 
@@ -2224,8 +2208,9 @@ def ts37(spark: SparkSession, sf_dir: str) -> DataFrame:
     the duration spine, the cumulative walk), and each reference
     would re-run the sessionizer over raw events (PERF.md r27)."""
     load_tables(spark, sf_dir)
-    per = spark.sql(rewrite_sql(_survival_sessions_sql(), {})).localCheckpoint(eager=True)
-    per.createOrReplaceTempView("__ts37_sessions__")
+    materialize(
+        spark.sql(rewrite_sql(_survival_sessions_sql(), {})), "__ts37_sessions__"
+    )
     return spark.sql(_survival_tail_sql("__ts37_sessions__"))
 
 
@@ -2546,10 +2531,9 @@ def _concurrency_sql(spark_dialect: bool, clipped_rel: str | None = None) -> str
 @query("ts40_peak_concurrency", oracle=_concurrency_sql(False))
 def ts40(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    clipped = spark.sql(
+    materialize(spark.sql(
         _concurrency_sql(True, clipped_rel="__clipped_only__")
-    ).localCheckpoint(eager=True)
-    clipped.createOrReplaceTempView("__ts40_clipped__")
+    ), "__ts40_clipped__")
     return spark.sql(_concurrency_sql(True, clipped_rel="__ts40_clipped__"))
 
 
@@ -2606,9 +2590,7 @@ def _burstiness_tail_sql(daily: str) -> str:
 )
 def ts41(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    spark.sql(_MAD_DAILY_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "__ts41_daily__"
-    )
+    materialize(spark.sql(_MAD_DAILY_SQL), "__ts41_daily__")
     return spark.sql(_burstiness_tail_sql("__ts41_daily__"))
 
 
@@ -2756,10 +2738,9 @@ def _cooccurrence_sql(table: str = "events", baskets_rel: str | None = None) -> 
 def cooccurrence_staged(spark: SparkSession, table: str = "events") -> DataFrame:
     """Run the co-occurrence report with the session-basket relation
     checkpointed (shared by ts43 and the YAML stage op)."""
-    baskets = spark.sql(
+    materialize(spark.sql(
         rewrite_sql(_cooccurrence_sql(table=table, baskets_rel="__baskets_only__"), {})
-    ).localCheckpoint(eager=True)
-    baskets.createOrReplaceTempView("__ts43_baskets__")
+    ), "__ts43_baskets__")
     return spark.sql(
         rewrite_sql(_cooccurrence_sql(table=table, baskets_rel="__ts43_baskets__"), {})
     )
@@ -2925,10 +2906,9 @@ def _daily_acf_sql(
 @query("ts45_daily_acf", oracle=_daily_acf_sql(False))
 def ts45(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    daily = spark.sql(
+    materialize(spark.sql(
         _daily_acf_sql(True, daily_rel="__daily_only__")
-    ).localCheckpoint(eager=True)
-    daily.createOrReplaceTempView("__ts45_daily__")
+    ), "__ts45_daily__")
     return spark.sql(_daily_acf_sql(True, daily_rel="__ts45_daily__"))
 
 

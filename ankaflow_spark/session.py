@@ -16,7 +16,10 @@ Responsibilities:
 * Own every piece of state that outlives one query: a per-session memo
   of shared relations keyed by input fingerprint, and one per-process
   scratch root for staged copies, state dirs and round-trip files
-  (``memo`` / ``scratch`` below).
+  (``memo`` / ``scratch`` below). Every local checkpoint is taken by
+  ``materialize``; the known stores outside it are the cached taps of
+  ``SparkEngine.register(materialize=True)`` and
+  ``similarity.cached_embeddings``.
 
 Scale notes (100 TB design): the session defaults below are *local-mode*
 test values; on a real cluster the same builder honors
@@ -254,8 +257,36 @@ def reset_derived(spark: SparkSession) -> None:
         del entries[key]
 
 
+def materialize(df: DataFrame, view: Optional[str] = None) -> DataFrame:
+    """Compute ``df`` now and return it as a DataFrame over the stored
+    rows, registered as the temp view ``view`` when one is given. Every
+    local checkpoint the engine takes is taken here.
+
+    * A local checkpoint, not ``cache()``: a view over the result
+      resolves to a ``LogicalRDD``, so every reference (both sides of a
+      self-join, later queries) reads the stored blocks by construction.
+      ``cache()`` relies on CacheManager plan matching, which was seen
+      to miss after ``load_tables`` re-registers the source views, and
+      the whole input plan then ran again per reference.
+    * It cuts lineage but keeps the origin plan's estimated statistics
+      (PERF.md r4). A loop that feeds its output back in must rebuild
+      the DataFrame from its RDD to reset them (``connected_components``).
+    * The blocks live on the executors that computed them and die with
+      them: a job that reads a lost block fails instead of recomputing it.
+
+    ``release`` frees the blocks once nothing reads them again.
+
+    ``SparkEngine.register(materialize=True)`` is a separate policy for
+    flow taps (``cache()`` plus a ``noop`` fill): moving taps onto
+    checkpoints would change the plan statistics every flow sees."""
+    out = df.localCheckpoint()
+    if view is not None:
+        out.createOrReplaceTempView(view)
+    return out
+
+
 def release(checkpointed: DataFrame) -> None:
-    """Free the blocks of a DataFrame made by ``localCheckpoint``, once
+    """Free the blocks of a DataFrame made by ``materialize``, once
     nothing will read it again. ``df.rdd.unpersist()`` frees nothing:
     ``df.rdd`` builds a new Python RDD over the plan, while the blocks
     belong to the checkpointed RDD under the plan's ``LogicalRDD``."""

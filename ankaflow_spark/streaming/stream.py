@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..session import scoped_conf
+from ..session import materialize, scoped_conf
 from ..sources.parquet import read_parquet
 
 #: the two state store providers Spark ships. The default
@@ -457,7 +457,7 @@ def _drive(
     layouts: ``_fold`` rewrites a set of state tables every batch,
     ``_append`` writes each batch's output to ``<state_base>_out/batch=N``.
 
-    Result contract: the result is PINNED (eager ``localCheckpoint``):
+    Result contract: the result is PINNED (``session.materialize``):
     a later call with the same ``state_base`` rmtree's these dirs, which
     would silently break a still-held lazy reader of them.
 
@@ -500,7 +500,7 @@ def _drive(
     _drain(spark, writer, feeds, progress_out)
     if not ran:
         batch_fn(spark.createDataFrame([], stream_df.schema), 0)
-    return read_back(spark).localCheckpoint(eager=True)
+    return materialize(read_back(spark))
 
 
 def _fold(

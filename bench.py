@@ -26,9 +26,6 @@ pipeline time, so value stays trajectory-comparable across rounds.
 
 Each query executes its full plan through the noop sink (no driver
 collect, no disk write) — the honest distributed-execution cost.
-
-Per-query running totals in the HEADLINE comments drifted (r7 advice);
-the authoritative per-addition ledger lives in PERF.md.
 """
 
 from __future__ import annotations
@@ -59,65 +56,37 @@ HEADLINE = [
     "t01_token_stats",
     "t03_quality_score",
     "t04_winnow_fingerprint",
-    # round-4 continuation additions (trajectory comparisons should use
-    # the per-query dict; per-addition totals ledger: PERF.md)
     "ts08_rollup_cascade",
     "t15_tfidf_topterms",
-    # round-6 additions: the new
-    # data-pipeline cores — two-pass heavy hitters, hashed classifier
-    # inference, chunk dedup with reconstruction
     "q52_heavy_hitters",
     "t21_quality_classifier",
     "t22_chunk_dedup_rewrite",
-    # round-7 additions: the ASOF SQL
-    # surface, the day-grain interval-join expansion, SCD2 history,
-    # skew diagnostics, one-pass profiling, WOE binning
     "ts25_asof_sql_surface",
     "ts26_interval_join",
     "ts27_scd2_history",
     "q59_skew_diagnostics",
     "q60_column_profile",
     "t23_woe_binning",
-    # round-8 additions: substring-level
-    # dedup + rewrite (shared caches are cleared between passes, so in
-    # EVERY pass d19 pays the cold __spans__ build and d20 consumes it
-    # warm — same accounting as d02/d03 with __cands__),
-    # bloom-prefiltered decontamination, simplified silhouette
     "d19_substring_dedup",
     "d20_substring_dedup_rewrite",
     "d21_bloom_decontam",
     "s17_silhouette_eval",
-    # round-9 additions: count-min
-    # sketch, MMR diversified re-rank, z-order layout, n-gram novelty
     "s15_countmin_heavy_hitters",
     "s18_mmr_diverse_topk",
     "q63_zorder_layout",
     "t24_ngram_novelty",
-    # round-10 additions: PMI
-    # collocations, Markov transitions, l-diversity, triangle
-    # counting, the data-quality audit
     "t26_pmi_collocations",
     "ts29_markov_transitions",
     "q69_l_diversity",
     "d22_triangle_count",
     "q70_data_quality_audit",
-    # round-11 additions: funnel
-    # conversion, DOW seasonality, t-closeness, Gopher rules, and the
-    # MAD/CUSUM drift monitors
     "ts32_funnel_conversion",
     "ts33_dow_seasonality",
     "q72_t_closeness",
     "t27_gopher_rules",
     "ts30_mad_outliers",
-    # round-12 additions: the LSH
-    # calibration sweep and PSI drift monitor
     "d24_lsh_threshold_sweep",
     "q73_psi_drift",
-    # round-13 additions: the session-6/7
-    # corpus-health wave — repeat-gap and streak histograms, embedding
-    # collapse stats, tokenizer fertility, lang-ID confusion, the
-    # cross-table RI audit, and the IVF probe sweep (whose wall
-    # includes its own training + assignment materialization)
     "ts34_repeat_purchase_gaps",
     "ts35_activity_streaks",
     "s19_embedding_stats",
@@ -127,122 +96,60 @@ HEADLINE = [
     "s20_ivf_probe_sweep",
     "ts36_forecast_backtest",
     "s21_sq_bits_sweep",
-    # round-14 additions: the dedup
-    # survivorship-bias audit and the small-cell suppression release
     "d25_dedup_bias_audit",
     "q75_cell_suppression",
-    # round-15 additions: the session-8
-    # wave — session-duration survival, the decayed leaderboard,
-    # incremental-MV merge audit, b-bit minhash study (rides the
-    # shared __cands__/__shingles__ relations), kNN hubness, and the
-    # cross-source containment matrix
     "ts37_survival_curve",
     "ts38_decayed_leaderboard",
     "q76_mv_maintenance",
     "d26_bbit_minhash",
     "s23_hubness_audit",
     "t31_source_overlap",
-    # round-15 continuation: the
-    # compaction planner, the temperature sampling mix, and linear
-    # multi-touch attribution
     "q77_partition_planner",
     "t32_temperature_mix",
     "ts39_linear_attribution",
     "s24_lsh_plane_sweep",
-    # round-16 additions: the near-dup
-    # transitivity audit and per-day peak session concurrency
     "d27_transitivity_audit",
     "ts40_peak_concurrency",
-    # round-16 continuation: the ANN
-    # index-freshness audit (stale-quantizer routing + cohort recall)
     "s25_stale_index_recall",
     "t33_pii_audit",
     "ts41_burstiness",
-    # round-8 wave (driver round 8): stickiness, freshness SLA, the
-    # multimodal shard plan, KS length drift, CH cluster validity
-    # (s26's wall includes its own Lloyd-round training, s20's
-    # accounting class)
     "ts42_stickiness",
     "q78_ingest_freshness",
     "m12_shard_planner",
     "t34_length_ks_drift",
     "s26_calinski_harabasz",
-    # round-8 wave 2: the lex-vs-sem calibration table (rides the
-    # shared __cands__ like d03), ARI seed stability (two Lloyd
-    # rounds, s26's accounting class), and the erasure blast radius
     "d28_lexical_semantic_agreement",
     "s27_clustering_stability",
     "q79_erasure_cascade",
     "ts43_session_cooccurrence",
     "q80_join_fanout_audit",
-    # round-9 (driver round 9): d28's production-bounded spelling
-    # (capped per-doc verify — rides the shared __cands__ like d28)
-    # and the embedding centroid-drift monitor
     "d29_agreement_bounded",
     "s28_centroid_drift",
-    # round-9 wave 2: TTL purge planner, calendar-baseline anomaly,
-    # multimodal ingest validation (mapInPandas kernel)
     "q81_retention_ttl_audit",
     "ts44_seasonal_anomaly",
     "m13_corrupt_asset_audit",
-    # round-9 wave 3: daily-series rhythm strength
     "ts45_daily_acf",
-    # round-10 (driver round 10): the LSH degeneracy pre-flight audits
-    # (d30 rides the shared __bands__ like d02; t35 rides __shingles__)
-    # and the hyperplane occupancy/imbalance report
     "d30_band_occupancy_audit",
     "t35_boilerplate_shingles",
     "s29_ann_bucket_balance",
-    # round-10 wave 2: dHash banded Hamming near-dup over media bytes
-    # (mapInPandas fingerprint kernel + the d02 join shape) and the
-    # streamed m13 gate (per-record verdicts, no cross-batch state)
     "m14_phash_neardup",
     "st26_stream_asset_validation",
-    # round-10 wave 3: watermark calibration, activity drawdown, the
-    # dedup-aware token budget
     "q82_late_arrival_audit",
     "ts46_max_drawdown",
     "t36_token_budget",
-    # round-11: bucketed co-located join — charges its own layout
-    # build every run (honest accounting), then joins shuffle-free —
-    # and the q82-calibrated watermark drop accounting (real stream,
-    # full value oracle)
     "q83_bucketed_colocated_join",
     "q84_bucketed_colocated_agg",
-    # round-11 wave 2: the scan-side layout levers — static partition
-    # pruning and DPP over the day-partitioned fact (layout charged
-    # per run, same honest accounting)
     "q85_partition_pruned_scan",
     "q86_dynamic_partition_pruning",
-    # round-11 wave 3: both levers in ONE table — day partitions +
-    # user buckets (DPP + shuffle-free per-user rollup)
     "q87_layered_fact_layout",
     "st27_stream_watermark_drops",
-    # round-12: the layout lever applied to the dedup family — the
-    # bucketed band-index probe charges its own index build every run
-    # (honest accounting) and shuffles only the batch side — and the
-    # AQE skew-join demonstration (executes its hot-key join
-    # internally, q85/st27's self-charging contract)
     "d33_bucketed_band_probe",
     "q88_aqe_skew_join",
-    # round-12 wave 2: the bucket-pruned point lookup (1-of-16 file
-    # listing + zero-exchange rollup on the shared q83 layout) and the
-    # streaming band-index probe (4 real micro-batches against the
-    # persisted corpus index, index build charged per run)
     "q89_bucket_pruned_lookup",
     "st28_stream_band_probe",
-    # round-12 wave 3: index maintenance (bucketed APPEND + day-2
-    # probe over the merged table) and the AQE coalesce lever (runs
-    # its rollup internally under an oversized 512-partition setting)
     "d34_band_index_merge",
     "q90_aqe_coalesced_rollup",
-    # round-13: the runtime Bloom-filter join-pruning lever (executes
-    # its nation-supplier join internally under the squeezed scan-size
-    # threshold, q88's self-charging contract)
     "q91_runtime_bloom_join",
-    # round-13 wave 2: the SHJ strategy lever (same self-charging
-    # contract) and the RocksDB-provider graded stream (a full real
-    # sessionizer replay, st22's accounting class)
     "q92_shuffled_hash_join",
     "st29_rocksdb_survival",
 ]

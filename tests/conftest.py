@@ -18,9 +18,15 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
-    from ankaflow_spark.session import get_spark
+    from ankaflow_spark.session import get_spark, scratch_root
 
-    spark = get_spark("tests")
+    # Catalog tables (write_bucketed) go under this process's scratch
+    # root, not the cwd ``spark-warehouse/`` that every run from this
+    # checkout shares: tools/oracle_check.py may run alongside.
+    spark = get_spark(
+        "tests",
+        extra_conf={"spark.sql.warehouse.dir": os.path.join(scratch_root(), "warehouse")},
+    )
     yield spark
 
 

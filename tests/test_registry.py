@@ -345,3 +345,73 @@ def test_parquet_is_read_only_through_the_footer_helper():
                 offenders.append(f"{path}:{line} parquet read in {func}")
     assert not offenders, offenders
     assert in_helper == 1
+
+
+def test_checkpoints_are_taken_only_by_materialize():
+    """Every local checkpoint the engine takes goes through
+    ``session.materialize``, which owns that storage policy and its
+    reasons: no other engine function calls ``.localCheckpoint(``."""
+    helper = (os.path.join(REPO, "ankaflow_spark", "session.py"), "materialize")
+    offenders, in_helper = [], 0
+    for path, tree in _engine_modules(with_session=True):
+        for func, line in _calls_by_function(tree, "localCheckpoint"):
+            if (path, func) == helper:
+                in_helper += 1
+            else:
+                offenders.append(f"{path}:{line} .localCheckpoint in {func}")
+    assert not offenders, offenders
+    assert in_helper == 1
+
+
+def test_materialize_outlives_its_source_and_release_frees_it(spark, tmp_path):
+    """A materialized view reads the stored rows, not its input: it still
+    answers after the parquet file it was read from is deleted. ``release``
+    on the returned DataFrame frees its blocks."""
+    from ankaflow_spark.session import materialize, release
+
+    src = tmp_path / "probe.parquet"
+    pd.DataFrame({"k": [1, 2, 3]}).to_parquet(src, index=False)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    out = materialize(spark.read.parquet(str(src)), "__probe_materialized__")
+    assert persistent().size() == before + 1
+    src.unlink()
+    rows = spark.table("__probe_materialized__").collect()
+    assert sorted(r["k"] for r in rows) == [1, 2, 3]
+    release(out)
+    assert persistent().size() == before
+    spark.catalog.dropTempView("__probe_materialized__")
+
+
+def test_catalog_tables_live_under_the_scratch_root(engine):
+    """The test session (tests/conftest.py, like tools/oracle_check.py)
+    puts its catalog warehouse under ``scratch_root()``, so
+    ``write_bucketed`` tables of two runs from one checkout never share
+    (and delete) each other's files; nothing lands in the cwd
+    ``spark-warehouse/``. The library default stays Spark's, so a flow's
+    bucketed sink tables outlive the process."""
+    from ankaflow_spark.session import scratch_root
+
+    spark = engine.spark
+    cwd_warehouse = os.path.join(os.getcwd(), "spark-warehouse")
+
+    def cwd_tables():
+        return set(os.listdir(cwd_warehouse)) if os.path.isdir(cwd_warehouse) else set()
+
+    before = cwd_tables()
+    try:
+        engine.write_bucketed(
+            spark.range(10).withColumnRenamed("id", "k"), "probe_wh_b", "k", n_buckets=2
+        )
+        location = [
+            r["data_type"]
+            for r in spark.sql("DESCRIBE TABLE EXTENDED probe_wh_b").collect()
+            if r["col_name"] == "Location"
+        ]
+        assert len(location) == 1
+        path = location[0].removeprefix("file:")
+        assert os.path.realpath(path).startswith(os.path.realpath(scratch_root()) + os.sep), path
+        assert spark.table("probe_wh_b").count() == 10
+    finally:
+        spark.sql("DROP TABLE IF EXISTS probe_wh_b")
+    assert cwd_tables() == before

@@ -175,9 +175,14 @@ def main():
     names = argv[1:] if argv and os.path.isdir(argv[0]) else argv
 
     import __spark_entry__ as entrymod
-    from ankaflow_spark.session import get_spark
+    from ankaflow_spark.session import get_spark, scratch_root
 
-    spark = get_spark("oracle_check")
+    # Own catalog warehouse (write_bucketed tables) under the scratch
+    # root, so a pytest run from the same checkout never shares its files.
+    spark = get_spark(
+        "oracle_check",
+        extra_conf={"spark.sql.warehouse.dir": os.path.join(scratch_root(), "warehouse")},
+    )
     con = duckdb.connect()
     for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
